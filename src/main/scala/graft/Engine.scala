@@ -173,52 +173,6 @@ object Engine {
   def resetDataCaches(): Unit =
     dataCacheResets.forEach(r => r())
 
-  /** Deferred checkpoint disposal (round 10, hardened round 11): a query
-    * that materializes a shared intermediate registers it here instead of
-    * eagerly checkpointing its FINAL result just to be able to free — the
-    * returned plan then keeps its real downstream operators visible (and
-    * the result is materialized once, by the caller, not twice).
-    *
-    * CONTRACT (spec): a frame registered during the construction of query
-    * Q remains valid until TWO further query constructions have happened
-    * ([[SparkEntry.queries]]' wrapper calls [[drainDeferredFrees]] once
-    * per construction). Q's caller must therefore materialize Q's frame
-    * before constructing two more queries. Sequential bench/verify/test
-    * loops (construct -> materialize -> construct ...) satisfy this with a
-    * full query of slack; a consumer that interleaves ONE extra
-    * construction before acting (compose two queries, then run both) is
-    * now safe too — that was the round-10 hazard: the old queue freed at
-    * the very next construction, so `construct A; construct B; run A`
-    * unpersisted a lineage-truncated localCheckpoint A still needed
-    * (unrecoverable by design). The two-generation lag bounds pending
-    * memory at two queries' intermediates; a constructed-but-never-run
-    * query's intermediates are reclaimed two constructions later.
-    */
-  private val pendingFrees =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Long, org.apache.spark.sql.DataFrame)]
-  private val constructionGen = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def freeLater(df: org.apache.spark.sql.DataFrame): Unit =
-    pendingFrees.add((constructionGen.get(), df))
-
-  def drainDeferredFrees(): Unit = {
-    val gen = constructionGen.incrementAndGet()
-    // free only frames registered at least two constructions ago (see
-    // contract above); the queue is FIFO in generation, so stop at the
-    // first still-young entry
-    var head = pendingFrees.peek()
-    while (head != null && head._1 <= gen - 2) {
-      val polled = pendingFrees.poll()
-      // another drainer may have raced us past the peeked entry; poll()
-      // result is authoritative
-      if (polled != null) {
-        if (polled._1 <= gen - 2) freeCheckpoint(polled._2)
-        else pendingFrees.add(polled)
-      }
-      head = pendingFrees.peek()
-    }
-  }
-
   /** Unpersist the materialized RDD behind a `localCheckpoint()`ed frame.
     * Iterative loops (connected components, Lloyd's iterations) checkpoint
     * every round; without this the superseded rounds' blocks sit in
@@ -227,6 +181,10 @@ object Engine {
     * built by a previous test session frees a frame whose SparkContext is
     * gone — `unpersist` throws there, and the blocks died with the
     * context anyway, so the free is a no-op by definition).
+    *
+    * A query's own intermediates are not freed here: the returned plan
+    * still reads them, and Spark's ContextCleaner unpersists each one once
+    * that plan becomes unreachable.
     */
   def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
@@ -236,8 +194,12 @@ object Engine {
       case _ => ()
     }
 
-  /** Build a local session (tests / standalone runs). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** The one session builder: every main and the test suites build their
+    * session here, then set their own log level. `cores` sizes both the
+    * local master and the shuffle width; it defaults to $SPARK_GRAFT_CPUS,
+    * falling back to the machine's processor count.
+    */
+  def local(cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -249,4 +211,9 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
+
+  /** Configured parallelism: $SPARK_GRAFT_CPUS, else the processor count. */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
 }

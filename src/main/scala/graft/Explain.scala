@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries so
   * pushdown / broadcast / codegen shape can be inspected.
   *
@@ -17,14 +15,8 @@ object Explain {
     else if (args.length > 1) args.drop(1).toSeq else Seq(
       "q1_agg", "q_join_region_revenue", "q_window_topk", "etl_sales_pipeline",
       "q_knn_brute", "q_dedup_minhash", "q_asof_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.local()
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.tune(spark)
     // Explicitly-named queries dump their FULL tree: loopCheckpoint
     // becomes a pass-through so per-query checkpoints don't truncate the
     // visible plan. Not set in ALL mode — iterative operators (kcore,

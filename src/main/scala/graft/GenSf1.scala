@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Genuine sf1 corpus generator (diagnostic main, round 10): the stress
@@ -58,7 +58,8 @@ object GenSf1 {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/root/repo/testdata_sf1")
     val scale = if (args.length > 1) args(1).toInt else 10
-    val spark = Stress.session()
+    val spark = Engine.local()
+    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     val nCust = 15000L * scale

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold/warm profiler for a single registered query: times N repeated
   * executions in one JVM (first = cold: Janino/JIT/footer costs; rest =
   * steady state) and optionally flips session confs between runs, so a
@@ -17,15 +15,7 @@ object Profile {
     val confs = args.drop(2).headOption.toSeq
       .flatMap(_.stripPrefix("conf=").split(",").toSeq)
       .map { kv => val Array(k, v) = kv.split(":", 2); k -> v }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
+    val spark = Engine.local()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // shuffle-volume meter: task-level write bytes summed per run, so a
     // plan change's exchange-volume claim can be MEASURED, not argued

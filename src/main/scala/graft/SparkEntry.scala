@@ -27,21 +27,15 @@ object SparkEntry {
     Relational.qJoinRegionRevenue(Tables(spark, "/root/testdata/sf0.001"))
 
   private def q(f: Tables => DataFrame): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      // free deferred per-query checkpoints registered at least TWO
-      // constructions ago (Engine.freeLater contract): a query's caller
-      // has a full extra construction of slack to materialize its frame
-      // before the frame's inputs are unpersisted
-      Engine.drainDeferredFrees()
-      f(Tables(spark, dir))
-    }
+    (spark, dir) => f(Tables(spark, dir))
 
   /** Reference pipeline end-to-end: runs the six deterministic generator
     * sources through clean/transform/coerce/load into a temp warehouse and
     * returns the health table (deterministic columns only). No SQL oracle —
     * generators exist only in this engine (rows-only check).
     */
-  private def pipelineHealth(spark: SparkSession, dir: String): DataFrame = {
+  private def pipelineHealth(t: Tables): DataFrame = {
+    val spark = t.spark
     val tmp = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val wh = Warehouse(spark, tmp)
     val run = new Orchestrator(spark, wh).runPipeline("verify_run", parallel = true)
@@ -58,7 +52,7 @@ object SparkEntry {
     "etl_sales_pipeline" -> q(Relational.etlSalesPipeline),
     "etl_churn_binning" -> q(Relational.etlChurnBinning),
     "etl_finance_netflow" -> q(Relational.etlFinanceNetflow),
-    "pipeline_health" -> (pipelineHealth(_, _)),
+    "pipeline_health" -> q(pipelineHealth),
     // — relational surface —
     "q1_agg" -> q(Relational.q1Agg),
     "q_join_region_revenue" -> q(Relational.qJoinRegionRevenue),
@@ -97,36 +91,29 @@ object SparkEntry {
     "q_window_shares" -> q(Analytics.qWindowShares),
     "q_profile_columns" -> q(Analytics.qProfileColumns),
     "q_gap_fill" -> q(Analytics.qGapFill),
-    "q_bloom_prefilter" -> ((spark, dir) =>
-      Analytics.qBloomPrefilter(spark, Tables(spark, dir))),
-    "q_sql_q5" -> ((spark, dir) => Analytics.qSqlQ5(spark, Tables(spark, dir))),
-    "q_sql_q1" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q1)),
-    "q_sql_q3" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q3)),
-    "q_sql_q4" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q4)),
-    "q_sql_q7" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q7)),
-    "q_sql_q8" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q8)),
-    "q_sql_q12" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q12)),
-    "q_sql_q13" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q13)),
-    "q_sql_q15" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q15)),
-    "q_sql_q17" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q17)),
-    "q_sql_q21" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q21)),
-    "q_sql_q2" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q2)),
-    "q_sql_q9" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q9)),
-    "q_sql_q11" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q11)),
-    "q_sql_q16" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q16)),
-    "q_sql_q20" -> ((spark, dir) => TpchSql.run(spark, Tables(spark, dir), TpchSql.q20)),
-    "q_sql_named_window" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.namedWindow)),
-    "q_sql_grouping" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.groupingSets)),
-    "q_sql_setops" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.setops)),
-    "q_sql_recursive" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.recursive)),
-    "q_sql_pivot" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.pivotSpark)),
-    "q_sql_unpivot" -> ((spark, dir) =>
-      TpchSql.run(spark, Tables(spark, dir), TpchSql.unpivotSpark)),
+    "q_bloom_prefilter" -> q(Analytics.qBloomPrefilter),
+    "q_sql_q5" -> q(Analytics.qSqlQ5),
+    "q_sql_q1" -> q(TpchSql.run(_, TpchSql.q1)),
+    "q_sql_q3" -> q(TpchSql.run(_, TpchSql.q3)),
+    "q_sql_q4" -> q(TpchSql.run(_, TpchSql.q4)),
+    "q_sql_q7" -> q(TpchSql.run(_, TpchSql.q7)),
+    "q_sql_q8" -> q(TpchSql.run(_, TpchSql.q8)),
+    "q_sql_q12" -> q(TpchSql.run(_, TpchSql.q12)),
+    "q_sql_q13" -> q(TpchSql.run(_, TpchSql.q13)),
+    "q_sql_q15" -> q(TpchSql.run(_, TpchSql.q15)),
+    "q_sql_q17" -> q(TpchSql.run(_, TpchSql.q17)),
+    "q_sql_q21" -> q(TpchSql.run(_, TpchSql.q21)),
+    "q_sql_q2" -> q(TpchSql.run(_, TpchSql.q2)),
+    "q_sql_q9" -> q(TpchSql.run(_, TpchSql.q9)),
+    "q_sql_q11" -> q(TpchSql.run(_, TpchSql.q11)),
+    "q_sql_q16" -> q(TpchSql.run(_, TpchSql.q16)),
+    "q_sql_q20" -> q(TpchSql.run(_, TpchSql.q20)),
+    "q_sql_named_window" -> q(TpchSql.run(_, TpchSql.namedWindow)),
+    "q_sql_grouping" -> q(TpchSql.run(_, TpchSql.groupingSets)),
+    "q_sql_setops" -> q(TpchSql.run(_, TpchSql.setops)),
+    "q_sql_recursive" -> q(TpchSql.run(_, TpchSql.recursive)),
+    "q_sql_pivot" -> q(TpchSql.run(_, TpchSql.pivotSpark)),
+    "q_sql_unpivot" -> q(TpchSql.run(_, TpchSql.unpivotSpark)),
     "q_moments" -> q(Stats.qMoments),
     "q_dedup_incremental" -> q(Dedup.qDedupIncremental(_)),
     "q_entity_resolution" -> q(Dedup.qEntityResolution(_)),
@@ -185,8 +172,7 @@ object SparkEntry {
     "q_rec_eval" -> q(Analytics.qRecEval(_)),
     "q_ab_power" -> q(Events.qAbPower),
     "q_hard_negatives" -> q(Similarity.qHardNegatives(_)),
-    "q_multimodal_resize" -> ((spark, dir) =>
-      Multimodal.qMultimodalResize(spark, Tables(spark, dir))),
+    "q_multimodal_resize" -> q(Multimodal.qMultimodalResize(_)),
     "q_mlm_mask" -> q(TextAnalysis.qMlmMask),
     "q_surprisal_curve" -> q(TextAnalysis.qSurprisalCurve(_)),
     "q_ltv_curve" -> q(Analytics.qLtvCurve),
@@ -206,8 +192,8 @@ object SparkEntry {
     "q_dup_size_hist" -> q(Dedup.qDupSizeHist(_)),
     "q_node_jaccard" -> q(Graph.qNodeJaccard(_)),
     "q_partial_corr" -> q(Stats.qPartialCorr),
-    "q_stream_srm" -> ((spark, dir) =>
-      graft.streaming.Streams.drainSrm(spark, dir, "events.parquet")),
+    "q_stream_srm" -> q(t =>
+      graft.streaming.Streams.drainSrm(t.spark, t.dir, "events.parquet")),
     "q_mahalanobis" -> q(Stats.qMahalanobis(_)),
     "q_modularity" -> q(Graph.qModularity(_)),
     "q_bfs_hops" -> q(Graph.qBfsHops(_)),
@@ -231,14 +217,13 @@ object SparkEntry {
     "q_moving_avg" -> q(Analytics.qMovingAvg),
     "q_ntile_bins" -> q(Analytics.qNtileBins),
     "q_ewma" -> q(Analytics.qEwma(_)),
-    "q_heavy_hitters" -> ((spark, dir) =>
-      Stats.qHeavyHitters(spark, Tables(spark, dir))),
+    "q_heavy_hitters" -> q(Stats.qHeavyHitters(_)),
     "q_psi_drift" -> q(TextAnalysis.qPsiDrift(_)),
     "q_emd_drift" -> q(TextAnalysis.qEmdDrift(_)),
     "q_rfm_segments" -> q(Analytics.qRfmSegments),
     "q_regression_trend" -> q(Analytics.qRegressionTrend),
     "q_benford" -> q(Analytics.qBenford),
-    "q_sql_q10" -> ((spark, dir) => Analytics.qSqlQ10(spark, Tables(spark, dir))),
+    "q_sql_q10" -> q(Analytics.qSqlQ10),
     "q_zscore_outliers" -> q(Stats.qZscoreOutliers),
     "q_chi2" -> q(Stats.qChi2),
     "q_interval_union" -> q(Events.qIntervalUnion),
@@ -255,11 +240,11 @@ object SparkEntry {
     "q_weighted_median" -> q(Analytics.qWeightedMedian),
     "q_time_weighted_avg" -> q(Analytics.qTimeWeightedAvg),
     "q_cusum" -> q(Analytics.qCusum),
-    "q_sql_q6" -> ((spark, dir) => Analytics.qSqlQ6(spark, Tables(spark, dir))),
-    "q_sql_q18" -> ((spark, dir) => Analytics.qSqlQ18(spark, Tables(spark, dir))),
-    "q_sql_q14" -> ((spark, dir) => Analytics.qSqlQ14(spark, Tables(spark, dir))),
-    "q_sql_q19" -> ((spark, dir) => Analytics.qSqlQ19(spark, Tables(spark, dir))),
-    "q_sql_q22" -> ((spark, dir) => Analytics.qSqlQ22(spark, Tables(spark, dir))),
+    "q_sql_q6" -> q(Analytics.qSqlQ6),
+    "q_sql_q18" -> q(Analytics.qSqlQ18),
+    "q_sql_q14" -> q(Analytics.qSqlQ14),
+    "q_sql_q19" -> q(Analytics.qSqlQ19),
+    "q_sql_q22" -> q(Analytics.qSqlQ22),
     "q_anomaly_iqr" -> q(Stats.qAnomalyIqr),
     "q_winsorize" -> q(Stats.qWinsorize),
     "q_spearman" -> q(Stats.qSpearman),
@@ -382,14 +367,14 @@ object SparkEntry {
     "q_propensity_match" -> q(Stats.qPropensityMatch(_)),
     "q_qini_curve" -> q(Stats.qQiniCurve),
     "q_var_cvar" -> q(Stats.qVarCvar(_)),
-    "q_stream_brier" -> ((spark, dir) =>
-      graft.streaming.Streams.drainBrier(spark, dir, "documents.parquet")),
-    "q_stream_holt" -> ((spark, dir) =>
-      graft.streaming.Streams.drainHoltWinters(spark, dir, "events.parquet")),
-    "q_stream_var_cvar" -> ((spark, dir) =>
-      graft.streaming.Streams.drainVarCvar(spark, dir, "orders.parquet")),
-    "q_stream_mmd" -> ((spark, dir) =>
-      graft.streaming.Streams.drainMmdDrift(spark, dir, "documents.parquet")),
+    "q_stream_brier" -> q(t =>
+      graft.streaming.Streams.drainBrier(t.spark, t.dir, "documents.parquet")),
+    "q_stream_holt" -> q(t =>
+      graft.streaming.Streams.drainHoltWinters(t.spark, t.dir, "events.parquet")),
+    "q_stream_var_cvar" -> q(t =>
+      graft.streaming.Streams.drainVarCvar(t.spark, t.dir, "orders.parquet")),
+    "q_stream_mmd" -> q(t =>
+      graft.streaming.Streams.drainMmdDrift(t.spark, t.dir, "documents.parquet")),
     "q_nb_confusion" -> q(Classifier.qNbConfusion),
     "q_top_terms" -> q(Sampling.qTopTerms(_)),
     "q_train_shards" -> q(Sampling.qTrainShards(_)),
@@ -441,91 +426,91 @@ object SparkEntry {
     // — streaming (an actual AvailableNow streaming execution: file source
     //   -> watermarked windowed state -> sink; graded against the same
     //   oracle as the batch twin q_tumbling_window) —
-    "q_stream_tumbling" -> ((spark, dir) =>
-      graft.streaming.Streams.drainTumblingCounts(spark, dir, "events.parquet")
+    "q_stream_tumbling" -> q(t =>
+      graft.streaming.Streams.drainTumblingCounts(t.spark, t.dir, "events.parquet")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy("window_start", "event_type")),
-    "q_stream_hourly_users" -> ((spark, dir) =>
-      graft.streaming.Streams.drainDistinctUsers(spark, dir, "events.parquet")
+    "q_stream_hourly_users" -> q(t =>
+      graft.streaming.Streams.drainDistinctUsers(t.spark, t.dir, "events.parquet")
         .select(
           date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("n_users"))
         .orderBy("hour")),
-    "q_stream_quality_funnel" -> ((spark, dir) =>
+    "q_stream_quality_funnel" -> q(t =>
       graft.streaming.Streams
-        .drainQualityFunnel(spark, dir, "documents.parquet")
+        .drainQualityFunnel(t.spark, t.dir, "documents.parquet")
         .orderBy("source")),
-    "q_stream_hash_split" -> ((spark, dir) =>
-      graft.streaming.Streams.drainHashSplit(spark, dir, "documents.parquet")),
-    "q_stream_moments" -> ((spark, dir) =>
-      graft.streaming.Streams.drainMoments(spark, dir, "orders.parquet")),
-    "q_stream_dim_stats" -> ((spark, dir) =>
-      graft.streaming.Streams.drainDimStats(spark, dir, "embeddings.parquet")),
-    "q_stream_sliding" -> ((spark, dir) =>
-      graft.streaming.Streams.drainSlidingCounts(spark, dir, "events.parquet")
+    "q_stream_hash_split" -> q(t =>
+      graft.streaming.Streams.drainHashSplit(t.spark, t.dir, "documents.parquet")),
+    "q_stream_moments" -> q(t =>
+      graft.streaming.Streams.drainMoments(t.spark, t.dir, "orders.parquet")),
+    "q_stream_dim_stats" -> q(t =>
+      graft.streaming.Streams.drainDimStats(t.spark, t.dir, "embeddings.parquet")),
+    "q_stream_sliding" -> q(t =>
+      graft.streaming.Streams.drainSlidingCounts(t.spark, t.dir, "events.parquet")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"))
         .orderBy("window_start", "event_type")),
-    "q_stream_dedup" -> ((spark, dir) =>
-      graft.streaming.Streams.drainDistinctUsers(spark, dir, "events.parquet")
+    "q_stream_dedup" -> q(t =>
+      graft.streaming.Streams.drainDistinctUsers(t.spark, t.dir, "events.parquet")
         .select(
           date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("n_users"))
         .orderBy("hour")),
-    "q_stream_upsert" -> ((spark, dir) =>
-      graft.streaming.Streams.drainTumblingToWarehouse(spark, dir, "events.parquet")
+    "q_stream_upsert" -> q(t =>
+      graft.streaming.Streams.drainTumblingToWarehouse(t.spark, t.dir, "events.parquet")
         .orderBy("window_start", "event_type")),
-    "q_stream_sessionize" -> ((spark, dir) =>
-      graft.streaming.Streams.drainSessionize(spark, dir, "events.parquet")
+    "q_stream_sessionize" -> q(t =>
+      graft.streaming.Streams.drainSessionize(t.spark, t.dir, "events.parquet")
         .orderBy("user_id", "session_id")),
-    "q_stream_ratelimit" -> ((spark, dir) =>
-      graft.streaming.Streams.drainRateLimit(spark, dir, "events.parquet")),
-    "q_stream_transitions" -> ((spark, dir) =>
-      graft.streaming.Streams.drainTransitions(spark, dir, "events.parquet")),
-    "q_stream_topterms" -> ((spark, dir) =>
-      graft.streaming.Streams.drainTopTerms(spark, dir, "documents.parquet")),
-    "q_stream_incdedup" -> ((spark, dir) =>
+    "q_stream_ratelimit" -> q(t =>
+      graft.streaming.Streams.drainRateLimit(t.spark, t.dir, "events.parquet")),
+    "q_stream_transitions" -> q(t =>
+      graft.streaming.Streams.drainTransitions(t.spark, t.dir, "events.parquet")),
+    "q_stream_topterms" -> q(t =>
+      graft.streaming.Streams.drainTopTerms(t.spark, t.dir, "documents.parquet")),
+    "q_stream_incdedup" -> q(t =>
       graft.streaming.Streams
-        .drainIncrementalDedup(spark, dir, "documents.parquet")
+        .drainIncrementalDedup(t.spark, t.dir, "documents.parquet")
         .orderBy("id_new", "id_old")),
-    "q_stream_contamination" -> ((spark, dir) =>
+    "q_stream_contamination" -> q(t =>
       graft.streaming.Streams
-        .drainContamination(spark, dir, "documents.parquet")),
-    "q_stream_mix_doremi" -> ((spark, dir) =>
+        .drainContamination(t.spark, t.dir, "documents.parquet")),
+    "q_stream_mix_doremi" -> q(t =>
       graft.streaming.Streams
-        .drainMixDoremi(spark, dir, "documents.parquet")),
-    "q_stream_neardedup" -> ((spark, dir) =>
+        .drainMixDoremi(t.spark, t.dir, "documents.parquet")),
+    "q_stream_neardedup" -> q(t =>
       graft.streaming.Streams
-        .drainSimhashGroups(spark, dir, "documents.parquet")),
-    "q_stream_knn" -> ((spark, dir) =>
-      graft.streaming.Streams.drainKnn(spark, dir, "embeddings.parquet")),
-    "q_stream_semdedup" -> ((spark, dir) =>
-      graft.streaming.Streams.drainSemDedup(spark, dir, "embeddings.parquet")),
-    "q_stream_ivf_ingest" -> ((spark, dir) =>
-      graft.streaming.Streams.drainIvfIngest(spark, dir, "embeddings.parquet")),
-    "q_stream_kanonymity" -> ((spark, dir) =>
-      graft.streaming.Streams.drainKAnonymity(spark, dir, "customer.parquet")),
-    "q_stream_emd" -> ((spark, dir) =>
-      graft.streaming.Streams.drainEmdDrift(spark, dir, "documents.parquet")),
-    "q_stream_slo" -> ((spark, dir) =>
-      graft.streaming.Streams.drainSloBurn(spark, dir, "events.parquet")),
+        .drainSimhashGroups(t.spark, t.dir, "documents.parquet")),
+    "q_stream_knn" -> q(t =>
+      graft.streaming.Streams.drainKnn(t.spark, t.dir, "embeddings.parquet")),
+    "q_stream_semdedup" -> q(t =>
+      graft.streaming.Streams.drainSemDedup(t.spark, t.dir, "embeddings.parquet")),
+    "q_stream_ivf_ingest" -> q(t =>
+      graft.streaming.Streams.drainIvfIngest(t.spark, t.dir, "embeddings.parquet")),
+    "q_stream_kanonymity" -> q(t =>
+      graft.streaming.Streams.drainKAnonymity(t.spark, t.dir, "customer.parquet")),
+    "q_stream_emd" -> q(t =>
+      graft.streaming.Streams.drainEmdDrift(t.spark, t.dir, "documents.parquet")),
+    "q_stream_slo" -> q(t =>
+      graft.streaming.Streams.drainSloBurn(t.spark, t.dir, "events.parquet")),
     "q_dwell_time" -> q(Events.qDwellTime),
-    "q_stream_dwell" -> ((spark, dir) =>
-      graft.streaming.Streams.drainDwellTime(spark, dir, "events.parquet")),
-    "q_stream_burstiness" -> ((spark, dir) =>
-      graft.streaming.Streams.drainBurstiness(spark, dir, "events.parquet")),
-    "q_stream_benford" -> ((spark, dir) =>
-      graft.streaming.Streams.drainBenford(spark, dir, "events.parquet")),
-    "q_stream_enrich" -> ((spark, dir) =>
-      graft.streaming.Streams.drainEnrich(spark, dir, "events.parquet")
+    "q_stream_dwell" -> q(t =>
+      graft.streaming.Streams.drainDwellTime(t.spark, t.dir, "events.parquet")),
+    "q_stream_burstiness" -> q(t =>
+      graft.streaming.Streams.drainBurstiness(t.spark, t.dir, "events.parquet")),
+    "q_stream_benford" -> q(t =>
+      graft.streaming.Streams.drainBenford(t.spark, t.dir, "events.parquet")),
+    "q_stream_enrich" -> q(t =>
+      graft.streaming.Streams.drainEnrich(t.spark, t.dir, "events.parquet")
         .orderBy("segment")),
-    "q_stream_join" -> ((spark, dir) =>
-      graft.streaming.Streams.drainClickViewJoin(spark, dir, "events.parquet")
+    "q_stream_join" -> q(t =>
+      graft.streaming.Streams.drainClickViewJoin(t.spark, t.dir, "events.parquet")
         .select(
           col("click_id"), col("user_id"),
           date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
@@ -538,8 +523,7 @@ object SparkEntry {
     "q_multimodal_meta" -> q(Multimodal.qMultimodalMeta),
     "q_multimodal_dedup" -> q(Multimodal.qMultimodalDedup),
     "q_multimodal_chunks" -> q(Multimodal.qMultimodalChunks(_)),
-    "q_multimodal_frames" -> ((spark, dir) =>
-      Multimodal.qMultimodalFrames(spark, Tables(spark, dir))))
+    "q_multimodal_frames" -> q(Multimodal.qMultimodalFrames))
 
   /** DuckDB oracle SQL per query (omitted => rows-only check):
     * q_knn_lsh ONLY (xxhash64 band signatures; its oracled portable

@@ -74,22 +74,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Stress {
 
-  /** Diagnostic-session builder shared by the stress legs and
-    * [[Profile]]-style tooling.
-    */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Engine.tune(spark)
-    spark
-  }
-
   /** Build (or reuse) a stress corpus at `outDir`: the manifest records
     * (sfDir, factor, variant), and `build` runs only when the manifest is
     * absent or mismatched — so a dir left by a prior run with DIFFERENT
@@ -158,7 +142,8 @@ object Stress {
     require(bad.isEmpty, s"unknown stress modes: $bad")
     val outDir = s"/tmp/graft_stress${factor}x"
     val advDir = s"/tmp/graft_stress_adv${factor}x"
-    val spark = session()
+    val spark = Engine.local()
+    spark.sparkContext.setLogLevel("ERROR")
     // one plain-corpus build serves both the batch and stream legs
     if (modes.exists(m => m == "batch" || m == "stream"))
       ensureCorpus(spark, sfDir, factor, outDir, "plain") {

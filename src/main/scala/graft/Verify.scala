@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,12 @@ object Verify {
     // optional extra args: restrict to the named queries (dev iteration);
     // the driver always calls with exactly (sfDir, outDir) -> full run
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.local()
     // ERROR: per-query WARN noise otherwise buries the [verify] failure
     // lines (which print to stderr directly, not through log4j)
     spark.sparkContext.setLogLevel("ERROR")
-    Engine.tune(spark)
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -28,6 +21,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = s"${e.getClass.getName}: ${e.getMessage}"
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,6 +39,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // every query that threw, name -> "exception class: message"; written
+    // even when empty so a reader can tell "none failed" from "not recorded"
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1239,7 +1239,6 @@ object Dedup {
       .select(col("sa"), col("sb"), col("h"),
         lit(0).as("ia"), lit(1).as("ib"))
     val wPair = Window.partitionBy("sa", "sb").orderBy("h")
-    graft.Engine.freeLater(sigs) // freed at the next query construction
     left.union(right)
       .groupBy("sa", "sb", "h")
       .agg(max("ia").as("ia"), max("ib").as("ib"))

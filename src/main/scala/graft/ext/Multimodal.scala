@@ -159,22 +159,21 @@ object Multimodal {
     * of the media pipeline hash-checks end-to-end even though the
     * "decode" is synthetic.
     */
-  def qMultimodalResize(
-      spark: SparkSession, t: Tables, maxSide: Int = 256): DataFrame = {
+  def qMultimodalResize(t: Tables, maxSide: Int = 256): DataFrame = {
     val payloads = t.documents
       .filter(pmod(col("doc_id"), lit(10)) === 0)
       .withColumn("payload", encode(col("text"), "UTF-8"))
-    resizePlan(extractMeta(spark, payloads), maxSide).orderBy("doc_id")
+    resizePlan(extractMeta(t.spark, payloads), maxSide).orderBy("doc_id")
   }
 
   /** Full multimodal pipeline as a registered (rows-only) query: payload ->
     * batched stub decode -> frame sampling, emitting (doc, frame) grain.
     */
-  def qMultimodalFrames(spark: org.apache.spark.sql.SparkSession, t: Tables): DataFrame = {
+  def qMultimodalFrames(t: Tables): DataFrame = {
     val payloads = t.documents
       .filter(pmod(col("doc_id"), lit(10)) === 0)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-    sampleFrames(extractMeta(spark, payloads))
+    sampleFrames(extractMeta(t.spark, payloads))
       .orderBy("doc_id", "frame_id")
   }
 

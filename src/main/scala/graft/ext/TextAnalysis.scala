@@ -477,7 +477,6 @@ object TextAnalysis {
       .select(col("g"),
         round(-log(col("cb").cast("double") / col("cf")), 9)
           .cast("decimal(14,10)").as("sp"))
-    graft.Engine.freeLater(counts)
     grams
       .filter(pmod(col("doc_id"), lit(10)) === 0)
       .groupBy("doc_id", "g")
@@ -540,7 +539,6 @@ object TextAnalysis {
     val sizes = sw.groupBy("source").agg(count(lit(1)).as("nv"))
     val a = sw.select(col("source").as("s1"), col("word"))
     val b = sw.select(col("source").as("s2"), col("word"))
-    graft.Engine.freeLater(sw)
     a.join(b, "word")
       .filter(col("s1") < col("s2"))
       .groupBy("s1", "s2")
@@ -1044,7 +1042,6 @@ object TextAnalysis {
       .agg(sum(col("tf").cast("decimal(10,0)") * col("weight")).as("score"))
     val wBest = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("topic"))
-    graft.Engine.freeLater(tfc)
     scores.withColumn("rk", row_number().over(wBest))
       .filter(col("rk") === 1)
       .select(col("doc_id"), col("topic"),
@@ -1263,7 +1260,6 @@ object TextAnalysis {
       .agg(sum("wscore").as("iscore"))
     val wRank = Window.partitionBy("source")
       .orderBy(col("score").desc, col("phrase"))
-    graft.Engine.freeLater(inst)
     instScore
       .groupBy("source", "phrase")
       .agg(count(lit(1)).as("n_occ"), max("iscore").as("score"))
@@ -1310,8 +1306,6 @@ object TextAnalysis {
       .groupBy(col("a.word").as("w1"), col("b.word").as("w2"))
       .agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= minSupport)
-    graft.Engine.freeLater(dwv)
-    graft.Engine.freeLater(vocab)
     pairs
       .join(broadcast(vocab.select(col("word").as("w1"),
         col("df").as("df1"))), "w1")
@@ -1443,15 +1437,13 @@ object TextAnalysis {
   def qBm25Search(
       t: Tables, terms: Seq[String] = Seq("join", "filter", "window"),
       k: Int = 15): DataFrame = {
-    val (tfCk, scores) = bm25Parts(t, terms)
-    graft.Engine.freeLater(tfCk)
+    val (_, scores) = bm25Parts(t, terms)
     scores.orderBy(col("score").desc, col("doc_id")).limit(k)
   }
 
   /** Per-document BM25 scores for `terms` — shared by [[qBm25Search]] and
     * the fusion ranker [[qRankFusion]]. Returns (checkpointed candidate
-    * tf frame, scores): the caller frees the checkpoint once its own
-    * result is materialized. Round 10: the candidate (doc, term) tf frame
+    * tf frame, scores). Round 10: the candidate (doc, term) tf frame
     * — query-sized, ≤ |terms| rows per doc — is materialized ONCE and
     * both consumers (per-term df counts, the scoring join) read it; the
     * previous shape instantiated the scan+tokenize+explode subtree twice
@@ -1529,7 +1521,6 @@ object TextAnalysis {
       .agg(sum(col("tf").cast("decimal(10,0)") * col("w")).as("score"))
       .withColumn("r2", row_number().over(wRank).cast("long"))
       .select("doc_id", "r2")
-    graft.Engine.freeLater(tfCk)
     bm25.join(tfidf, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("r1"), col("r2"),
         (coalesce(lit(1.0) / (col("r1") + 60), lit(0.0)) +
@@ -1888,7 +1879,6 @@ object TextAnalysis {
       .orderBy(col("c1").desc, col("w1")).limit(kProbe)
     val byW1 = Window.partitionBy("w1")
       .orderBy(col("num").desc, col("w2"))
-    graft.Engine.freeLater(c12)
     c12
       .join(broadcast(probes), "w1")
       .join(right.hint("shuffle_hash"), "w2")

@@ -3,7 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.transform.Transforms.dsum
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -173,9 +173,9 @@ object Analytics {
           WHERE year(o_orderdate) = 1998),
          xxhash64(c_custkey))"""
 
-  def qBloomPrefilter(spark: SparkSession, t: Tables): DataFrame = {
+  def qBloomPrefilter(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       s"""WITH pre AS ($bloomPreSql)
           SELECT pre.c_custkey, pre.c_name FROM pre
           WHERE EXISTS (SELECT 1 FROM orders o
@@ -187,9 +187,9 @@ object Analytics {
   /** The bloom prefilter stage alone (false positives included) — exposed
     * so tests can assert the filter actually prunes.
     */
-  def bloomPrefilterOnly(spark: SparkSession, t: Tables): DataFrame = {
+  def bloomPrefilterOnly(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(bloomPreSql)
+    t.spark.sql(bloomPreSql)
   }
 
   /** SCD type-2 interval construction: an event stream (orders per
@@ -367,7 +367,6 @@ object Analytics {
     // item-frequency dimension is orders of magnitude smaller than the
     // pair fact it decorates (guide §3.1 — broadcast the side you KNOW
     // is small; the pair fact then never shuffles here)
-    graft.Engine.freeLater(freq)
     pairs
       .join(broadcast(freq.select(col("pk").as("p1"), col("ci").as("c1"))),
         "p1")
@@ -420,9 +419,9 @@ object Analytics {
     * from SQL text over the registered views — exercises parse/analyze/
     * optimize on a plan with both broadcast dims and a fact-fact shuffle.
     */
-  def qSqlQ5(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ5(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT n_name,
            CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,6))) AS DOUBLE) AS revenue,
            COUNT(*) AS n_items
@@ -732,9 +731,9 @@ object Analytics {
     * PushedFilters on the parquet scan, the aggregate is one exact decimal
     * sum, no joins, no shuffle beyond the final single-row combine.
     */
-  def qSqlQ6(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ6(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT
            CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(24,6)))
              AS DOUBLE) AS revenue,
@@ -821,9 +820,9 @@ object Analytics {
     * bounded top-k output. The inner aggregate is the only fact-sized
     * shuffle; the qualifying key set is tiny and AQE broadcasts it.
     */
-  def qSqlQ18(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ18(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT c_custkey, c_name, o_orderkey,
            date_format(o_orderdate, 'yyyy-MM-dd') AS o_orderdate,
            o_totalprice,
@@ -846,9 +845,9 @@ object Analytics {
     * lands in a TakeOrderedAndProject (k rows per partition cross the
     * exchange, never the full aggregate).
     */
-  def qSqlQ10(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ10(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT c_custkey, c_name,
            CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,6)))
              AS DOUBLE) AS revenue,
@@ -872,9 +871,9 @@ object Analytics {
     * double division. Plan: the shipdate range pushes into the lineitem
     * scan, part broadcasts.
     */
-  def qSqlQ14(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ14(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT date_format(l_shipdate, 'yyyy-MM') AS ship_month,
            CAST(SUM(CASE WHEN p_type = 'PROMO'
                  THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,6))
@@ -898,9 +897,9 @@ object Analytics {
     * filter, and pushes the disjunction's per-table prefilters
     * (brand IN ..., quantity range) into both scans.
     */
-  def qSqlQ19(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ19(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """SELECT
            CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
                AS DECIMAL(24,6))) AS DOUBLE) AS revenue,
@@ -923,9 +922,9 @@ object Analytics {
     * through the SQL frontend. The average is an exact decimal sum /
     * count, so the threshold both engines compare against is identical.
     */
-  def qSqlQ22(spark: SparkSession, t: Tables): DataFrame = {
+  def qSqlQ22(t: Tables): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       """WITH pool AS (
            SELECT c_custkey, c_acctbal, c_nationkey % 5 AS ngroup
            FROM customer WHERE c_nationkey % 5 IN (0, 2, 4))

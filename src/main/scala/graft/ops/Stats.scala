@@ -258,7 +258,6 @@ object Stats {
     val med = slim
       .groupBy("l_returnflag")
       .agg(expr("percentile(l_extendedprice, 0.5D)").as("med_price"))
-    graft.Engine.freeLater(slim)
     slim
       .join(broadcast(med), "l_returnflag")
       .withColumn("adev", abs(col("l_extendedprice") - col("med_price")))
@@ -380,12 +379,9 @@ object Stats {
     * At 100 TB: the full-shuffle GROUP BY over every key disappears;
     * what's left is one sketch aggregate + a broadcast-sized candidate join.
     */
-  def qHeavyHitters(
-      spark: org.apache.spark.sql.SparkSession,
-      t: Tables,
-      threshold: Long = 80L): DataFrame = {
+  def qHeavyHitters(t: Tables, threshold: Long = 80L): DataFrame = {
     t.createViews()
-    spark.sql(
+    t.spark.sql(
       s"""WITH cand AS (
             SELECT c_custkey AS user_id FROM customer
             WHERE cms_estimate(
@@ -521,7 +517,6 @@ object Stats {
       .withColumn("iqr", col("q3") - col("q1"))
       .withColumn("lo", col("q1") - lit(1.5).cast(DecimalType(2, 1)) * col("iqr"))
       .withColumn("hi", col("q3") + lit(1.5).cast(DecimalType(2, 1)) * col("iqr"))
-    graft.Engine.freeLater(enriched)
     enriched
       .join(broadcast(fences), Seq("r_name"))
       .groupBy(col("r_name"), col("q1"), col("q3"), col("lo"), col("hi"))
@@ -2003,7 +1998,6 @@ object Stats {
             " AS BIGINT)") % 2).as("arm"))
         .filter(col("b") <= nPerm),
       col("arm"), Seq(col("b")))
-    graft.Engine.freeLater(perCust)
     perms
       .crossJoin(broadcast(observed))
       .agg(
@@ -2115,7 +2109,6 @@ object Stats {
       .filter(col("rnk") === 1)
     val nTreated = withRev.filter(col("arm") === 1)
       .agg(count(lit(1)).as("n_treated"))
-    graft.Engine.freeLater(withRev)
     matched
       .agg(
         count(lit(1)).as("n_matched"),

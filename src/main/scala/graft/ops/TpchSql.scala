@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** The rest of the TPC-H sweep through the SQL frontend (Q5/6/10/14/18/
   * 19/22 live in [[Analytics]]; this object completes the set with Q1, Q3,
@@ -39,9 +39,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TpchSql {
 
-  def run(spark: SparkSession, t: Tables, sql: String): DataFrame = {
+  def run(t: Tables, sql: String): DataFrame = {
     t.createViews()
-    spark.sql(sql)
+    t.spark.sql(sql)
   }
 
   /** Q1: pricing summary. Scan-dominant single aggregate; every measure is

@@ -126,18 +126,16 @@ object Streams {
 
   private val drainSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** State-partition width for drains, `spark.graft.stream.statePartitions`
-    * (default 4). State partitioning is sized to STATE volume — the
-    * watermarked window/key cardinality, tiny for these pipelines — not
-    * batch-shuffle width: every state store pays a per-partition commit
+  /** State-partition width for drains. State partitioning is sized to
+    * STATE volume — the watermarked window/key cardinality, tiny for these
+    * pipelines — not batch-shuffle width: every state store pays a per-partition commit
     * (delta file + maintenance) per microbatch, and a stream-stream join
     * keeps four stores per partition, so each extra partition is pure
     * overhead (measured: a minimal drain's addBatch is 0.60 s at width 8
     * vs 1.49 s at width 32). A 24/7 pipeline with millions of keys would
     * raise this to spread state across executors.
     */
-  private def stateWidth(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("4")
+  private val StateWidth = "4"
 
   /** Drain-mode execution of [[tumblingCounts]]: start the file-source
     * stream over `dir`, process the whole backlog with
@@ -185,7 +183,7 @@ object Streams {
     // session value is restored once the drain finishes, so batch plans
     // never see it.
     val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateWidth(spark))
+    spark.conf.set("spark.sql.shuffle.partitions", StateWidth)
     // `spark.graft.drain.stateStore=rocksdb` switches this drain to the
     // disk-backed RocksDB state store — the at-scale posture (SCALE.md
     // finding 3: the default in-memory HDFSBackedStateStore OOMs on the
@@ -310,7 +308,7 @@ object Streams {
           .as("window_start"),
         col("event_type"), col("n"), col("sum_value"))
     val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateWidth(spark))
+    spark.conf.set("spark.sql.shuffle.partitions", StateWidth)
     val providerRestore = applyStateStoreChoice(spark)
     val query =
       try {

@@ -55,8 +55,8 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("bloom prefilter prunes non-matching customers and the final output is exact") {
-    val pre = Analytics.bloomPrefilterOnly(spark, tables).count()
-    val exact = Analytics.qBloomPrefilter(spark, tables).count()
+    val pre = Analytics.bloomPrefilterOnly(tables).count()
+    val exact = Analytics.qBloomPrefilter(tables).count()
     val total = tables.customer.count()
     val expected = tables.customer.join(
       tables.orders.filter(year(col("o_orderdate")) === 1998)
@@ -383,7 +383,7 @@ class AnalyticsSpec extends SparkSuite {
     assert(exact.subsetOf(cands), "CMS must never miss a true heavy hitter")
     assert(cands.size < tables.customer.count(),
       "CMS prefilter should prune the key dimension")
-    val out = Stats.qHeavyHitters(spark, tables, threshold)
+    val out = Stats.qHeavyHitters(tables, threshold)
       .as[(Long, Long)].collect().toMap
     assert(out.keySet == exact, "verified output must equal the exact answer")
     out.foreach { case (_, n) => assert(n > threshold) }
@@ -665,12 +665,12 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("tpch q6 via sql frontend: one row, positive revenue and count") {
-    val r = Analytics.qSqlQ6(spark, tables).head()
+    val r = Analytics.qSqlQ6(tables).head()
     assert(r.getDouble(0) > 0 && r.getLong(1) > 0)
   }
 
   test("tpch q18: every order clears the quantity bar, prices descend") {
-    val rows = Analytics.qSqlQ18(spark, tables).collect()
+    val rows = Analytics.qSqlQ18(tables).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(5) > 250.0))
     rows.sliding(2).foreach { case Array(a, b) =>
@@ -693,7 +693,7 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("tpch q10 via sql frontend: 20 rows, revenue strictly ordered") {
-    val rows = Analytics.qSqlQ10(spark, tables).collect()
+    val rows = Analytics.qSqlQ10(tables).collect()
     assert(rows.length == 20)
     rows.sliding(2).foreach { case Array(a, b) =>
       assert(a.getDouble(2) >= b.getDouble(2))

@@ -232,7 +232,7 @@ class DistributionalSpec extends SparkSuite {
 
   test("multimodal resize: aspect preserved, bounded by maxSide") {
     val out = graft.ext.Multimodal
-      .qMultimodalResize(spark, tables).collect()
+      .qMultimodalResize(tables).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val (w, h, ow, oh) = (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))

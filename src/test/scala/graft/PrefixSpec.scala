@@ -2,6 +2,8 @@ package graft
 
 import graft.ops.Prefix
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -102,19 +104,44 @@ class PrefixSpec extends SparkSuite {
   test("freeLater: a frame survives one interleaved construction (two-generation lag)") {
     val s = spark
     import s.implicits._
-    // simulate SparkEntry's wrapper: drain runs at the START of each
-    // construction, freeLater during it
-    Engine.drainDeferredFrees() // construction A begins
+    // the contract the deferred-free queue used to keep, now held by
+    // reachability alone: a checkpoint made in one construction is still
+    // readable after later registry constructions have run
     val a = Engine.loopCheckpoint((1 to 100).toDF("x"))
-    Engine.freeLater(a)
-    Engine.drainDeferredFrees() // construction B begins — A must survive
+    SparkEntry.queries("q_mad")(spark, sfDir) // construction B
     val b = Engine.loopCheckpoint((1 to 50).toDF("x"))
-    Engine.freeLater(b)
-    // materialize A AFTER B's construction — the round-10 queue freed A
-    // at B's drain, which lost the lineage-truncated blocks
+    // materialize A AFTER B's construction
     assert(a.agg(sum("x")).head().getLong(0) == 5050L)
-    Engine.drainDeferredFrees() // construction C begins — frees A
+    SparkEntry.queries("q_anomaly_iqr")(spark, sfDir) // construction C
     assert(b.agg(sum("x")).head().getLong(0) == 1275L)
-    Engine.drainDeferredFrees() // frees B
+  }
+
+  test("per-query checkpoints survive interleaved constructions and are released once unreachable") {
+    val sc = spark.sparkContext
+    val held = Seq("q_mad", "q_anomaly_iqr")
+    def build(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def checkpointIds(df: DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    // construct both, then three more entries, before executing either
+    var frames = held.map(build)
+    Seq("q1_agg", "q_vocab_containment", "q_sql_q3").foreach(build)
+    val got = frames.map(rows)
+    val fresh = held.map(build)
+    assert(got == fresh.map(rows))
+    // a session-cached frame appears in both constructions; what is left
+    // are the checkpoints each construction made for itself
+    val perQuery =
+      frames.flatMap(checkpointIds).toSet -- fresh.flatMap(checkpointIds)
+    assert(perQuery.nonEmpty)
+    assert(perQuery.subsetOf(sc.getPersistentRDDs.keySet))
+    frames = null
+    def live(): Set[Int] = perQuery.intersect(sc.getPersistentRDDs.keySet)
+    val deadline = System.nanoTime() + 10000000000L
+    while (live().nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(live().isEmpty)
   }
 }

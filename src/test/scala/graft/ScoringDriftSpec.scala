@@ -225,7 +225,7 @@ class ScoringDriftSpec extends SparkSuite {
       c -> math.min(n, m96.getOrElse(c, 0)) }.filter(_._2 > 0)
     val exceptRows = m95.map { case (c, n) =>
       c -> math.max(n - m96.getOrElse(c, 0), 0) }.filter(_._2 > 0)
-    val got = TpchSql.run(spark, tables, TpchSql.setops).collect()
+    val got = TpchSql.run(tables, TpchSql.setops).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     assert(got("intersect_all") == ((
@@ -372,7 +372,7 @@ class ScoringDriftSpec extends SparkSuite {
   }
 
   test("sql grouping sets: rollup cells reconcile against the base grain") {
-    val got = graft.ops.TpchSql.run(spark, tables,
+    val got = graft.ops.TpchSql.run(tables,
       graft.ops.TpchSql.groupingSets).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))

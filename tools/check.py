@@ -32,8 +32,10 @@ def norm(df):
     return df.reset_index(drop=True)
 
 
-def compare(name, s, d):
+def compare(name, s, d, failed):
     if s is None:
+        if name in failed:
+            return f"{name}: FAILED in Verify: {failed[name]}"
         return f"{name}: MISSING spark output"
     s, d = norm(s), norm(d)
     if list(s.columns) != list(d.columns):
@@ -67,6 +69,11 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+    # Verify records each query that threw (name -> "class: message")
+    try:
+        failed = json.load(open(f"{outdir}/failed.json"))
+    except FileNotFoundError:
+        failed = {}
     ok = bad = 0
     for name, sql in sorted(oracles.items()):
         if only and name not in only:
@@ -77,7 +84,7 @@ def main():
             print(f"{name}: DUCKDB ERROR {e}")
             bad += 1
             continue
-        msg = compare(name, load_spark(outdir, name), d)
+        msg = compare(name, load_spark(outdir, name), d, failed)
         print(msg)
         if ": OK" in msg:
             ok += 1
