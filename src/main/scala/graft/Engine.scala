@@ -61,6 +61,31 @@ object Engine {
     if (estBytes >= BigInt(maxPartBytes) * target) df else df.repartition(target)
   }
 
+  /** The build side of an index probe join: broadcast while its size
+    * estimate is within `spark.sql.autoBroadcastJoinThreshold`, else a
+    * `shuffle_hash` hint (threshold -1 forces it), so an outgrown index
+    * partitions by key instead of falling back to a sort-merge join.
+    * A materialized local checkpoint is sized by its stored blocks: its
+    * optimizer estimate is inherited from the lineage it replaced, where
+    * joins multiply sizes (the sf0.1 semdedup keeper index, 386 KB of
+    * blocks, estimates 3.1 PiB).
+    */
+  def joinIndex(index: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark = index.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val plan = index.queryExecution.optimizedPlan
+    val stored = plan match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        spark.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
+          .map(i => BigInt(i.memSize + i.diskSize))
+      case _ => None
+    }
+    val estBytes = stored.getOrElse(plan.stats.sizeInBytes)
+    if (threshold >= 0 && estBytes <= threshold)
+      org.apache.spark.sql.functions.broadcast(index)
+    else index.hint("shuffle_hash")
+  }
+
   /** Materialization point for driver-orchestrated iterative loops
     * (connected components, PageRank rounds, k-core peels, Lloyd's
     * iterations). Default: `localCheckpoint()` — executor-memory resident,

@@ -44,8 +44,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * == stream leg ==
   * Replays the `factor`× corpus through the three scale-critical drains —
-  * incremental-ingest dedup (BOTH conf-switched index plans,
-  * verdict-compared), streaming semantic dedup, and IVF ingest
+  * incremental-ingest dedup (BOTH index plans — broadcast, and shuffled
+  * with `spark.sql.autoBroadcastJoinThreshold=-1` — verdict-compared),
+  * streaming semantic dedup, and IVF ingest
   * maintenance — as a REAL multi-microbatch backlog, recording
   * per-microbatch wall time, input rows, and state-store rows via a
   * StreamingQueryListener. Landing-zone design: the graded drains read
@@ -160,44 +161,37 @@ object Stress {
   /** Batch scale leg (the round-8/9 `StressScale` body). */
   private def batchLeg(
       spark: SparkSession, outDir: String, factor: Int): Unit = {
-    // force the distributed-CC branch outright: at this corpus size the
-    // near-dup node set can straddle the 32768 default cutoff, and the
-    // point of the stress is the 100 TB code path, not the driver
-    // union-find shortcut
-    spark.conf.set("spark.graft.cc.localCutoff", "64")
-    try {
-      val t = Tables(spark, outDir)
-      val nDocs = t.documents.count()
-      val nVecs = t.embeddings.count()
-      println(s"""{"stress":"inflate","factor":$factor,"docs":$nDocs,"vecs":$nVecs}""")
+    val t = Tables(spark, outDir)
+    val nDocs = t.documents.count()
+    val nVecs = t.embeddings.count()
+    println(s"""{"stress":"inflate","factor":$factor,"docs":$nDocs,"vecs":$nVecs}""")
 
-      def timed(name: String)(f: => DataFrame): DataFrame = {
-        val t0 = System.nanoTime()
-        val df = f
-        // full final plan, not a count-optimized rewrite (see Bench)
-        val n = df.queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"stress":"$name","sec":$sec%.2f,"rows":$n}""")
-        df
-      }
+    def timed(name: String)(f: => DataFrame): DataFrame = {
+      val t0 = System.nanoTime()
+      val df = f
+      // full final plan, not a count-optimized rewrite (see Bench)
+      val n = df.queryExecution.toRdd.count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"""{"stress":"$name","sec":$sec%.2f,"rows":$n}""")
+      df
+    }
 
-      timed("dedup_exact")(ext.Dedup.qDedupExact(t))
-      val funnel = timed("dedup_pipeline")(ext.Dedup.qDedupPipeline(t))
-      funnel.orderBy("source").collect().take(5)
-        .foreach(r => println(s"  funnel: $r"))
-      val clusters = timed("dedup_clusters_dist")(
-        ext.Dedup.qDedupClusters(t, forceDistributed = true))
-      val maxGroup = clusters.agg(max("n_members")).head().getLong(0)
-      println(s"""{"stress":"cc_max_group","value":$maxGroup}""")
-      timed("dedup_cost_model")(ext.Dedup.qDedupCostModel(t))
-        .collect().foreach(r => println(s"  cost: $r"))
-      val sem = timed("semdedup")(ext.Similarity.qSemDedup(t))
-      val pruned = sem.filter(col("keep") === 0).count()
-      println(s"""{"stress":"semdedup_pruned","value":$pruned}""")
-      timed("knn_ivfpq")(ext.Similarity.qKnnIvfPq(t))
-      timed("ivfpq_recall")(ext.Similarity.qIvfPqRecall(t))
-        .collect().foreach(r => println(s"  recall: $r"))
-    } finally spark.conf.unset("spark.graft.cc.localCutoff")
+    timed("dedup_exact")(ext.Dedup.qDedupExact(t))
+    val funnel = timed("dedup_pipeline")(ext.Dedup.qDedupPipeline(t))
+    funnel.orderBy("source").collect().take(5)
+      .foreach(r => println(s"  funnel: $r"))
+    val clusters = timed("dedup_clusters_dist")(
+      ext.Dedup.qDedupClusters(t, forceDistributed = true))
+    val maxGroup = clusters.agg(max("n_members")).head().getLong(0)
+    println(s"""{"stress":"cc_max_group","value":$maxGroup}""")
+    timed("dedup_cost_model")(ext.Dedup.qDedupCostModel(t))
+      .collect().foreach(r => println(s"  cost: $r"))
+    val sem = timed("semdedup")(ext.Similarity.qSemDedup(t))
+    val pruned = sem.filter(col("keep") === 0).count()
+    println(s"""{"stress":"semdedup_pruned","value":$pruned}""")
+    timed("knn_ivfpq")(ext.Similarity.qKnnIvfPq(t))
+    timed("ivfpq_recall")(ext.Similarity.qIvfPqRecall(t))
+      .collect().foreach(r => println(s"  recall: $r"))
   }
 
   /** Streaming scale leg (the round-9 `StressStream` body). */
@@ -210,9 +204,11 @@ object Stress {
     // the incdedup candidate state on the 10x tiny-vocab corpus is ~20M
     // pair rows (~GBs), which the default in-memory HDFSBackedStateStore
     // cannot hold in a bench-sized heap — exactly the regime where a
-    // real deployment runs RocksDB. Same switch the graded drains expose
-    // (and StreamsSpec tests) as spark.graft.drain.stateStore=rocksdb.
-    spark.conf.set("spark.graft.drain.stateStore", "rocksdb")
+    // real deployment runs RocksDB (StreamsSpec runs drains under it too)
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val providerBefore = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -274,18 +270,22 @@ object Stress {
     }
 
     try {
-      // incremental-ingest dedup, BOTH conf-switched index plans: the
-      // broadcast gram index (executor-resident, zero per-batch shuffle)
-      // vs the 100 TB shuffled-hash fallback — verdicts must be identical
-      spark.conf.set("spark.graft.incdedup.broadcastIndex", "true")
+      // incremental-ingest dedup, BOTH index plans: the broadcast gram
+      // index (executor-resident, zero per-batch shuffle) vs the 100 TB
+      // shuffled-hash fallback Engine.joinIndex picks once the index's
+      // estimate passes the broadcast threshold (-1 forces it) — verdicts
+      // must be identical
+      val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+      val thresholdBefore = spark.conf.get(thresholdKey)
+      spark.conf.set(thresholdKey, "1g")
       val vb = timed("incdedup_broadcast")(
         streaming.Streams.drainIncrementalDedup(
           spark, land, "documents_chunk_*.parquet"))
-      spark.conf.set("spark.graft.incdedup.broadcastIndex", "false")
+      spark.conf.set(thresholdKey, "-1")
       val vs = timed("incdedup_shuffle")(
         streaming.Streams.drainIncrementalDedup(
           spark, land, "documents_chunk_*.parquet"))
-      spark.conf.unset("spark.graft.incdedup.broadcastIndex")
+      spark.conf.set(thresholdKey, thresholdBefore)
       println(s"""{"stress":"incdedup_verdicts_identical","value":${vb == vs},""" +
         s""""pairs":${vb.size}}""")
 
@@ -298,7 +298,10 @@ object Stress {
     } finally {
       spark.streams.removeListener(listener)
       spark.conf.unset("spark.graft.drain.timeoutMs")
-      spark.conf.unset("spark.graft.drain.stateStore")
+      providerBefore match {
+        case Some(v) => spark.conf.set(providerKey, v)
+        case None => spark.conf.unset(providerKey)
+      }
     }
   }
 

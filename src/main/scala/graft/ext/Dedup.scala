@@ -38,13 +38,6 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     call_function("word_shingles", words(text), lit(n))
 
-  /** MinHash signature: k min-hash slots over the shingle set, via the
-    * native [[graft.functions.MinHashSig]] expression (double hashing:
-    * one scan of the shingles regardless of k).
-    */
-  def minhashSig(sh: Column, k: Int = 32): Column =
-    call_function("minhash_sig", sh, lit(k))
-
   /** Per-group candidate membership with a HARD cap on aggregation-buffer
     * size: `bounded_topk` keeps at most `maxSize + 1` ids per group at all
     * times — map-side partials included — so a pathological hot bucket
@@ -803,6 +796,11 @@ object Dedup {
         col("keeper_id"), col("n_tokens"), col("n_span_tokens_cut"))
       .orderBy("doc_id")
 
+  /** Edge count up to which [[connectedComponents]] runs driver-side
+    * union-find instead of the distributed loop.
+    */
+  private val LocalComponentsCutoff = 32768L
+
   /** Connected components over an undirected duplicate-pair edge list by
     * min-label propagation — the step that turns pairwise near-dup output
     * (minhash / simhash / embedding) into dedup GROUPS with a keep-one
@@ -821,8 +819,8 @@ object Dedup {
       edges: DataFrame, maxIter: Int = 40,
       forceDistributed: Boolean = false): DataFrame = {
     // Adaptive small-graph path — the same size-based plan switch AQE
-    // makes for broadcast joins: an edge list under the cutoff (default
-    // 32768 edges, ~0.5 MB — duplicate-pair graphs are SPARSE relative to
+    // makes for broadcast joins: an edge list under the cutoff (32768
+    // edges, ~0.5 MB — duplicate-pair graphs are SPARSE relative to
     // their corpus, so even large corpora often land here) is index
     // metadata, not data; collecting it and running driver union-find
     // replaces ~7 distributed rounds (each a join + agg + checkpoint +
@@ -833,11 +831,9 @@ object Dedup {
     // cutoff — [[qDedupClustersDist]] grades that path with a full hash
     // oracle at every scale factor (a cutoff-sized test corpus would
     // otherwise only ever exercise the driver branch in the graded run).
-    val cutoff = edges.sparkSession.conf
-      .getOption("spark.graft.cc.localCutoff").map(_.toLong).getOrElse(32768L)
     // edges arrive checkpointed per the contract below, so the count is a
     // cached-block scan, not a recompute
-    if (!forceDistributed && cutoff > 0 && edges.count() <= cutoff)
+    if (!forceDistributed && edges.count() <= LocalComponentsCutoff)
       return localComponents(edges)
     // NOTE: convergence is detected by a round whose labels don't change,
     // so the usable budget is maxIter - 1 rounds (the last confirms).

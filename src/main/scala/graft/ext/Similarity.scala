@@ -859,20 +859,11 @@ object Similarity {
   def semDedupServe(
       arrivals: DataFrame, keepers: DataFrame, cents: Seq[Array[Double]],
       threshold: Double = 0.35): DataFrame = {
-    // Broadcast is the right plan while the keeper index fits an executor
-    // (cell-count rows, but each row CARRIES its cell's keeper vectors —
-    // at 100 TB corpus scale the packed lists outgrow a broadcast long
-    // before the row count does). `spark.graft.semdedup.broadcastIndex=
-    // false` switches to a SHUFFLED stream-static equi-join on the cell
-    // key: the keeper side partitions by cell instead of replicating to
-    // every task, arrivals shuffle once on their (map-side projected)
-    // cell id, and the per-row verdict logic is untouched — identical
-    // output, plan-audited in both shapes (PlanAuditSpec). The hint pins
-    // the shuffled shape even when size stats would allow an automatic
-    // broadcast, so the audited plan is the plan a 100 TB index gets.
-    val bcast = arrivals.sparkSession.conf
-      .getOption("spark.graft.semdedup.broadcastIndex").forall(_.toBoolean)
-    val idx = if (bcast) broadcast(keepers) else keepers.hint("shuffle_hash")
+    // cell-count rows, but each CARRIES its cell's keeper vectors: at
+    // 100 TB the packed lists outgrow a broadcast long before the row
+    // count does, and joinIndex shuffles both sides on the cell key
+    // instead (same verdicts, both shapes audited in PlanAuditSpec)
+    val idx = graft.Engine.joinIndex(keepers)
     arrivals
       .withColumn("cell", nearestCell(col("mu"), cents).cast("long"))
       .join(idx, Seq("cell"), "left_outer")

@@ -84,43 +84,6 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     copy(left = newLeft, right = newRight)
 }
 
-/** MinHash signature over a string array (shingles), k slots.
-  *
-  * Two base hashes per element + Kirsch-Mitzenmacher double hashing
-  * (sig_j = min over elements of h1 + j*h2) instead of k independent hash
-  * passes — one scan of the shingle set regardless of k. Evaluated once per
-  * row (not per candidate pair), so CodegenFallback's per-row boxing is
-  * negligible against the hash loop itself.
-  */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val out = new Array[Long](k)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    var i = 0
-    while (i < arr.numElements()) {
-      val s = arr.getUTF8String(i)
-      val h1 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-      val h2 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 77L)
-      var j = 0
-      while (j < k) {
-        val h = h1 + j * h2
-        if (h < out(j)) out(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Distinct hashes of the word n-gram shingles of a string array — the
   * allocation-free MinHash front end. Each word is hashed once; a shingle
   * hash is the XXH64-style mix of its n word hashes, so no shingle string

@@ -10,20 +10,9 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * an imperative hook for already-built sessions (Engine.tune).
   *
   * SQL surface: `cosine_sim(array<double>, array<double>) -> double`,
-  * `minhash_sig(array<string>, k) -> array<bigint>`,
   * `simhash64(array<string>) -> bigint`.
   */
 object GraftFunctions {
-
-  private def minhashBuilder(args: Seq[Expression]): Expression = {
-    val k = args match {
-      case Seq(_, Literal(v: Int, _)) => v
-      case Seq(_) => 32
-      case _ => throw new IllegalArgumentException(
-        "minhash_sig(arr[, k literal int])")
-    }
-    MinHashSig(args.head, k)
-  }
 
   // strict: a present-but-wrong argument (e.g. `5L`, a non-literal) must
   // fail loudly, not silently run with the default
@@ -47,7 +36,6 @@ object GraftFunctions {
 
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", args => CosineSim(args(0), args(1))),
-    ("minhash_sig", minhashBuilder),
     ("shingle_hashes", args => ShingleHashes(args(0),
       if (args.length > 1) intLit("shingle_hashes", args(1)) else 3)),
     ("minhash_sig_longs", args => MinHashSigLongs(args(0),

@@ -12,11 +12,20 @@ import org.apache.spark.sql.functions._
   * no matter the cluster. This helper computes the same running values
   * with the classic range-partitioned prefix pattern:
   *
-  *   1. range-partition by the total order (one exchange, parallel);
+  *   1. range-partition by the total order (one range exchange, shared
+  *      by steps 2 and 3 through exchange reuse);
   *   2. per-partition running aggregate (partitioned window — parallel);
   *   3. per-partition totals (partition-count rows, the one tiny global
   *      pass) folded into EXCLUSIVE prefix offsets;
   *   4. broadcast-join the offsets back and combine.
+  *
+  * Exchanges per call: the range exchange, plus a
+  * `hashpartitioning(_pfx_pid)` exchange in front of step 2's window and
+  * one in front of step 3's totals aggregate (range partitioning does
+  * not satisfy a clustered distribution on `_pfx_pid`). Correctness
+  * rests on the range exchange being planned ONCE: two independently
+  * sampled range partitioners would assign different `_pfx_pid`s in the
+  * two branches (PlanAuditSpec checks the reuse on an executed plan).
   *
   * Arithmetic identity: running LONG/DECIMAL sums, counts/row numbers and
   * MIN/MAX are associative regrouping-exact, so the combined value equals

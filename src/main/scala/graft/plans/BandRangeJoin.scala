@@ -28,8 +28,7 @@ import org.apache.spark.sql.types._
   *
   * This is the rule form of the hand-banded `q_range_join_pairs`
   * (ops/Relational.scala); with the rule installed, the NAIVE formulation
-  * plans the banded shape (graded as `q_range_join_auto`). Disable with
-  * `spark.graft.bandRangeJoin.enabled=false`.
+  * plans the banded shape (graded as `q_range_join_auto`).
   */
 object BandRangeJoin extends Rule[LogicalPlan] {
 
@@ -37,8 +36,6 @@ object BandRangeJoin extends Rule[LogicalPlan] {
   private val DayMicros = 86400000000L
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.bandRangeJoin.enabled", "true") != "true")
-      return plan
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           // re-entry guard: the rewritten join carries our band attributes

@@ -163,50 +163,39 @@ object Streams {
       spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
     drain(spark, slidingCounts(eventsStream(spark, dir, globFilter)))
 
-  /** Run a streaming aggregation to completion over the current backlog
-    * (AvailableNow + complete mode into a memory sink) and return the
-    * final result as a batch frame. See [[drainTumblingCounts]] for why
-    * complete mode is the right drain semantics.
+  /** A `foreachBatch` sink for [[drain]]: `write` applies each microbatch,
+    * `read` returns what landed. */
+  private final case class BatchSink(
+      write: (DataFrame, Long) => Unit, read: () => DataFrame)
+
+  /** The one drain lifecycle: run a streaming query to completion over
+    * the current backlog (AvailableNow) and return its result as a batch
+    * frame — by default the memory sink's rows (complete mode; see
+    * [[drainTumblingCounts]] for why), or what a [[BatchSink]] landed.
+    * It owns the start, the timeout (`spark.graft.drain.timeoutMs`,
+    * default 10 minutes), surfacing the stream's own exception, the stop
+    * on timeout and the sink cleanup.
     */
   private def drain(
       spark: SparkSession,
       streamed: DataFrame,
-      mode: OutputMode = OutputMode.Complete()): DataFrame = {
+      mode: OutputMode = OutputMode.Complete(),
+      sink: Option[BatchSink] = None): DataFrame = {
     val name = s"graft_drain_${drainSeq.incrementAndGet()}"
-    // State partitions are fixed per checkpoint at first batch from
-    // spark.sql.shuffle.partitions — size them to STATE volume (watermarked
-    // window/key cardinality), not the session's batch-shuffle width: every
-    // state store pays a per-partition commit (delta file + snapshot
-    // maintenance) per microbatch, and a stream-stream join keeps four
-    // stores per partition, so overwide state partitioning multiplies pure
-    // overhead. The streaming query clones the session conf at start; the
-    // session value is restored once the drain finishes, so batch plans
-    // never see it.
+    val writer = streamed.writeStream.outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+    val sinkWriter = sink match {
+      case Some(s) => writer.foreachBatch(s.write)
+      case None => writer.format("memory").queryName(name)
+    }
+    // state partitions come from spark.sql.shuffle.partitions at start();
+    // the query clones the session conf there, so the batch width is back
+    // as soon as start() returns and the running stream keeps StateWidth
     val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StateWidth)
-    // `spark.graft.drain.stateStore=rocksdb` switches this drain to the
-    // disk-backed RocksDB state store — the at-scale posture (SCALE.md
-    // finding 3: the default in-memory HDFSBackedStateStore OOMs on the
-    // 10x gram-keyed incdedup state, ~20M rows). The streaming query
-    // clones the session conf at start, so the provider is restored for
-    // batch/other work as soon as the drain returns; StreamsSpec runs
-    // the stateful drains under this switch in CI.
-    val providerRestore = applyStateStoreChoice(spark)
     val query =
-      try {
-        streamed
-          .writeStream
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .format("memory")
-          .queryName(name)
-          .start()
-      } catch {
-        case e: Throwable =>
-          spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-          providerRestore()
-          throw e
-      }
+      try sinkWriter.start()
+      finally spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
     // copy the (window-cardinality-sized) sink rows out and drop the temp
     // view IN ALL PATHS — repeated drains, including failing ones, must
     // not accumulate catalog entries each pinning a result set. An empty
@@ -224,52 +213,26 @@ object Streams {
         query.awaitTermination(timeoutMs),
         s"AvailableNow drain did not terminate in ${timeoutMs}ms")
       terminated = true
-      // awaitTermination returns true for FAILED termination too — surface
-      // the stream's own exception instead of returning a silently-partial
-      // sink table
+      // a FAILED termination also ends the wait — surface the stream's
+      // own exception instead of returning a silently-partial result
       query.exception.foreach(e => throw e)
-      val rows =
-        if (spark.catalog.tableExists(name)) spark.table(name).collect().toSeq
-        else Seq.empty[org.apache.spark.sql.Row]
-      spark.createDataFrame(rows.asJava, streamed.schema)
+      sink match {
+        case Some(s) => s.read()
+        case None =>
+          val rows =
+            if (spark.catalog.tableExists(name)) spark.table(name).collect().toSeq
+            else Seq.empty[org.apache.spark.sql.Row]
+          spark.createDataFrame(rows.asJava, streamed.schema)
+      }
     } finally {
-      // awaitTermination returning true means the query IS terminated
-      // (success or failure) — calling stop() then interrupts the stream
-      // thread mid-cleanup, which Spark ERROR-logs with a stack trace (the
-      // r5 bench-tail noise). An isActive guard is check-then-act racy, so
-      // skip stop() by the termination FACT, not a liveness probe; stop()
-      // remains for the timeout path, where interrupting is the point.
+      // a terminated query (success or failure) must not be stopped: stop()
+      // then interrupts the stream thread mid-cleanup, which Spark
+      // ERROR-logs with a stack trace (the r5 bench-tail noise). An
+      // isActive guard is check-then-act racy, so skip stop() by the
+      // termination FACT, not a liveness probe; stop() remains for the
+      // timeout path, where interrupting is the point.
       if (!terminated) scala.util.Try(query.stop())
-      spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-      providerRestore()
       scala.util.Try(spark.catalog.dropTempView(name))
-    }
-  }
-
-  /** Apply the `spark.graft.drain.stateStore` choice to the session's
-    * state-store provider and return a restore thunk. `rocksdb` selects
-    * RocksDBStateStoreProvider (disk-backed, the 100 TB posture);
-    * `memory` forces the Spark default; unset leaves the session as-is
-    * (so an operator-set providerClass — e.g. the stress harness — still
-    * wins).
-    */
-  private def applyStateStoreChoice(spark: SparkSession): () => Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    val choice = spark.conf.getOption("spark.graft.drain.stateStore")
-    choice.map(_.toLowerCase) match {
-      case Some("rocksdb") =>
-        spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider")
-      case Some("memory") => spark.conf.unset(key)
-      case Some(other) =>
-        throw new IllegalArgumentException(
-          s"spark.graft.drain.stateStore=$other (expected rocksdb|memory)")
-      case None => ()
-    }
-    () => prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -307,39 +270,10 @@ object Streams {
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("event_type"), col("n"), col("sum_value"))
-    val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StateWidth)
-    val providerRestore = applyStateStoreChoice(spark)
-    val query =
-      try {
-        streamed.writeStream
-          .outputMode(OutputMode.Complete())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            wh.upsert(batch, "hourly_counts", Seq("window_start", "event_type"))
-          }
-          .start()
-      } catch {
-        case e: Throwable =>
-          spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-          providerRestore()
-          throw e
-      }
-    var terminated = false
-    try {
-      require(
-        query.awaitTermination(600000L),
-        "AvailableNow warehouse drain did not terminate")
-      terminated = true
-      query.exception.foreach(e => throw e)
-      wh.table("hourly_counts")
-    } finally {
-      // see drain(): stop() after a true awaitTermination interrupts the
-      // stream thread's cleanup; gate on the termination fact, not isActive
-      if (!terminated) scala.util.Try(query.stop())
-      spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-      providerRestore()
-    }
+    drain(spark, streamed, sink = Some(BatchSink(
+      (batch, _) =>
+        wh.upsert(batch, "hourly_counts", Seq("window_start", "event_type")),
+      () => wh.table("hourly_counts"))))
   }
 
   /** Drain-mode execution of [[distinctUsersHourly]] (see
@@ -1090,27 +1024,6 @@ object Streams {
       .orderBy("cell")
   }
 
-  /** Streaming incremental-ingest dedup — the stateful-streaming twin of
-    * [[graft.ext.Dedup.qDedupIncremental]], sharing its oracle. The
-    * arriving docs are the STREAM; the existing corpus grams are the
-    * STATIC side of a stateless per-microbatch stream-static join (the
-    * same never-shuffle-the-corpus posture as the batch twin,
-    * transposed: here each microbatch probes the corpus gram index).
-    * Candidate-pair intersections accumulate in a complete-mode
-    * aggregation whose state is the candidate-pair cardinality —
-    * bounded by real cross-batch similarity, not by stream length.
-    *
-    * Index plan, conf-switched like the semdedup keeper index
-    * ([[graft.ext.Similarity.semDedupServe]]): while the corpus gram
-    * index fits an executor, `spark.graft.incdedup.broadcastIndex=true`
-    * (the default) replicates it once and every microbatch probes it
-    * map-side — no per-batch shuffle at all. At 100 TB the gram index
-    * outgrows a broadcast long before anything else; `=false` pins a
-    * SHUFFLED stream-static hash join on the gram key instead: the
-    * index partitions by gram once, each microbatch shuffles only its
-    * own (id, gram) rows, and the verdict arithmetic is untouched —
-    * identical output, both plan shapes asserted in PlanAuditSpec.
-    */
   /** The corpus (id_old, n_old, gram) posting frame [[incrementalDedup]]
     * probes — exposed so a drain can persist it ONCE across microbatches:
     * a stream-static join re-executes its static subplan every microbatch
@@ -1131,6 +1044,21 @@ object Streams {
       .select(col("doc_id").as("id_old"), size(col("g")).as("n_old"),
         explode(col("g")).as("gram"))
 
+  /** Streaming incremental-ingest dedup — the stateful-streaming twin of
+    * [[graft.ext.Dedup.qDedupIncremental]], sharing its oracle. The
+    * arriving docs are the STREAM; the existing corpus grams are the
+    * STATIC side of a stateless per-microbatch stream-static join (the
+    * same never-shuffle-the-corpus posture as the batch twin,
+    * transposed: here each microbatch probes the corpus gram index).
+    * Candidate-pair intersections accumulate in a complete-mode
+    * aggregation whose state is the candidate-pair cardinality —
+    * bounded by real cross-batch similarity, not by stream length.
+    *
+    * The gram index joins through [[graft.Engine.joinIndex]]: broadcast
+    * (every microbatch probes it map-side) while it fits, a shuffled
+    * stream-static hash join on the gram key at 100 TB, where the index
+    * outgrows a broadcast first. Both shapes are asserted in PlanAuditSpec.
+    */
   def incrementalDedup(arrivals: DataFrame, corpus: DataFrame,
       n: Int = 3, threshold: Double = 0.5): DataFrame =
     incrementalDedupWithIndex(
@@ -1147,11 +1075,7 @@ object Streams {
       .filter(pmod(col("doc_id"), lit(10)) === 0)
       .select(col("doc_id").as("id_new"), size(col("g")).as("n_new"),
         explode(col("g")).as("gram"))
-    val bcast = arrivals.sparkSession.conf
-      .getOption("spark.graft.incdedup.broadcastIndex").forall(_.toBoolean)
-    val corp =
-      if (bcast) broadcast(corpIndex) else corpIndex.hint("shuffle_hash")
-    batch.join(corp, "gram")
+    batch.join(graft.Engine.joinIndex(corpIndex), "gram")
       .groupBy("id_new", "id_old", "n_new", "n_old")
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard", col("inter").cast("double") /
@@ -1161,9 +1085,6 @@ object Streams {
       .select(col("id_new"), col("id_old"), col("inter"), col("jaccard"))
   }
 
-  /** Drain-mode execution of [[incrementalDedup]] over the documents
-    * landing zone (AvailableNow, memory sink, complete mode).
-    */
   /** Streaming benchmark DECONTAMINATION at ingest — the serving-time
     * twin of [[graft.ext.Dedup.qContamination]], sharing its oracle: the
     * benchmark/eval gram set is built OFFLINE from the batch corpus (the
@@ -1177,7 +1098,7 @@ object Streams {
     *
     * Scale: same posture as the batch twin — the eval gram set is tiny
     * and broadcasts (at a scale where it doesn't,
-    * [[incrementalDedup]]'s conf-switched shuffled-probe shape is the
+    * [[incrementalDedup]]'s shuffled-probe shape is the
     * documented fallback); the doc stream never shuffles before the
     * match filter.
     */
@@ -1209,6 +1130,9 @@ object Streams {
       .orderBy("doc_id")
   }
 
+  /** Drain-mode execution of [[incrementalDedup]] over the documents
+    * landing zone (AvailableNow, memory sink, complete mode).
+    */
   def drainIncrementalDedup(
       spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
     val corpus = spark.read.parquet(s"$dir/documents.parquet")

@@ -44,12 +44,6 @@ class BandRangeJoinSpec extends SparkSuite {
     } finally spark.experimental.extraOptimizations = prev
   }
 
-  test("conf flag disables the rewrite") {
-    spark.conf.set("spark.graft.bandRangeJoin.enabled", "false")
-    try assert(!optimized(naive()).contains("graft_band_bucket"))
-    finally spark.conf.set("spark.graft.bandRangeJoin.enabled", "true")
-  }
-
   test("joins without a bounded window are left alone") {
     val a = tables.orders.select(col("o_custkey").as("ck"),
       col("o_orderkey").as("k1"), col("o_orderdate").as("d1"))

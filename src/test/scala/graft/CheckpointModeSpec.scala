@@ -22,16 +22,13 @@ class CheckpointModeSpec extends SparkSuite {
       .toDF("id1", "id2")
     // force the DISTRIBUTED loop (the checkpoint-mode subject) — the
     // adaptive union-find path would otherwise swallow this tiny graph
-    spark.conf.set("spark.graft.cc.localCutoff", "0")
     def run(): Map[Long, Long] =
-      ext.Dedup.connectedComponents(edges).collect()
+      ext.Dedup.connectedComponents(edges, forceDistributed = true).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    try {
-      val local = run()
-      val reliable = withReliable(run())
-      assert(local == reliable)
-      assert(reliable(3L) == 1L && reliable(22L) == 20L)
-    } finally spark.conf.unset("spark.graft.cc.localCutoff")
+    val local = run()
+    val reliable = withReliable(run())
+    assert(local == reliable)
+    assert(reliable(3L) == 1L && reliable(22L) == 20L)
   }
 
   test("BFS hops and pagerank agree across checkpoint modes") {

@@ -41,6 +41,26 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
+  test("src/main reads exactly the four spark.graft conf keys") {
+    // a conf key that only re-picks a code path is a second mechanism for
+    // one decision; a new key must be added here on purpose
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no source tree at ${root.toAbsolutePath}")
+    val literal = "\"spark\\.graft\\.([A-Za-z.]+)\"".r
+    val files = java.nio.file.Files.walk(root)
+    val keys =
+      try {
+        import scala.jdk.CollectionConverters._
+        files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+          .flatMap(f => literal.findAllMatchIn(
+            new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
+          .toSet
+      } finally files.close()
+    assert(keys == Set("checkpoint.reliable", "checkpoint.dir",
+      "explain.noCheckpoint", "drain.timeoutMs"), s"spark.graft keys: $keys")
+  }
+
   test("jaro_winkler matches literature values and DuckDB edge semantics") {
     def jw(a: String, b: String): Double =
       spark.sql(s"SELECT jaro_winkler('$a', '$b') AS v").head().getDouble(0)

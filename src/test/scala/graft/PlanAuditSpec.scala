@@ -33,6 +33,17 @@ class PlanAuditSpec extends SparkSuite {
     }
   }
 
+  /** Run `body` with broadcast joins off (threshold -1): the plan an
+    * index gets once its size estimate outgrows a broadcast.
+    */
+  private def withoutBroadcast[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally spark.conf.set(key, before)
+  }
+
   private def shuffleCount(plan: String): Int =
     "(?<![A-Za-z])Exchange ".r.findAllIn(
       plan.linesIterator.filterNot(_.contains("BroadcastExchange")).mkString("\n")
@@ -639,6 +650,36 @@ class PlanAuditSpec extends SparkSuite {
       "no map-side partial for the per-query top-k")
   }
 
+  test("prefix: the executed plan runs the range shuffle once and reuses it") {
+    // ops.Prefix's local-running and totals branches must read ONE range
+    // shuffle: planned twice, the two range partitioners sample on their
+    // own, `_pfx_pid` diverges between the branches and running values
+    // come out wrong. Checked on the final AQE plan after execution.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = SparkEntry.queries("q_pr_auc")(spark, sfDir)
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    assert(root.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan, s"not final:\n$root")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    def ranged(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    val all = nodes(root)
+    val rangeShuffles = all.filter(ranged)
+    val reused = all.collect { case r: ReusedExchangeExec if ranged(r.child) => r }
+    assert(rangeShuffles.size == 1,
+      s"expected one range shuffle, got ${rangeShuffles.size}:\n$root")
+    assert(reused.nonEmpty, s"range shuffle not reused:\n$root")
+  }
+
   test("semDedup serve: keeper index broadcast by default, conf-switched shuffled join, same verdicts") {
     import org.apache.spark.sql.functions._
     val keepers = graft.ext.Similarity.semDedupKeeperIndex(tables)
@@ -656,15 +697,14 @@ class PlanAuditSpec extends SparkSuite {
       s"keeper probe not broadcast:\n${plan(bcast)}")
     // index-scale mode: keepers partition by cell, nothing replicates —
     // the plan a 100 TB keeper index needs, with verdicts unchanged
-    spark.conf.set("spark.graft.semdedup.broadcastIndex", "false")
-    try {
+    withoutBroadcast {
       val shuffled = graft.ext.Similarity.semDedupServe(arrivals, keepers, cents)
       val p = plan(shuffled)
       assert(!p.contains("BroadcastHashJoin"), s"index still broadcast:\n$p")
       assert(p.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$p")
       assert(shuffled.orderBy("vec_id").collect().toSeq ==
         bcast.orderBy("vec_id").collect().toSeq)
-    } finally spark.conf.unset("spark.graft.semdedup.broadcastIndex")
+    }
     graft.Engine.freeCheckpoint(keepers)
   }
 
@@ -693,15 +733,14 @@ class PlanAuditSpec extends SparkSuite {
     val bcast = graft.streaming.Streams.incrementalDedup(arrivals, corpus)
     assert(plan(bcast).contains("BroadcastHashJoin"),
       s"gram index not broadcast:\n${plan(bcast)}")
-    spark.conf.set("spark.graft.incdedup.broadcastIndex", "false")
-    try {
+    withoutBroadcast {
       val shuffled = graft.streaming.Streams.incrementalDedup(arrivals, corpus)
       val p = plan(shuffled)
       assert(!p.contains("BroadcastHashJoin"), s"index still broadcast:\n$p")
       assert(p.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$p")
       assert(shuffled.orderBy("id_new", "id_old").collect().toSeq ==
         bcast.orderBy("id_new", "id_old").collect().toSeq)
-    } finally spark.conf.unset("spark.graft.incdedup.broadcastIndex")
+    }
   }
 
   test("contamination probe: eval gram set broadcast, doc stream never shuffles to meet it") {

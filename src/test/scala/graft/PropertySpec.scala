@@ -119,13 +119,11 @@ class PropertySpec extends SparkSuite {
       // local (adaptive union-find) path — under the default cutoff
       val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
         .as[(Long, Long)].collect().toMap
-      // distributed min-label loop, forced by zeroing the cutoff —
-      // both paths must produce identical labels
-      spark.conf.set("spark.graft.cc.localCutoff", "0")
+      // distributed min-label loop, forced — both paths must produce
+      // identical labels
       val gotDist =
-        try Dedup.connectedComponents(edges.toDF("id1", "id2"))
+        Dedup.connectedComponents(edges.toDF("id1", "id2"), forceDistributed = true)
           .as[(Long, Long)].collect().toMap
-        finally spark.conf.unset("spark.graft.cc.localCutoff")
       assert(got == gotDist, s"seed=$seed: local vs distributed diverge")
 
       // reference union-find with path compression, min-id roots

@@ -412,14 +412,13 @@ class StreamsSpec extends SparkSuite {
     assert(streamed.nonEmpty)
   }
 
-  test("drains run under the RocksDB state store and match the default " +
-    "provider (spark.graft.drain.stateStore=rocksdb)") {
+  test("drains run under the RocksDB state store and match the default provider") {
     // the executable form of SCALE.md finding 3: the in-memory default
     // OOMs on 10x gram-keyed incdedup state, so the at-scale posture is
-    // the disk-backed provider — this pins that the conf switch engages
-    // cleanly mid-session (conf cloned at query start, restored after)
-    // and that results are provider-independent for a windowed agg, a
-    // custom flatMapGroupsWithState, and the gram-keyed incdedup drain.
+    // the disk-backed provider — this pins that Spark's provider conf
+    // engages cleanly mid-session (cloned at query start) and that
+    // results are provider-independent for a windowed agg, a custom
+    // flatMapGroupsWithState, and the gram-keyed incdedup drain.
     def all3(): (Seq[String], Seq[String], Seq[String]) = (
       Streams.drainTumblingCounts(spark, sfDir, "events.parquet")
         .collect().map(_.toString).sorted.toSeq,
@@ -428,19 +427,66 @@ class StreamsSpec extends SparkSuite {
       Streams.drainIncrementalDedup(spark, sfDir, "documents.parquet")
         .collect().map(_.toString).sorted.toSeq)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    // getOption surfaces the registered DEFAULT for this conf, so restore
+    // the pre-block value rather than unsetting
     val providerBefore = spark.conf.getOption(providerKey)
     val default = all3()
-    spark.conf.set("spark.graft.drain.stateStore", "rocksdb")
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val rocks =
       try all3()
-      finally spark.conf.unset("spark.graft.drain.stateStore")
+      finally providerBefore match {
+        case Some(v) => spark.conf.set(providerKey, v)
+        case None => spark.conf.unset(providerKey)
+      }
     assert(rocks._1 == default._1 && rocks._1.nonEmpty)
     assert(rocks._2 == default._2 && rocks._2.nonEmpty)
     assert(rocks._3 == default._3 && rocks._3.nonEmpty)
-    // the switch must not leak a provider override into the session
-    // (getOption surfaces the registered DEFAULT for this conf, so
-    // compare against the pre-block value rather than expecting None)
-    assert(spark.conf.getOption(providerKey) == providerBefore)
+  }
+
+  test("a drain plans its state at the state width and leaves the session width alone") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = {}
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op => widths.add(op.numShufflePartitions))
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = done.countDown()
+    }
+    spark.conf.set(key, "7")
+    spark.streams.addListener(listener)
+    try {
+      assert(Streams.drainTumblingCounts(spark, sfDir, "events.parquet")
+        .collect().nonEmpty)
+      assert(spark.conf.get(key) == "7")
+      // listener events are delivered asynchronously; progress events
+      // precede the termination event on the same bus
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(key, before)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(!widths.isEmpty, "no state operator progress reported")
+    assert(widths.asScala.forall(_ == 4L), s"state widths: $widths")
+  }
+
+  test("a drain past spark.graft.drain.timeoutMs fails and leaves no active stream") {
+    spark.conf.set("spark.graft.drain.timeoutMs", "1")
+    val e =
+      try intercept[IllegalArgumentException] {
+        Streams.drainTumblingToWarehouse(spark, sfDir, "events.parquet")
+      }
+      finally spark.conf.unset("spark.graft.drain.timeoutMs")
+    assert(e.getMessage.contains("did not terminate"), e.getMessage)
+    assert(spark.streams.active.isEmpty,
+      s"streams left running: ${spark.streams.active.map(_.name).toSeq}")
   }
 
   test("streaming near-dedup drain equals a batch recompute of the same groups") {
