@@ -65,7 +65,6 @@ object Bench {
     }
     locally {
       import org.apache.spark.sql.functions._
-      import graft.Engine.LoopCheckpointOps
       val t = Tables(spark, sfDir)
       warm("footers") {
         t.lineitem.limit(1).count(); t.orders.limit(1).count()
@@ -191,33 +190,10 @@ object Bench {
             k = 20))),
         // driver-looped closure family (q_hierarchy_flatten): the same
         // resolve-to-root loop over the SUPPLIER key forest
-        "closure_sibling" -> (() => {
-          val nodes = t.supplier.select(col("s_suppkey").as("id"))
-          val parentOf = nodes.as("c")
-            .join(nodes.as("p"),
-              expr("p.id = c.id div 10 AND p.id <> c.id"), "left")
-            .select(col("c.id").as("id"), col("p.id").as("parent"))
-          var labels = parentOf.select(col("id"),
-              coalesce(col("parent"), col("id")).as("anc"),
-              col("parent").isNull.as("done"))
-            .loopCheckpoint()
-          val anc = parentOf.toDF("anc", "anc_parent")
-          var active = labels.filter(!col("done")).count()
-          while (active > 0) {
-            val next = labels.join(anc, Seq("anc"), "left")
-              .select(col("id"),
-                when(col("done") || col("anc_parent").isNull, col("anc"))
-                  .otherwise(col("anc_parent")).as("anc"),
-                (col("done") || col("anc_parent").isNull).as("done"))
-              .loopCheckpoint()
-            active = next.filter(!col("done")).count()
-            graft.Engine.freeCheckpoint(labels)
-            labels = next
-          }
-          val n = mat(labels.groupBy("anc").count())
-          graft.Engine.freeCheckpoint(labels)
-          n
-        })
+        "closure_sibling" -> (() =>
+          mat(ops.Graph.resolveForest(ops.Graph.decimalForest(
+            t.supplier.select(col("s_suppkey").as("id"))))
+            .groupBy("anc").count()))
       )
       canaryWave(
         // co-occurrence self-join family (q_basket_pairs): supplier

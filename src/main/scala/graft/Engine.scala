@@ -65,22 +65,13 @@ object Engine {
     * estimate is within `spark.sql.autoBroadcastJoinThreshold`, else a
     * `shuffle_hash` hint (threshold -1 forces it), so an outgrown index
     * partitions by key instead of falling back to a sort-merge join.
-    * A materialized local checkpoint is sized by its stored blocks: its
-    * optimizer estimate is inherited from the lineage it replaced, where
-    * joins multiply sizes (the sf0.1 semdedup keeper index, 386 KB of
-    * blocks, estimates 3.1 PiB).
+    * A materialized loop checkpoint caps its estimate at its stored bytes
+    * (see [[loopCheckpoint]]), so a checkpointed index is sized by what it
+    * holds, not by the lineage it replaced.
     */
   def joinIndex(index: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = index.sparkSession
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val plan = index.queryExecution.optimizedPlan
-    val stored = plan match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        spark.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize))
-      case _ => None
-    }
-    val estBytes = stored.getOrElse(plan.stats.sizeInBytes)
+    val threshold = index.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val estBytes = index.queryExecution.optimizedPlan.stats.sizeInBytes
     if (threshold >= 0 && estBytes <= threshold)
       org.apache.spark.sql.functions.broadcast(index)
     else index.hint("shuffle_hash")
@@ -95,9 +86,16 @@ object Engine {
     * `checkpoint()` — round state survives executor loss and is not bound
     * by executor storage memory, which is what a 100 TB edge fact needs.
     * Same loop code either way; the toggle is pure configuration.
+    *
+    * The returned frame's size estimate is at most what the checkpoint
+    * stores: its block bytes (local) or its file bytes (reliable). Spark's
+    * own checkpoint leaf inherits the estimate of the lineage it replaced,
+    * where joins multiply sizes (the sf0.1 semdedup keeper index, 386 KB
+    * stored, estimated 3.1 PiB), so the planner would shuffle small
+    * checkpointed frames it should broadcast.
     */
   def loopCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointImpl(df, eager = true)
+    org.apache.spark.sql.GraftSqlShim.withStoredSize(checkpointImpl(df, eager = true))
 
   /** [[loopCheckpoint]] fused with the loop's convergence witness: the
     * checkpoint is created LAZY and the witness (label sum, frontier
@@ -108,13 +106,16 @@ object Engine {
     * round immediately, same contract as the eager form. Use only when a
     * witness action exists; rounds without one keep plain
     * [[loopCheckpoint]] (an unmaterialized lazy checkpoint whose inputs
-    * are freed cannot be recomputed).
+    * are freed cannot be recomputed). The returned frame's estimate is
+    * capped at its stored size as [[loopCheckpoint]]'s is, read after the
+    * witness ran.
     */
   def loopCheckpointWith[T](df: org.apache.spark.sql.DataFrame)(
       witness: org.apache.spark.sql.DataFrame => T)
       : (org.apache.spark.sql.DataFrame, T) = {
     val ck = checkpointImpl(df, eager = false)
-    (ck, witness(ck))
+    val w = witness(ck)
+    (org.apache.spark.sql.GraftSqlShim.withStoredSize(ck), w)
   }
 
   /** A lazy loop checkpoint with NO fused witness: lineage is truncated

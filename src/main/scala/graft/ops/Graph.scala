@@ -833,60 +833,83 @@ object Graph {
       .orderBy("part", "rnk")
   }
 
-  /** Hierarchy flattening: every node resolved to its ROOT and DEPTH over
-    * a parent forest (here the deterministic decimal-prefix forest on
-    * customer keys: parent(c) = c div 10 when that key exists). The
-    * transitive-closure pattern behind org charts and bill-of-materials
-    * explosions, driver-looped with one join per level — depth is bounded
-    * by the hierarchy (≈ log10 of the key domain), NOT by data volume, so
-    * the loop count is scale-free. Each round rewrites only UNRESOLVED
-    * rows; resolved rows pass through untouched, and the per-round
-    * checkpoint keeps the plan flat. The oracle walks the same forest with
-    * a recursive CTE — two different closure algorithms, one hash.
+  /** The decimal-prefix forest over `ids` (one long column `id`):
+    * parent(c) = c div 10 when that key exists, else null (a root).
+    * `p.id <> c.id` guards the degenerate self-loop at key 0 (0 div 10 = 0).
     */
-  def qHierarchyFlatten(t: Tables, maxIter: Int = 20): DataFrame = {
-    val nodes = t.customer.select(col("c_custkey").as("id"))
-    // p.id <> c.id guards the degenerate self-loop at key 0 (0 div 10 = 0)
-    val parentOf = nodes.as("c")
-      .join(nodes.as("p"), expr("p.id = c.id div 10 AND p.id <> c.id"), "left")
+  def decimalForest(ids: DataFrame): DataFrame =
+    ids.as("c")
+      .join(ids.as("p"), expr("p.id = c.id div 10 AND p.id <> c.id"), "left")
       .select(col("c.id").as("id"), col("p.id").as("parent"))
-      .loopCheckpoint()
-    var labels = parentOf.select(
-        col("id"),
-        coalesce(col("parent"), col("id")).as("anc"),
-        when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("depth"),
-        col("parent").isNull.as("done"))
-      .loopCheckpoint()
-    val anc = parentOf.toDF("anc", "anc_parent")
-    var active = labels.filter(!col("done")).count()
-    var i = 0
-    while (active > 0 && i < maxIter) {
-      val next = labels
-        .join(anc, Seq("anc"), "left")
+
+  /** Resolves a parent forest (`id`, `parent`; a null parent marks a root,
+    * and every non-null parent is itself an `id`) to (id, anc, depth):
+    * each node's root and its distance from it, by pointer jumping. Each
+    * round joins the label frame to itself on `anc = id` (the build side
+    * through [[graft.Engine.joinIndex]]) and adds the two hop distances,
+    * so every unresolved node's pointer doubles its reach; a node at depth
+    * d is resolved after floor(log2 d) + 1 rounds, not d. A round is ONE
+    * job (plus the build side's broadcast while it fits): its checkpoint
+    * is materialized by its witness, the count of nodes still unresolved
+    * ([[graft.Engine.loopCheckpointWith]]), and the superseded round is
+    * freed. The first round reads `parentOf`'s
+    * lineage directly, so the forest itself is never checkpointed. Fails
+    * when `maxIter` rounds leave a node unresolved (a forest deeper than
+    * 2^(maxIter - 1), or a cycle).
+    */
+  def resolveForest(parentOf: DataFrame, maxIter: Int = 20): DataFrame = {
+    def round(labels: DataFrame): (DataFrame, Long) = {
+      val up = labels.select(col("id").as("anc"), col("anc").as("up"),
+        col("depth").as("up_depth"), col("done").as("up_done"))
+      val next = labels.join(graft.Engine.joinIndex(up), "anc")
         .select(
           col("id"),
-          when(col("done") || col("anc_parent").isNull, col("anc"))
-            .otherwise(col("anc_parent")).as("anc"),
-          when(col("done") || col("anc_parent").isNull, col("depth"))
-            .otherwise(col("depth") + 1L).as("depth"),
-          (col("done") || col("anc_parent").isNull).as("done"))
-        .loopCheckpoint()
-      active = next.filter(!col("done")).count()
+          when(col("done"), col("anc")).otherwise(col("up")).as("anc"),
+          when(col("done"), col("depth"))
+            .otherwise(col("depth") + col("up_depth")).as("depth"),
+          (col("done") || col("up_done")).as("done"))
+      // toRdd.count sums per-partition counts on the driver: one job,
+      // where Dataset.count plans an aggregate exchange (two under AQE)
+      graft.Engine.loopCheckpointWith(next)(
+        _.filter(!col("done")).queryExecution.toRdd.count())
+    }
+    var (labels, active) = round(parentOf.select(
+      col("id"),
+      coalesce(col("parent"), col("id")).as("anc"),
+      when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("depth"),
+      col("parent").isNull.as("done")))
+    var rounds = 1
+    while (active > 0 && rounds < maxIter) {
+      val (next, stillActive) = round(labels)
       graft.Engine.freeCheckpoint(labels)
       labels = next
-      i += 1
+      active = stillActive
+      rounds += 1
     }
-    if (active > 0) throw new IllegalStateException(
-      s"qHierarchyFlatten: unresolved nodes after $maxIter levels")
-    val out = labels
+    if (active > 0) {
+      graft.Engine.freeCheckpoint(labels)
+      throw new IllegalStateException(
+        s"resolveForest: $active nodes unresolved after $maxIter rounds")
+    }
+    labels.select("id", "anc", "depth")
+  }
+
+  /** Hierarchy flattening: every node resolved to its ROOT and DEPTH over
+    * a parent forest (here [[decimalForest]] on customer keys). The
+    * transitive-closure pattern behind org charts and bill-of-materials
+    * explosions, resolved by [[resolveForest]]'s pointer jumping in
+    * floor(log2 depth) + 1 rounds of one job each — depth is bounded by the
+    * hierarchy (≈ log10 of the key domain), NOT by data volume, so the
+    * round count is scale-free. The depth-sized census (one row per
+    * level) is returned lazily over the last round's checkpoint. The
+    * oracle walks the same forest with a recursive CTE — two different
+    * closure algorithms, one hash.
+    */
+  def qHierarchyFlatten(t: Tables, maxIter: Int = 20): DataFrame =
+    resolveForest(decimalForest(t.customer.select(col("c_custkey").as("id"))), maxIter)
       .groupBy("depth")
       .agg(count(lit(1)).as("n_nodes"), countDistinct("anc").as("n_roots"))
       .orderBy("depth")
-      .loopCheckpoint()
-    graft.Engine.freeCheckpoint(labels)
-    graft.Engine.freeCheckpoint(parentOf)
-    out
-  }
 
   /** HITS hubs/authorities (two fixed mutual-reinforcement rounds) over
     * the shared co-purchase index: authority = Σ neighbor hub mass,

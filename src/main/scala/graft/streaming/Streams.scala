@@ -257,23 +257,34 @@ object Streams {
     * [[graft.load.Warehouse.upsert]]'s rename-swapped merge; re-emitted
     * windows REPLACE their previous totals, so the final table equals the
     * batch aggregation no matter how the backlog splits into batches.
-    * Returns the table as read back from the warehouse: the graded result
-    * has crossed a real sink commit, a parquet round-trip, and the merge.
+    * Returns the table's rows as read back from the warehouse: the graded
+    * result has crossed a real sink commit, a parquet round-trip, and the
+    * merge. The rows are copied out (window-cardinality sized, as the
+    * memory sink's are in [[drain]]) so the temporary warehouse is
+    * deleted before this returns, on every path.
     */
   def drainTumblingToWarehouse(
       spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val tmpRoot =
-      java.nio.file.Files.createTempDirectory("graft_stream_wh").toString
-    val wh = graft.load.Warehouse(spark, tmpRoot)
-    val streamed = tumblingCounts(eventsStream(spark, dir, globFilter))
-      .select(
-        date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
-          .as("window_start"),
-        col("event_type"), col("n"), col("sum_value"))
-    drain(spark, streamed, sink = Some(BatchSink(
-      (batch, _) =>
-        wh.upsert(batch, "hourly_counts", Seq("window_start", "event_type")),
-      () => wh.table("hourly_counts"))))
+    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_stream_wh")
+    try {
+      val wh = graft.load.Warehouse(spark, tmpRoot.toString)
+      val streamed = tumblingCounts(eventsStream(spark, dir, globFilter))
+        .select(
+          date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
+            .as("window_start"),
+          col("event_type"), col("n"), col("sum_value"))
+      drain(spark, streamed, sink = Some(BatchSink(
+        (batch, _) =>
+          wh.upsert(batch, "hourly_counts", Seq("window_start", "event_type")),
+        () => {
+          val landed = wh.table("hourly_counts")
+          import scala.jdk.CollectionConverters.SeqHasAsJava
+          spark.createDataFrame(landed.collect().toSeq.asJava, landed.schema)
+        })))
+    } finally {
+      val root = new org.apache.hadoop.fs.Path(tmpRoot.toUri)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    }
   }
 
   /** Drain-mode execution of [[distinctUsersHourly]] (see

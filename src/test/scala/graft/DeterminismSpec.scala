@@ -95,7 +95,7 @@ class DeterminismSpec extends SparkSuite {
     "q_token_budget",     // rounded-quality greedy cut, integer cumsum
     "q_interval_overlap", // hour-banded equi-join overlap counts
     "q_kcore",            // iterative peel fixpoint, integer census
-    "q_hierarchy_flatten", // level-loop closure, integer depths
+    "q_hierarchy_flatten", // pointer-jumping closure, integer depths
     "q_sssp",             // integer Bellman-Ford rounds, total-order cut
     "q_cross_corr",       // spine-aligned integer moments, rounded r
     "q_mahalanobis",      // decimal moments, rounded-d² top-k

@@ -427,6 +427,72 @@ class GraphInferenceSpec extends SparkSuite {
     assert(got == expect)
   }
 
+  /** A parent forest of exactly `depth` levels: a spine of `depth` hops
+    * from root 100 with a leaf off every spine node, plus a root 1000
+    * with two children (or, at depth 0, three lone roots).
+    */
+  private def forest(depth: Int): Seq[(Long, Option[Long])] =
+    if (depth == 0) Seq((100L, None), (101L, None), (1000L, None))
+    else
+      (0 to depth).map(i => (100L + i, if (i == 0) None else Some(99L + i))) ++
+        (0 until depth).map(i => (200L + i, Some(100L + i))) ++
+        Seq((1000L, None), (1001L, Some(1000L)), (1002L, Some(1000L)))
+
+  test("forest closure: root and depth match a driver-side walk at depths 0, 1, 5 and 9") {
+    for (d <- Seq(0, 1, 5, 9)) {
+      val f = forest(d)
+      val parent = f.toMap
+      def walk(id: Long): (Long, Long) = parent(id) match {
+        case None => (id, 0L)
+        case Some(p) => val (root, depth) = walk(p); (root, depth + 1)
+      }
+      val expect = f.map { case (id, _) => id -> walk(id) }.toMap
+      assert(expect.values.map(_._2).max == d)
+      val got = Graph.resolveForest(f.toDF("id", "parent"))
+        .as[(Long, Long, Long)].collect()
+        .map { case (id, anc, depth) => id -> (anc, depth) }.toMap
+      assert(got == expect, s"depth $d")
+    }
+  }
+
+  test("forest closure: depth 9 resolves in floor(log2 9) + 1 rounds and fails loudly with fewer") {
+    val f = forest(9).toDF("id", "parent")
+    assert(Graph.resolveForest(f, maxIter = 4).count() == forest(9).size)
+    val e = intercept[IllegalStateException](Graph.resolveForest(f, maxIter = 3))
+    assert(e.getMessage.contains("unresolved after 3 rounds"), e.getMessage)
+  }
+
+  test("hierarchy flatten: construction runs at most 6 Spark jobs") {
+    // jobs tagged with this test's job group, counted by a listener; a
+    // marker job in another group, seen by the same listener after them,
+    // drains the (in-order) listener bus
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("hierarchy-construct") => jobs.incrementAndGet()
+          case Some("hierarchy-marker") => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("hierarchy-construct", "construction")
+      val df = SparkEntry.queries("q_hierarchy_flatten")(spark, sfDir)
+      sc.setJobGroup("hierarchy-marker", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      info(s"construction jobs: ${jobs.get}")
+      assert(jobs.get <= 6, s"construction ran ${jobs.get} jobs")
+      assert(df.collect().nonEmpty)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("mann-whitney: doubled-rank U equals a driver-side rank-sum") {
     val vals = tables.lineitem
       .filter(col("l_returnflag").isin("R", "A"))

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
+import scala.jdk.CollectionConverters._
+
 /** Plan-shape regression tests: the scale-critical properties PLANS.md
   * documents, enforced. If an optimizer change or refactor reintroduces a
   * fact-table shuffle, drops a pushdown, or de-broadcasts a dimension,
@@ -795,5 +797,59 @@ class PlanAuditSpec extends SparkSuite {
     assert(!p.contains("CartesianProduct"), s"decision join went cartesian:\n$p")
     assert("\\(\\d+\\) Window".r.findAllIn(p).length <= 1,
       s"extra window spec:\n$p")
+  }
+
+  test("a materialized loop checkpoint reports its stored bytes as its size, in both checkpoint modes") {
+    import org.apache.spark.sql.functions._
+    // a join lineage: Spark's estimate multiplies the two sides' sizes
+    def lineage = tables.orders
+      .join(tables.lineitem, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_orderkey"), col("l_partkey"), col("l_quantity"))
+    def storedBytes(df: org.apache.spark.sql.DataFrame): Long = {
+      val rdd = df.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.get
+      rdd.getCheckpointFile match {
+        case Some(dir) =>
+          val files = java.nio.file.Files.walk(
+            java.nio.file.Paths.get(new java.net.URI(dir)))
+          try files.iterator.asScala
+            .filter(f => java.nio.file.Files.isRegularFile(f) &&
+              !f.getFileName.toString.endsWith(".crc"))
+            .map(java.nio.file.Files.size).sum
+          finally files.close()
+        case None =>
+          // the storage status reaches the status store through the
+          // listener bus, so poll until the checkpoint's blocks show
+          val deadline = System.nanoTime() + 10000000000L
+          var bytes = 0L
+          while (bytes == 0L && System.nanoTime() < deadline) {
+            bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+              .map(i => i.memSize + i.diskSize).getOrElse(0L)
+            if (bytes == 0L) Thread.sleep(50)
+          }
+          bytes
+      }
+    }
+    def assertSized(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val stored = storedBytes(df)
+      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(stored > 0, s"$what: nothing stored")
+      assert(est <= BigInt(stored) * 2 && est * 2 >= BigInt(stored),
+        s"$what: estimate $est bytes, stored $stored bytes")
+      assert(lineage.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(stored) * 100,
+        s"$what: the lineage estimate is not inflated; the check shows nothing")
+      Engine.freeCheckpoint(df)
+    }
+    for (reliable <- Seq(false, true)) {
+      val mode = if (reliable) "reliable" else "local"
+      if (reliable) spark.conf.set("spark.graft.checkpoint.reliable", "true")
+      try {
+        assertSized(s"$mode loopCheckpoint", Engine.loopCheckpoint(lineage))
+        val (ck, n) = Engine.loopCheckpointWith(lineage)(_.count())
+        assert(n > 0)
+        assertSized(s"$mode loopCheckpointWith", ck)
+      } finally spark.conf.unset("spark.graft.checkpoint.reliable")
+    }
   }
 }

@@ -342,6 +342,20 @@ class StreamsSpec extends SparkSuite {
     fromWh.zip(batch).foreach { case (a, b) => assert(a == b) }
   }
 
+  test("warehouse upsert drain deletes its temporary warehouse and keeps its rows") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def whDirs(): Set[String] =
+      Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_stream_wh")).toSet
+    val before = whDirs()
+    val fromWh = SparkEntry.queries("q_stream_upsert")(spark, sfDir)
+    val left = whDirs() -- before
+    assert(left.isEmpty, s"warehouse drain left $left in $tmp")
+    // the rows were copied out before the delete: still readable, and
+    // equal to the batch tumbling aggregate
+    val batch = SparkEntry.queries("q_tumbling_window")(spark, sfDir)
+    assert(fromWh.collect().toSeq == batch.collect().toSeq)
+  }
+
   test("drained streaming rate limiter equals the batch admission stats") {
     val streamed = Streams.drainRateLimit(spark, sfDir, "events.parquet")
       .collect().toSeq
