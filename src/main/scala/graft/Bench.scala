@@ -308,9 +308,9 @@ object Bench {
             .orderBy("event_id"))
         }),
         // range-partitioned contiguous-id family (q_assign_ids 14.1x):
-        // non-default partition count
+        // non-default decimation
         "assign_sibling" -> (() =>
-          mat(ext.Sampling.qAssignIds(t, parts = 5))),
+          mat(ext.Sampling.qAssignIds(t, every = 41))),
         // experiment-stats family (q_did 10.7x, q_ab_srm): DiD at a
         // non-default variant count; SRM shape over the ORDERS customer
         // universe instead of event users

@@ -33,7 +33,7 @@ object Engine {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     graft.functions.GraftFunctions.register(spark)
-    graft.plans.AsOfJoinPlan.install(spark)
+    graft.plans.install(spark, graft.plans.AsOfJoinStrategy)
     // banded range-join rewrite (plans.BandRangeJoin): idempotent append
     if (!spark.experimental.extraOptimizations.contains(graft.plans.BandRangeJoin))
       spark.experimental.extraOptimizations =

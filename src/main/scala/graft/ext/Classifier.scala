@@ -350,9 +350,8 @@ object Classifier {
     * Exactness: each precision@k is one IEEE division of exact integers,
     * pinned at 1e-9 into DECIMAL before the order-free sum.
     *
-    * Scale: one global rank window — the documented exact-ranking bound
-    * ([[Stats]] header); at 100 TB the two-pass qAssignIds offset pattern
-    * replaces the window, same semantics.
+    * Scale: the rank and the running positive count come from the
+    * [[graft.ops.Prefix]] operator — no single-partition window.
     */
   def qPrAuc(t: Tables): DataFrame = {
     // rank + running positive count via the two-pass prefix (guide

@@ -400,40 +400,22 @@ object Sampling {
 
   /** Global contiguous id assignment in content-hash order — the
     * "stable document ids for a 100 TB corpus" primitive, WITHOUT a
-    * single-partition ranking window. Two passes, the production shape:
-    * range-partition + sort on the deterministic key, count rows per
-    * partition (one scalar each to the driver), prefix-sum the offsets,
-    * then assign id = partition offset + local position map-side. The
-    * ids equal the global rank REGARDLESS of where the range sampler
-    * placed partition boundaries, so the result is a pure function of
-    * the data — and hash-matches the oracle's row_number over the same
-    * order. (The per-partition counter is genuine imperative
-    * per-partition logic — the one place mapPartitions is the right
-    * tool.) Output decimated to every 37th id for compare compactness.
+    * single-partition ranking window: the id is the row number of the
+    * [[graft.ops.Prefix]] operator over the deterministic (content hash,
+    * doc_id) order (range partition + sort, per-partition counts folded
+    * into offsets, then id = partition offset + local position). The ids
+    * equal the global rank REGARDLESS of where the range sampler placed
+    * partition boundaries, so the result is a pure function of the data —
+    * and hash-matches the oracle's row_number over the same order. Output
+    * decimated to every `every`-th id for compare compactness.
     */
-  def qAssignIds(t: Tables, parts: Int = 8): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    val sorted = t.documents
-      .select(col("doc_id"), hashKey("text", "doc_id").as("skey"))
-      .repartitionByRange(parts, col("skey"), col("doc_id"))
-      .sortWithinPartitions("skey", "doc_id")
-      .select(col("doc_id"))
-      .as[Long]
-    val counts = sorted.rdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    sorted.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var k = bc.value(i) - 1
-        it.map { id => k += 1; (id, k) }
-      }
-      .toDF("doc_id", "gid")
-      .filter(pmod(col("gid"), lit(37)) === 0)
+  def qAssignIds(t: Tables, every: Int = 37): DataFrame =
+    graft.ops.Prefix.running(
+        t.documents.select(col("doc_id"), hashKey("text", "doc_id").as("skey")),
+        Seq(col("skey"), col("doc_id")), Nil, rowNumber = Some("rn"))
+      .select(col("doc_id"), (col("rn") - 1L).as("gid"))
+      .filter(pmod(col("gid"), lit(every)) === 0)
       .orderBy("gid")
-  }
 
   /** Token-budget-constrained corpus selection: greedily admit documents in
     * (quality desc, doc_id) order until the running token total exceeds the
@@ -444,43 +426,23 @@ object Sampling {
     * Exactness: quality is rounded at 1e-9 BEFORE the ordering so both
     * engines sort the same key (doc_id breaks the residual ties), and the
     * admission cut runs on an integer token cumsum. Scale shape: scoring is
-    * map-side, and the greedy cumsum is [[qAssignIds]]' two-pass
-    * range-partition + per-partition-offset pattern — NOT a
-    * single-partition ranking window: range-partition on the greed key,
-    * one token subtotal per partition to the driver, prefix-sum the
-    * offsets, then each partition extends its own running total from its
-    * offset. The cumsum is a pure function of the total order, so the
+    * map-side, and the greedy cumsum is a [[graft.ops.Prefix]] running sum
+    * over the greed key — NOT a single-partition ranking window. The
+    * budget is half the corpus's tokens (integer div — scale-relative, so
+    * the query is meaningful at every sf), read off the same operator's
+    * grand total. The cumsum is a pure function of the total order, so the
     * result is partition-placement-independent and hash-matches the
     * oracle's global window.
     */
-  def qTokenBudget(t: Tables, parts: Int = 8): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
+  def qTokenBudget(t: Tables): DataFrame = {
     val scored = t.documents.select(
       col("doc_id"), col("source"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
       round(TextAnalysis.qualityExpr(col("text")), 9).as("q"))
-    val sorted = scored
-      .repartitionByRange(parts, col("q").desc, col("doc_id"))
-      .sortWithinPartitions(col("q").desc, col("doc_id"))
-      .as[(Long, String, Long, Double)]
-    val subtotals = sorted.rdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.map(_._3).sum)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = subtotals.scanLeft(0L)(_ + _)
-    // budget = half the corpus's tokens (integer div — scale-relative, so
-    // the query is meaningful at every sf). The corpus total is the last
-    // prefix-sum offset the cumsum pass already collected — no separate
-    // aggregate action for the scalar.
-    val budget = offsets.last / 2
-    val bc = spark.sparkContext.broadcast(offsets)
-    sorted.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var cum = bc.value(i)
-        it.map { case (id, src, tok, q) => cum += tok; (id, src, tok, q, cum) }
-      }
-      .toDF("doc_id", "source", "n_tokens", "q", "cum_tokens")
-      .filter(col("cum_tokens") <= budget)
+    graft.ops.Prefix.running(scored, Seq(col("q").desc, col("doc_id")),
+        Seq(graft.ops.Prefix.Running("cum_tokens", col("n_tokens"),
+          grandTotal = Some("corpus_tokens"))))
+      .filter(col("cum_tokens") <= expr("corpus_tokens div 2"))
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -587,8 +549,8 @@ object Sampling {
     * loop), emitting the per-bin manifest a compactor would execute.
     * The running sum is windowed PER LANGUAGE — the write-partition key —
     * so no global order exists anywhere; a pathological single-language
-    * corpus falls back to the [[qAssignIds]] two-pass range-partition
-    * pattern. Byte sizes are octet_length (UTF-8 on-disk bytes), exact on
+    * corpus falls back to the [[graft.ops.Prefix]] range-partitioned
+    * running sum. Byte sizes are octet_length (UTF-8 on-disk bytes), exact on
     * both engines.
     */
   def qCompactionPlan(t: Tables, targetBytes: Long = 65536L): DataFrame = {

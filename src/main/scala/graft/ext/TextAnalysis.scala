@@ -1498,7 +1498,9 @@ object TextAnalysis {
   def qRankFusion(
       t: Tables, terms: Seq[String] = Seq("join", "filter", "window"),
       k: Int = 10): DataFrame = {
-    val wRank = Window.orderBy(col("score").desc, col("doc_id"))
+    // ranks by the prefix operator's row number over (score desc, doc_id),
+    // not a single-partition rank window
+    val byScore = Seq(col("score").desc, col("doc_id"))
     // Round 10: the tf·idf run re-derives from the SAME checkpointed
     // candidate (doc, term, tf) frame as the BM25 run — its tf counts and
     // doc-frequency counts are the identical integers the old separate
@@ -1506,12 +1508,11 @@ object TextAnalysis {
     // frame), so one candidate pass now feeds both rankers (previously:
     // three corpus tokenizes here + two inside bm25Scores).
     val (tfCk, scores) = bm25Parts(t, terms)
-    val bm25 = scores
-      .withColumn("r1", row_number().over(wRank).cast("long"))
+    val bm25 = graft.ops.Prefix.running(scores, byScore, Nil, rowNumber = Some("r1"))
       .select("doc_id", "r1")
     val n = graft.Engine.spread(t.documents).agg(count(lit(1)).as("n"))
     val df = tfCk.groupBy("word").agg(count(lit(1)).as("df"))
-    val tfidf = tfCk.select("doc_id", "word", "tf")
+    val tfidfScores = tfCk.select("doc_id", "word", "tf")
       .join(broadcast(df), "word")
       .crossJoin(broadcast(n))
       .withColumn("w",
@@ -1519,7 +1520,7 @@ object TextAnalysis {
           .cast("decimal(28,9)"))
       .groupBy("doc_id")
       .agg(sum(col("tf").cast("decimal(10,0)") * col("w")).as("score"))
-      .withColumn("r2", row_number().over(wRank).cast("long"))
+    val tfidf = graft.ops.Prefix.running(tfidfScores, byScore, Nil, rowNumber = Some("r2"))
       .select("doc_id", "r2")
     bm25.join(tfidf, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("r1"), col("r2"),

@@ -89,6 +89,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.PrefixStrategy)
     e.injectOptimizerRule(_ => graft.plans.BandRangeJoin)
   }
 }

@@ -2023,26 +2023,26 @@ object Stats {
     * rank ⌈q·n⌉) picked by integer rank arithmetic — no interpolation, so
     * both engines return an actual data value, bit-identical.
     *
-    * Scale: one rank window per side, partitioned by source (the corpus
-    * side reuses the same shape with a constant key — corpus-wide sort,
-    * the documented bound every exact-quantile statistic here accepts;
-    * at 100 TB the grid would come from approx_percentile or a
-    * t-digest merge instead, traded against the exactness contract).
+    * Scale: the per-source ranks are a window partitioned by source; the
+    * corpus-wide ranks come from the [[graft.ops.Prefix]] operator (range
+    * partition + offsets), not a single-partition window.
     */
   def qQqDrift(t: Tables): DataFrame = {
     val grid = (1 to 9).map(_ * 10L)
-    def ranked(df: DataFrame, key: Column, tag: String): DataFrame = {
-      val w = Window.partitionBy("k").orderBy(col("n_chars"), col("doc_id"))
-      df.select(key.as("k"), col("n_chars"), col("doc_id"))
-        .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("k")))
-        // the 9-point grid is config: a per-row array literal, no join
-        .withColumn("q", explode(array(grid.map(lit(_)): _*)))
-        .filter(col("i") === expr("CAST((q * n + 99) div 100 AS BIGINT)"))
-        .select(col("k"), col("q"), col("n_chars").as(tag))
-    }
-    val bySource = ranked(t.documents, col("source"), "source_len")
-    val corpus = ranked(t.documents, lit("__all__"), "corpus_len")
+    val lengths = t.documents.select(col("source"), col("n_chars"), col("doc_id"))
+    // rows with rank i of n -> the grid points whose type-1 rank is i
+    def picked(ranked: DataFrame, tag: String): DataFrame = ranked
+      // the 9-point grid is config: a per-row array literal, no join
+      .withColumn("q", explode(array(grid.map(lit(_)): _*)))
+      .filter(col("i") === expr("CAST((q * n + 99) div 100 AS BIGINT)"))
+      .select(col("source"), col("q"), col("n_chars").as(tag))
+    val w = Window.partitionBy("source").orderBy(col("n_chars"), col("doc_id"))
+    val bySource = picked(lengths
+      .withColumn("i", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("source"))), "source_len")
+      .withColumnRenamed("source", "k")
+    val corpus = picked(Prefix.running(lengths, Seq(col("n_chars"), col("doc_id")), Nil,
+        rowNumber = Some("i"), totalCount = Some("n")), "corpus_len")
       .select(col("q"), col("corpus_len"))
     bySource
       .join(broadcast(corpus), "q")

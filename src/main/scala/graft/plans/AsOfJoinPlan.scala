@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.Strategy
 
 /** As-of join as a first-class operator: logical node + planner strategy +
@@ -158,13 +157,6 @@ case class AsOfJoinExec(
 
 object AsOfJoinPlan {
 
-  /** Install the strategy on an existing session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsOfJoinStrategy.type]))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** User-facing as-of join on the custom operator: resolves the named
     * columns against the analyzed child plans and plants the logical node.
     */
@@ -177,7 +169,7 @@ object AsOfJoinPlan {
       rightVals: Seq[String],
       rightTiebreak: String): org.apache.spark.sql.DataFrame = {
     val spark = left.sparkSession
-    install(spark)
+    install(spark, AsOfJoinStrategy)
     val lp = left.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =
       p.output.find(_.name == name).getOrElse(

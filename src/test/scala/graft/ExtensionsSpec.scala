@@ -41,6 +41,33 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
+  test("a session built only with GraftExtensions plans a PrefixExec") {
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new graft.functions.GraftExtensions())
+      .getOrCreate()
+    try {
+      import org.apache.spark.sql.functions.col
+      val df = graft.ops.Prefix.running(
+        s2.range(20).toDF("id"), Seq(col("id")), Nil, rowNumber = Some("rn"))
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        (0L until 20L).map(i => (i, i + 1)))
+      val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      assert(stages.find(df.queryExecution.executedPlan)(
+        _.isInstanceOf[graft.plans.PrefixExec]).isDefined,
+        s"no PrefixExec:\n${df.queryExecution.executedPlan}")
+      // planned through the extension: Prefix.running's install saw the
+      // injected strategy and added nothing
+      assert(!s2.experimental.extraStrategies.contains(graft.plans.PrefixStrategy))
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
   test("src/main reads exactly the four spark.graft conf keys") {
     // a conf key that only re-picks a code path is a second mechanism for
     // one decision; a new key must be added here on purpose

@@ -408,10 +408,10 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("token budget: two-pass cumsum — no event-volume window, no global sort in the final plan") {
-    // the greedy cumsum runs as range-partition + per-partition offsets
-    // (qAssignIds' shape); the final plan over the cumsum RDD must carry
-    // NO window at all (the old single-partition Window.orderBy shape) and
-    // only the rollup + presentation exchanges
+    // the greedy cumsum runs as the ops.Prefix operator (range partition
+    // + per-partition offsets); the final plan must carry NO window at all
+    // (the old single-partition Window.orderBy shape) and only the prefix's
+    // range exchange plus the rollup + presentation exchanges
     val p = formatted("q_token_budget")
     assert(!p.contains("Window"), s"cumsum regressed to a window:\n$p")
     assert(shuffleCount(p) <= 3, s"too many exchanges:\n$p")
@@ -652,34 +652,100 @@ class PlanAuditSpec extends SparkSuite {
       "no map-side partial for the per-query top-k")
   }
 
-  test("prefix: the executed plan runs the range shuffle once and reuses it") {
-    // ops.Prefix's local-running and totals branches must read ONE range
-    // shuffle: planned twice, the two range partitioners sample on their
-    // own, `_pfx_pid` diverges between the branches and running values
-    // come out wrong. Checked on the final AQE plan after execution.
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node of a physical plan: through adaptive wrappers, query
+    * stages and subqueries.
+    */
+  private def planNodes(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case s: QueryStageExec => s +: planNodes(s.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
+    }
+  }
+
+  test("prefix: q_pr_auc runs one PrefixExec over one range shuffle") {
+    // ops.Prefix is one operator: it requires an ordered distribution, so
+    // EnsureRequirements plans ONE range exchange, and both of its jobs
+    // read that shuffle. No `_pfx_pid` hash exchange, no window, no
+    // broadcast, and no reliance on exchange reuse. Checked on the final
+    // AQE plan after execution.
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
     val df = SparkEntry.queries("q_pr_auc")(spark, sfDir)
     df.collect()
     val root = df.queryExecution.executedPlan
     assert(root.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan, s"not final:\n$root")
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => s +: nodes(s.plan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    val all = planNodes(root)
+    val prefixes = all.collect { case p: graft.plans.PrefixExec => p }
+    assert(prefixes.size == 1, s"expected one PrefixExec, got ${prefixes.size}:\n$root")
+    val rangeShuffles = all.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
-    def ranged(p: SparkPlan): Boolean = p match {
-      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
-      case _ => false
-    }
-    val all = nodes(root)
-    val rangeShuffles = all.filter(ranged)
-    val reused = all.collect { case r: ReusedExchangeExec if ranged(r.child) => r }
     assert(rangeShuffles.size == 1,
       s"expected one range shuffle, got ${rangeShuffles.size}:\n$root")
-    assert(reused.nonEmpty, s"range shuffle not reused:\n$root")
+    val pidShuffles = all.collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.references.exists(_.name == "_pfx_pid")
+        case _ => false
+      }) => e
+    }
+    assert(pidShuffles.isEmpty, s"_pfx_pid hash exchange:\n$root")
+    val under = planNodes(prefixes.head)
+    assert(!under.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"broadcast under the prefix:\n$root")
+    assert(!under.exists(_.isInstanceOf[WindowExec]), s"window under the prefix:\n$root")
+  }
+
+  test("no registry plan holds an unpartitioned window outside the bounded-input allowlist") {
+    // `Window.orderBy` without a partition key runs every row through one
+    // task. Allowed only where the window's input is bounded by
+    // construction (a fixed number of bins, deciles, variants or
+    // candidates); fact-scaling ranks and running sums use ops.Prefix.
+    // Streaming drains and the pipeline run are not planned here.
+    import org.apache.spark.sql.execution.window.WindowExec
+    val bounded = Map(
+      "q_abc_class" -> "3 class rows",
+      "q_autocorr" -> "one row per calendar day",
+      "q_benford" -> "9 leading digits",
+      "q_decile_lift" -> "10 decile rows",
+      "q_did" -> "2 variant rows",
+      "q_dow_hour_heatmap" -> "168 weekday-hour cells",
+      "q_dup_size_hist" -> "distinct duplicate multiplicities",
+      "q_dwell_time" -> "event-type rows",
+      "q_emd_drift" -> "fixed-width length bins",
+      "q_ewma" -> "one row per day of one quarter",
+      "q_fdr_bh" -> "25 nation tests",
+      "q_importance_weights" -> "a configured number of hash buckets",
+      "q_isotonic_calibration" -> "a configured number of score bins",
+      "q_kaplan_meier" -> "distinct durations in days",
+      "q_lorenz" -> "10 decile rows",
+      "q_mannwhitney" -> "50 l_quantity values",
+      "q_mutual_info" -> "(lang, source) cells",
+      "q_poisson_bootstrap" -> "a configured number of replicas",
+      "q_qini_curve" -> "10 decile rows",
+      "q_rolling_corr" -> "one row per calendar day",
+      "q_session_concurrency" -> "24 hour-of-day totals",
+      "q_shard_skew" -> "a configured number of shards",
+      "q_slo_burn" -> "one row per calendar day",
+      "q_var_cvar" -> "one row per calendar day",
+      "q_zipf_slope" -> "the top 500 words")
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(n => n.startsWith("q_stream_") || n == "pipeline_health")
+    val found = names.filter { n =>
+      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan
+      planNodes(plan).exists {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _ => false
+      }
+    }
+    val outside = found.toSet -- bounded.keySet
+    assert(outside.isEmpty, s"unpartitioned windows outside the allowlist: ${outside.toSeq.sorted}")
+    val stale = bounded.keySet -- found
+    assert(stale.isEmpty, s"allowlisted queries no longer hold one: ${stale.toSeq.sorted}")
   }
 
   test("semDedup serve: keeper index broadcast by default, conf-switched shuffled join, same verdicts") {

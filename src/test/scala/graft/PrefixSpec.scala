@@ -29,6 +29,10 @@ class PrefixSpec extends SparkSuite {
   }
 
   test("running long sums (incl + excl), rowNumber, totals match the global window") {
+    checkLongSums()
+  }
+
+  private def checkLongSums(): Unit = {
     val df = frame(1000)
     val sort = Seq(col("v"), col("id"))
     val got = Prefix.running(df, sort,
@@ -56,6 +60,10 @@ class PrefixSpec extends SparkSuite {
   }
 
   test("running decimal sum matches the global window in value AND type") {
+    checkDecimalSum()
+  }
+
+  private def checkDecimalSum(): Unit = {
     val df = frame(500)
     val sort = Seq(col("dec").desc, col("id"))
     val got = Prefix.running(df, sort,
@@ -69,6 +77,10 @@ class PrefixSpec extends SparkSuite {
   }
 
   test("exclusive running max matches the global window (incl. leading nulls)") {
+    checkExclusiveMax()
+  }
+
+  private def checkExclusiveMax(): Unit = {
     val df = frame(300).groupBy("v").agg(max("y").as("gq"))
     val got = Prefix.running(df, Seq(col("v")),
       Seq(Prefix.Running("m_lt", col("gq"), inclusive = false, isMax = true)))
@@ -80,6 +92,10 @@ class PrefixSpec extends SparkSuite {
   }
 
   test("ntile bucket arithmetic over the prefix rank matches ntile()") {
+    checkNtile()
+  }
+
+  private def checkNtile(): Unit = {
     for (n <- Seq(3, 4, 10, 41, 1000); buckets <- Seq(4, 10)) {
       val df = frame(n)
       val sort = Seq(col("v"), col("id"))
@@ -98,6 +114,63 @@ class PrefixSpec extends SparkSuite {
       assert(got.select("id", "tile").orderBy("id").collect().toSeq ==
         want.select("id", "tile").orderBy("id").collect().toSeq,
         s"n=$n buckets=$buckets")
+    }
+  }
+
+  /** Run `body` with the given session confs, restoring them after. */
+  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def checkAll(): Unit = {
+    checkLongSums()
+    checkDecimalSum()
+    checkExclusiveMax()
+    checkNtile()
+  }
+
+  test("prefix results are unchanged with exchange reuse off") {
+    // both of the operator's jobs read one shuffle; nothing rests on
+    // ReuseExchange planning two range exchanges as one
+    withConf("spark.sql.exchange.reuse" -> "false")(checkAll())
+  }
+
+  test("prefix results are unchanged with AQE partition coalescing off") {
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(checkAll())
+  }
+
+  test("prefix results are unchanged without AQE, on more partitions than rows") {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "37")(checkAll())
+  }
+
+  test("grand totals keep the window formulation's types; float sums are rejected") {
+    val df = frame(200).withColumn("d12", col("dec").cast("decimal(12,2)"))
+    val got = Prefix.running(df, Seq(col("v"), col("id")),
+      Seq(
+        Prefix.Running("cum_dec", col("d12"), grandTotal = Some("tot_dec")),
+        Prefix.Running("max_y", col("y").cast("int"), isMax = true,
+          grandTotal = Some("tot_max"))),
+      totalCount = Some("n"))
+    // the window formulation folded per-partition sums into the grand
+    // total, so its type is a sum of sums
+    val want = df.groupBy("v")
+      .agg(sum("d12").as("s"), max(col("y").cast("int")).as("m"), count(lit(1)).as("c"))
+      .agg(sum("s").as("tot_dec"), max("m").as("tot_max"), sum("c").as("n"))
+    val totals = Seq("tot_dec", "tot_max", "n")
+    assert(got.schema("cum_dec").dataType == DecimalType(22, 2))
+    assert(got.schema("max_y").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(totals.map(got.schema(_).dataType) == totals.map(want.schema(_).dataType))
+    assert(got.select(totals.map(col): _*).distinct().collect().toSeq == want.collect().toSeq)
+    intercept[IllegalArgumentException] {
+      Prefix.running(df, Seq(col("v"), col("id")),
+        Seq(Prefix.Running("cum_f", col("y").cast("double"))))
     }
   }
 

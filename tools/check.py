@@ -3,9 +3,14 @@
 engine). Reads Verify output parquet + oracle_sql.json, runs each oracle in
 DuckDB over the same sf dir, and compares values column-by-column.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
+Usage: python3 tools/check.py [--jobs N] <sfDir> <verifyOutDir> [query ...]
+
+--jobs N runs the oracles in N worker processes, each with its own DuckDB
+connection; the report stays sorted by query name. An oracle whose DuckDB
+run takes over 30 s has its seconds appended to its line.
 """
-import json, math, sys
+import argparse, json, sys, time
+from multiprocessing import Pool
 import duckdb
 import pyarrow.parquet as pq
 import pandas as pd
@@ -62,34 +67,71 @@ def compare(name, s, d, failed):
     return f"{name}: OK ({len(s)} rows, {len(s.columns)} cols)"
 
 
-def main():
-    sfdir, outdir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
-    con = duckdb.connect()
+SLOW_S = 30.0
+_con = None
+_outdir = None
+_failed = None
+
+
+def _init(sfdir, outdir, failed):
+    """One DuckDB connection per process, with a view per table."""
+    global _con, _outdir, _failed
+    _con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
-    oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+        _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+    _outdir, _failed = outdir, failed
+
+
+def check_one(item):
+    """(name, sql) -> (report line, ok)."""
+    name, sql = item
+    t0 = time.monotonic()
+    try:
+        d = _con.execute(sql).df()
+    except Exception as e:
+        return f"{name}: DUCKDB ERROR {e}", False
+    secs = time.monotonic() - t0
+    msg = compare(name, load_spark(_outdir, name), d, _failed)
+    ok = ": OK" in msg
+    if secs > SLOW_S:
+        msg += f" [duckdb {secs:.1f} s]"
+    return msg, ok
+
+
+def main():
+    ap = argparse.ArgumentParser(description="compare Verify output with the DuckDB oracles")
+    ap.add_argument("--jobs", type=int, default=1, help="worker processes (default 1)")
+    ap.add_argument("sfdir")
+    ap.add_argument("outdir")
+    ap.add_argument("query", nargs="*")
+    args = ap.parse_args()
+    only = set(args.query)
+    oracles = json.load(open(f"{args.outdir}/oracle_sql.json"))
     # Verify records each query that threw (name -> "class: message")
     try:
-        failed = json.load(open(f"{outdir}/failed.json"))
+        failed = json.load(open(f"{args.outdir}/failed.json"))
     except FileNotFoundError:
         failed = {}
+    items = [(n, q) for n, q in sorted(oracles.items()) if not only or n in only]
     ok = bad = 0
-    for name, sql in sorted(oracles.items()):
-        if only and name not in only:
-            continue
-        try:
-            d = con.execute(sql).df()
-        except Exception as e:
-            print(f"{name}: DUCKDB ERROR {e}")
-            bad += 1
-            continue
-        msg = compare(name, load_spark(outdir, name), d, failed)
-        print(msg)
-        if ": OK" in msg:
-            ok += 1
-        else:
-            bad += 1
+    if args.jobs > 1:
+        pool = Pool(args.jobs, _init, (args.sfdir, args.outdir, failed))
+        results = pool.imap(check_one, items)
+    else:
+        pool = None
+        _init(args.sfdir, args.outdir, failed)
+        results = map(check_one, items)
+    try:
+        for msg, good in results:
+            print(msg, flush=True)
+            if good:
+                ok += 1
+            else:
+                bad += 1
+    finally:
+        if pool is not None:
+            pool.close()
+            pool.join()
     print(f"\n{ok} ok, {bad} bad")
     sys.exit(1 if bad else 0)
 
