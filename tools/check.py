@@ -69,22 +69,30 @@ def compare(name, s, d, failed):
 
 SLOW_S = 30.0
 _con = None
+_con_error = None
 _outdir = None
 _failed = None
 
 
 def _init(sfdir, outdir, failed):
-    """One DuckDB connection per process, with a view per table."""
-    global _con, _outdir, _failed
-    _con = duckdb.connect()
-    for t in TABLES:
-        _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+    """One DuckDB connection per process, with a view per table. A failure is
+    kept and reported per oracle: a pool initializer that raises is restarted
+    without end."""
+    global _con, _con_error, _outdir, _failed
     _outdir, _failed = outdir, failed
+    try:
+        _con = duckdb.connect()
+        for t in TABLES:
+            _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+    except Exception as e:
+        _con_error = e
 
 
 def check_one(item):
     """(name, sql) -> (report line, ok)."""
     name, sql = item
+    if _con_error is not None:
+        return f"{name}: DUCKDB ERROR {_con_error}", False
     t0 = time.monotonic()
     try:
         d = _con.execute(sql).df()
@@ -114,24 +122,13 @@ def main():
         failed = {}
     items = [(n, q) for n, q in sorted(oracles.items()) if not only or n in only]
     ok = bad = 0
-    if args.jobs > 1:
-        pool = Pool(args.jobs, _init, (args.sfdir, args.outdir, failed))
-        results = pool.imap(check_one, items)
-    else:
-        pool = None
-        _init(args.sfdir, args.outdir, failed)
-        results = map(check_one, items)
-    try:
-        for msg, good in results:
+    with Pool(args.jobs, _init, (args.sfdir, args.outdir, failed)) as pool:
+        for msg, good in pool.imap(check_one, items):
             print(msg, flush=True)
             if good:
                 ok += 1
             else:
                 bad += 1
-    finally:
-        if pool is not None:
-            pool.close()
-            pool.join()
     print(f"\n{ok} ok, {bad} bad")
     sys.exit(1 if bad else 0)
 
