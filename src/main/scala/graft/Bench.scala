@@ -262,11 +262,10 @@ object Bench {
         // query runs parallel) into its own temp warehouse — compiles
         // the generator/clean/transform/coerce/load plans end-to-end
         "etl_sibling" -> (() => {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_warm_wh").toString
-          val wh = load.Warehouse(spark, tmp)
-          new orchestrate.Orchestrator(spark, wh)
-            .runPipeline("warm_run", parallel = false)
+          Engine.withTempDir(spark, "graft_warm_wh") { root =>
+            new orchestrate.Orchestrator(spark, load.Warehouse(spark, root))
+              .runPipeline("warm_run", parallel = false)
+          }
           1L
         }),
         // TPC-H Q1 shape (q1_agg 8.3x): the same decimal-sum/avg/count

@@ -13,12 +13,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Runtime confs applied to any session (settable post-construction).
-    * Idempotent per session: every query entry point constructs a
-    * [[Tables]] (whose ctor calls tune), so a 241-query bench run would
-    * otherwise re-register ~30 native functions and re-install the plan
-    * extensions 241 times — pure fixed cost, plus a WARN line per
-    * re-registration that floods the harness's captured output.
+  /** Runtime confs applied to any session (settable post-construction),
+    * plus [[graft.functions.GraftExtensions]] applied in place when the
+    * caller built the session without it: the planner then lacks
+    * `PrefixStrategy`. Idempotent per session through the `graft.tuned`
+    * latch, since every [[Tables]] constructor calls it.
     */
   def tune(spark: SparkSession): SparkSession = {
     if (spark.conf.getOption("graft.tuned").contains("1")) return spark
@@ -32,12 +31,8 @@ object Engine {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    graft.functions.GraftFunctions.register(spark)
-    graft.plans.install(spark, graft.plans.AsOfJoinStrategy)
-    // banded range-join rewrite (plans.BandRangeJoin): idempotent append
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.BandRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.BandRangeJoin
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.PrefixStrategy))
+      org.apache.spark.sql.GraftSqlShim.applyExtensions(spark, new graft.functions.GraftExtensions)
     spark.conf.set("graft.tuned", "1")
     spark
   }
@@ -233,9 +228,23 @@ object Engine {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
+  }
+
+  /** Run `f` on a new temporary directory and delete the directory when
+    * `f` ends, on every path. Only for work whose result no longer reads
+    * the directory once `f` returns (driver-side rows).
+    */
+  def withTempDir[T](spark: SparkSession, prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally {
+      val root = new org.apache.hadoop.fs.Path(dir.toUri)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    }
   }
 
   /** Configured parallelism: $SPARK_GRAFT_CPUS, else the processor count. */

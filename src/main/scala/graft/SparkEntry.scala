@@ -32,13 +32,15 @@ object SparkEntry {
   /** Reference pipeline end-to-end: runs the six deterministic generator
     * sources through clean/transform/coerce/load into a temp warehouse and
     * returns the health table (deterministic columns only). No SQL oracle —
-    * generators exist only in this engine (rows-only check).
+    * generators exist only in this engine (rows-only check). The health
+    * rows are driver-side once the run ends, so the warehouse is deleted
+    * before this returns.
     */
   private def pipelineHealth(t: Tables): DataFrame = {
     val spark = t.spark
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    val wh = Warehouse(spark, tmp)
-    val run = new Orchestrator(spark, wh).runPipeline("verify_run", parallel = true)
+    val run = Engine.withTempDir(spark, "graft_wh") { root =>
+      new Orchestrator(spark, Warehouse(spark, root)).runPipeline("verify_run", parallel = true)
+    }
     import spark.implicits._
     run.metrics
       .map(m => (m.sourceName, m.sourceType, m.status, m.recordsIn, m.recordsOut))

@@ -205,38 +205,6 @@ object Multimodal {
       .orderBy("source")
   }
 
-  final case class FrameFeature(doc_id: Long, frame_id: Long, feature: Array[Float])
-
-  /** Per-frame feature extraction STUB: the (doc, frame) grain from
-    * [[sampleFrames]] re-joins the payload store by doc_id, and a
-    * per-partition batched kernel emits one feature vector per frame —
-    * deterministic fake features here (hash-seeded), a vision/audio
-    * encoder in production, with the same batch boundary and schema.
-    * Payloads are joined in ONCE (broadcast of the frame plan against the
-    * payload store), never shuffled with the feature output.
-    */
-  def extractFeatures(
-      spark: SparkSession,
-      payloads: DataFrame,
-      frames: DataFrame,
-      dim: Int = 8): Dataset[FrameFeature] = {
-    import spark.implicits._
-    frames.select("doc_id", "frame_id")
-      .join(payloads.select(col("doc_id"), col("payload")), "doc_id")
-      .select(col("doc_id"), col("frame_id"), col("payload"))
-      .as[(Long, Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (doc, frame, bytes) =>
-          val h = java.util.Arrays.hashCode(bytes) * 31 + frame.toInt
-          val feat = Array.tabulate(dim) { d =>
-            val m = Integer.rotateLeft(h ^ (d * 0x9e3779b9.toInt), d % 13)
-            (m % 1000) / 1000.0f
-          }
-          FrameFeature(doc, frame, feat)
-        }
-      }
-  }
-
   /** Chunk planning for embedding pipelines: fixed `window`-byte chunks at
     * `stride` hops over each payload, emitted as (doc, offset, len) rows
     * WITHOUT moving payload bytes — the grain a vectorized embed/encode

@@ -161,33 +161,9 @@ object Similarity {
     call_function("nearest_centroid", vec, typedLit(cents.map(_.toSeq)))
 
   /** Elementwise mean vector per cell via the native [[graft.functions
-    * .VectorSum]] partial aggregate, collected to the driver: ONE hash
-    * aggregate with map-side combine, so exactly k (cell, sum, count) rows
-    * cross the exchange — no posexplode row multiplication, no second
-    * shuffle. Centroid sets are k x dim doubles — index metadata, not
-    * data — so reading them back per Lloyd round is the same
-    * scalar-orchestration pattern as connectedComponents' convergence
-    * counter.
-    */
-  private def cellMeans(assigned: DataFrame): Map[Int, Array[Double]] =
-    assigned
-      .groupBy("cell")
-      .agg(
-        call_function("vector_sum", col("vec")).as("s"),
-        // count only rows vector_sum actually folds in (non-null, non-empty),
-        // so the divisor matches the numerator's population
-        count(when(col("vec").isNotNull && size(col("vec")) > 0, lit(1)))
-          .as("n"))
-      .collect()
-      .iterator
-      .filter(r => !r.isNullAt(1) && r.getLong(2) > 0L) // all-null cell: omit
-      .map { r =>
-        val n = r.getLong(2).toDouble
-        r.getInt(0) -> r.getSeq[Double](1).map(_ / n).toArray
-      }
-      .toMap
-
-  /** [[cellMeans]] in the EXACT integer micro-unit domain: inputs are
+    * .VectorSum]] partial aggregate (one hash aggregate with map-side
+    * combine, so exactly k rows cross the exchange), collected to the
+    * driver, in the EXACT integer micro-unit domain: inputs are
     * floor(x*1e6) values (integer-valued doubles), so every partial sum
     * vector_sum produces is an exact integer below 2^53 — the aggregate
     * is order-independent and bit-identical under any partitioning, task

@@ -2,17 +2,33 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
-/** Registration of the graft native functions, both as a
-  * `SparkSessionExtensions` class (for
-  * `SparkSession.builder.withExtensions` / `spark.sql.extensions`) and as
-  * an imperative hook for already-built sessions (Engine.tune).
+/** Everything graft adds to Spark, in one list: the native SQL functions,
+  * the as-of and prefix planner strategies, and the `BandRangeJoin`
+  * optimizer rule. `Engine.local()` builds its session with it
+  * (`SparkSession.builder.withExtensions`); a cluster names it in
+  * `spark.sql.extensions`; `Engine.tune` applies it in place to a session
+  * built without it.
   *
   * SQL surface: `cosine_sim(array<double>, array<double>) -> double`,
-  * `simhash64(array<string>) -> bigint`.
+  * `simhash64(array<string>) -> bigint`, and the rest of [[functions]].
   */
-object GraftFunctions {
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = {
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name),
+        builder))
+    }
+    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.PrefixStrategy)
+    e.injectOptimizerRule(_ => graft.plans.BandRangeJoin)
+  }
+}
+
+object GraftExtensions {
 
   // strict: a present-but-wrong argument (e.g. `5L`, a non-literal) must
   // fail loudly, not silently run with the default
@@ -34,7 +50,7 @@ object GraftFunctions {
     BoundedTopK(args.head, k, idAsc)
   }
 
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", args => CosineSim(args(0), args(1))),
     ("shingle_hashes", args => ShingleHashes(args(0),
       if (args.length > 1) intLit("shingle_hashes", args(1)) else 3)),
@@ -71,25 +87,4 @@ object GraftFunctions {
     // count-min-sketch point probe (the read side of Spark's built-in
     // count_min_sketch aggregate); sketch arg must be query-constant
     ("cms_estimate", args => CmsEstimate(args(0), args(1))))
-
-  /** Imperative registration on an existing session. */
-  def register(spark: SparkSession): Unit = all.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-  }
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder))
-    }
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PrefixStrategy)
-    e.injectOptimizerRule(_ => graft.plans.BandRangeJoin)
-  }
 }

@@ -50,17 +50,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def table(name: String, format: String = "parquet"): DataFrame =
     spark.read.format(format).load(path(name))
 
-  /** Read a table whose appended batches carry EVOLVED schemas (columns
-    * added over time): parquet schema merging unions every file footer's
-    * fields, and rows from pre-evolution files surface the new columns as
-    * null. This is how a landing table absorbs upstream schema drift
-    * without a rewrite; the cost (a footer read per file) is why it is
-    * opt-in here and why production tables graduate to a table format
-    * with schema-in-metadata once file counts grow.
-    */
-  def tableEvolved(name: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path(name))
-
   /** Keyed upsert ("merge"): rows in `df` replace same-key rows in the
     * table, other existing rows are kept. On bare parquet this is
     * read + anti-join + union + rewrite (what a table format's MERGE does
@@ -103,39 +92,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
     swapInto(fs, dst, tmp, old)
   }
 
-  /** Apply a CDC batch — rows tagged with an `op` column (`I`/`U`/`D`)
-    * and a monotone `seq` ordinal — as one MERGE: per key, only the
-    * LATEST change in the batch wins (max `seq`, the Debezium compaction
-    * rule), deletes drop the key, inserts/updates land the row. One
-    * anti-join + one union + the same atomic double-rename commit as
-    * [[upsert]]; replaying the same batch is a no-op (idempotent), which
-    * is what makes at-least-once delivery from a log consumer safe.
-    * `df` must carry `op`, `seq`, and the table's columns.
-    */
-  def applyCdc(df: DataFrame, tableName: String, keys: Seq[String]): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col("seq").desc)
-    val latest = df
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val upserts = latest.filter(col("op") =!= "D").drop("op", "seq")
-    val touched = latest.select(keys.map(col): _*).dropDuplicates(keys)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // filesystem-probe, not read-probe: see upsert
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path(tableName)))) {
-      load(upserts, tableName); return }
-    val existing = table(tableName)
-    val cond = keys.map(k => existing(k) <=> touched(k)).reduce(_ && _)
-    val kept = existing.join(touched, cond, "left_anti")
-    val merged = kept.unionByName(upserts)
-    val tmp = new org.apache.hadoop.fs.Path(path(tableName) + "__tmp")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(fs, new org.apache.hadoop.fs.Path(path(tableName)), tmp,
-      new org.apache.hadoop.fs.Path(path(tableName) + "__old"))
-  }
-
   /** Atomically replace `dst` with `tmp` via two renames, staging the old
     * table at `oldP` so a crash at any point leaves a recoverable state
     * (see the recovery branch in [[upsert]]).
@@ -155,39 +111,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
     fs.delete(oldP, true)
   }
 
-  /** Small-file compaction + optional sort clustering: rewrite a table
-    * into ~`targetBytes` files, each internally sorted by `sortCols` (min/
-    * max row-group statistics then prune point/range scans on those
-    * columns — the poor man's Z-order for a single sort family). Streaming
-    * sinks and incremental upserts accrete small files; on object storage
-    * every one costs a request, so periodic compaction is what keeps a
-    * 100 TB table scannable. Same two-rename atomic swap as [[upsert]];
-    * readers of the old listing keep a consistent `__old` until the swap
-    * completes.
-    */
-  def compact(tableName: String, sortCols: Seq[String] = Nil,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path(tableName))
-    val tmp = new org.apache.hadoop.fs.Path(path(tableName) + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(path(tableName) + "__old")
-    val bytes = fs.getContentSummary(dst).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = table(tableName)
-    // with a sort family, range-partition FIRST: each output file then
-    // holds a disjoint key range (global clustering), so min/max row-group
-    // stats prune whole FILES, not just row groups inside them — a
-    // round-robin repartition would scatter every key range across every
-    // file and leave the per-file stats useless
-    val sorted =
-      if (sortCols.isEmpty) df.repartition(nFiles)
-      else df.repartitionByRange(nFiles, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    sorted.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(fs, dst, tmp, old)
-  }
-
   /** Missing table -> 0, like the reference's bare-except readback
     * (etl_pipeline.py:238-242). Existence is a filesystem probe (a
     * read-probe of a missing path makes Spark print the
@@ -199,130 +122,4 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L else Try(table(name).count()).getOrElse(0L)
   }
-
-  // --- Versioned tables (time travel) -----------------------------------
-  // Minimal lakehouse-style snapshot layout:
-  //   <root>/<table>__versions/v=<N>/   immutable parquet snapshot N
-  //   <root>/<table>__versions/_LATEST  pointer file holding N
-  // A write lands its FULL snapshot directory first and repoints _LATEST
-  // last, so a crash mid-write leaves readers on the previous version and
-  // a partial v-dir that the next write simply overwrites. Rollback is a
-  // pointer update — O(1) metadata, no data movement. Version numbers are
-  // monotonic (max existing + 1) and never reused, even after a rollback,
-  // so audit history stays unambiguous.
-
-  private def versionRoot(name: String) =
-    new org.apache.hadoop.fs.Path(path(name) + "__versions")
-  private def latestPtr(name: String) =
-    new org.apache.hadoop.fs.Path(versionRoot(name), "_LATEST")
-  private def vfs = new org.apache.hadoop.fs.Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readPtr(name: String): Option[Long] = {
-    val fs = vfs
-    if (!fs.exists(latestPtr(name))) None
-    else {
-      val in = fs.open(latestPtr(name))
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def writePtr(name: String, v: Long): Unit = {
-    // single create-with-overwrite: readers see either the old or the new
-    // pointer, never a missing one
-    val out = vfs.create(latestPtr(name), true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** All snapshot numbers present on disk (regardless of the pointer). */
-  def versions(name: String): Seq[Long] = {
-    val fs = vfs
-    if (!fs.exists(versionRoot(name))) Seq.empty
-    else fs.listStatus(versionRoot(name)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-      .sorted
-  }
-
-  /** Current version number, if the table has any committed snapshot. */
-  def currentVersion(name: String): Option[Long] = readPtr(name)
-
-  /** Write a new immutable snapshot; returns its version number. */
-  def loadVersioned(df: DataFrame, name: String): Long = {
-    val next = versions(name).lastOption.getOrElse(0L) + 1
-    coerceForLoad(df).write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(versionRoot(name), s"v=$next")
-        .toString)
-    writePtr(name, next) // commit point: snapshot becomes visible here
-    next
-  }
-
-  /** Read the current snapshot (version = -1) or a specific one. */
-  def tableAt(name: String, version: Long = -1L): DataFrame = {
-    val v =
-      if (version >= 0) version
-      else readPtr(name).getOrElse(
-        throw new java.util.NoSuchElementException(s"no versions: $name"))
-    spark.read.parquet(
-      new org.apache.hadoop.fs.Path(versionRoot(name), s"v=$v").toString)
-  }
-
-  /** Repoint the table at an existing older snapshot — pure metadata. */
-  def rollback(name: String, version: Long): Unit = {
-    if (!vfs.exists(new org.apache.hadoop.fs.Path(versionRoot(name),
-        s"v=$version")))
-      throw new java.util.NoSuchElementException(s"$name has no v=$version")
-    writePtr(name, version)
-  }
-
-  /** Delete snapshots older than the newest `keepLast`, never the one the
-    * pointer references. Object-storage hygiene: every retained snapshot
-    * is a full copy, so retention is the cost lever.
-    */
-  def vacuum(name: String, keepLast: Int = 2): Seq[Long] = {
-    val fs = vfs
-    val current = readPtr(name)
-    val all = versions(name)
-    val doomed = all.dropRight(keepLast).filterNot(current.contains)
-    doomed.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(versionRoot(name), s"v=$v"), true)
-    }
-    doomed
-  }
-
-  // --- SQL-database mode -----------------------------------------------
-  // Direct analogue of the reference's SQLite `to_sql`/`read_sql`
-  // (etl_pipeline.py:234-242) on embedded Derby, whose driver ships in the
-  // Spark distribution. Parquet stays the 100 TB path; this closes the
-  // SURVEY §2.1 JDBC mapping with a real, testable round trip. Spark's
-  // JDBC writer issues one connection per partition — embedded Derby
-  // serves concurrent same-JVM connections, and against a networked
-  // warehouse the same code fans out across executors.
-
-  private val derbyDriver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
-
-  def jdbcUrl: String = s"jdbc:derby:$root/derby;create=true"
-
-  /** `if_exists="replace"|"append"` via JDBC: Overwrite drops/recreates the
-    * table (the reference's replace), Append inserts.
-    */
-  def loadJdbc(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    coerceForLoad(df).write.mode(mode)
-      .format("jdbc")
-      .option("url", jdbcUrl)
-      .option("dbtable", table)
-      .save()
-
-  def tableJdbc(name: String): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", jdbcUrl)
-      .option("dbtable", name)
-      .load()
-
-  def tableCountJdbc(name: String): Long =
-    Try(tableJdbc(name).count()).getOrElse(0L)
 }

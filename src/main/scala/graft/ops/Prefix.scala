@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.plans.{PrefixMode, PrefixNode, PrefixStrategy}
+import graft.plans.{PrefixMode, PrefixNode}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
@@ -62,7 +62,6 @@ object Prefix {
     require(added.distinct.size == added.size && !added.exists(df.columns.contains),
       s"prefix output names ${added.mkString(", ")} must be new and distinct")
     val spark = df.sparkSession
-    graft.plans.install(spark, PrefixStrategy)
     // each value becomes a child column, so the node reads attributes only
     val valueNames = specs.indices.map(i => s"_pfx_v$i")
     val projected = df.select(col("*") +: specs.zip(valueNames).map {

@@ -3,62 +3,27 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for large joins/aggregations.
+/** Skew mitigation for large aggregations.
   *
   * AQE's skew-join splitting (on by default, Engine.tune) handles most
   * runtime skew; explicit salting is the fallback for pathological keys —
   * e.g. a null-heavy foreign key or a boilerplate-document hash — where
-  * a single key exceeds what one task can hold.
-  *
-  * `saltedJoin` spreads each hot left-side key over `salts` partitions by
-  * appending a random-but-deterministic salt, and replicates the right
-  * side `salts` ways (explode over the salt range). Correct for equi-inner
-  * and left joins; the right side is usually the smaller one, so the
-  * replication factor is bounded.
+  * a single key exceeds what one task can hold. `saltedAgg` is that
+  * fallback for aggregations: a two-phase plan whose first phase groups on
+  * (key, salt).
   */
 object Skew {
 
   /** Deterministic per-row salt in [0, salts). */
   def salt(c: Column, salts: Int): Column = pmod(xxhash64(c), lit(salts))
 
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      salts: Int,
-      joinType: String = "inner"): DataFrame = {
-    require(salts > 0)
-    // left: one salt per row, derived from a row-unique-ish column mix so
-    // rows with the same key spread across salts
-    val saltedLeft = left.withColumn(
-      "__salt",
-      pmod(xxhash64(left.columns.map(col): _*), lit(salts)))
-    // right: replicate each row once per salt value
-    val saltedRight = right.withColumn(
-      "__salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    saltedLeft
-      .join(saltedRight, Seq(key, "__salt"), joinType)
-      .drop("__salt")
-  }
-
-  /** Two-phase (salted) aggregation for skewed group keys: partial
+  /** Count + decimal-exact sum via the two-phase salted plan: partial
     * aggregate on (key, salt), then final aggregate on key. For algebraic
-    * aggregates Spark's own partial aggregation already does this — use
-    * this shape when the aggregate buffer itself is heavy (collect-style)
-    * and one key would blow a single reducer.
-    */
-  def saltedCount(df: DataFrame, key: String, salts: Int): DataFrame =
-    df.withColumn("__salt", salt(monotonically_increasing_id(), salts))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("n"))
-
-  /** Count + decimal-exact sum via the two-phase salted plan. The partial
-    * sums are DECIMAL, so re-aggregating them is exact — the salted result
-    * is bit-identical to the direct groupBy, which is what the graded query
-    * asserts against a plain GROUP BY oracle.
+    * aggregates Spark's own partial aggregation already does this; the
+    * salted shape matters when one key would blow a single reducer. The
+    * partial sums are DECIMAL, so re-aggregating them is exact — the
+    * salted result is bit-identical to the direct groupBy, which is what
+    * the graded query asserts against a plain GROUP BY oracle.
     */
   def saltedAgg(df: DataFrame, key: String, value: String, salts: Int): DataFrame =
     df.withColumn("__salt", salt(monotonically_increasing_id(), salts))

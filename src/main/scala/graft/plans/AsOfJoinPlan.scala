@@ -169,7 +169,6 @@ object AsOfJoinPlan {
       rightVals: Seq[String],
       rightTiebreak: String): org.apache.spark.sql.DataFrame = {
     val spark = left.sparkSession
-    install(spark, AsOfJoinStrategy)
     val lp = left.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =
       p.output.find(_.name == name).getOrElse(

@@ -14,6 +14,20 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Apply a session-extension list to a session built without it: its
+    * functions go into the session's registry, its planner strategies and
+    * optimizer rules into `experimental`, the one place a built session's
+    * planner and optimizer still read. Spark's builder applies the same
+    * list through these three `private[sql]` methods.
+    */
+  def applyExtensions(spark: SparkSession, extensions: SparkSessionExtensions => Unit): Unit = {
+    val e = new SparkSessionExtensions
+    extensions(e)
+    e.registerFunctions(spark.sessionState.functionRegistry)
+    spark.experimental.extraStrategies ++= e.buildPlannerStrategies(spark)
+    spark.experimental.extraOptimizations ++= e.buildOptimizerRules(spark)
+  }
+
   /** A materialized checkpoint whose `LogicalRDD` leaf reports at most
     * what it stores as its size: the bytes of its local-checkpoint blocks
     * (memory plus disk, read synchronously from the block manager master),

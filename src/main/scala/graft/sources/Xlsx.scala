@@ -24,7 +24,7 @@ import javax.xml.parsers.DocumentBuilderFactory
   *
   * Writer emits one workbook per call (driver-side assembly — an export
   * utility, not a big-data sink; the warehouse formats are
-  * parquet/orc/jdbc). Inline strings only, so no sharedStrings part is
+  * parquet/orc). Inline strings only, so no sharedStrings part is
   * needed; the reader handles inline, shared, and bare numeric cells.
   */
 object Xlsx {
@@ -93,64 +93,24 @@ object Xlsx {
     bos.toByteArray
   }
 
-  /** Export a (small) DataFrame as one workbook file. */
   /** Rows a single-file export will collect to the driver before failing
     * loudly. The format itself caps a sheet at ~1M rows; this guard trips
     * far earlier because a driver-side collect of a fact table is a
-    * deployment error, not a format limit — use [[writeDir]] (per-
-    * partition workbooks, no driver row traffic) for anything sizable.
+    * deployment error, not a format limit — anything sizable belongs in
+    * the warehouse (load.Warehouse, parquet), not in a spreadsheet.
     */
   val maxSingleFileRows: Int = 100000
 
+  /** Export a (small) DataFrame as one workbook file. */
   def write(df: DataFrame, path: String): Unit = {
     val header = df.schema.fieldNames.toSeq
     // limit+1 probe: bounds the collect itself, not just a post-hoc check
     val probe = df.limit(maxSingleFileRows + 1).collect().toSeq
     require(probe.length <= maxSingleFileRows,
       s"Xlsx.write collects to the driver and refuses > $maxSingleFileRows " +
-        s"rows; use Xlsx.writeDir for distributed export")
+        s"rows; load it into the warehouse (load.Warehouse) instead")
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       writeBytes(header, probe.map(_.toSeq)))
-  }
-
-  /** Distributed export: each partition writes its own workbook under
-    * `dir` (the natural sharding grain for the format — a single sheet
-    * holds at most ~1M rows anyway), so no row data ever moves to the
-    * driver. Task retries overwrite the same per-partition file name, so
-    * the output stays consistent. [[read]] reassembles the directory.
-    */
-  /** Hadoop Configuration is not Serializable; this carries the session's
-    * filesystem settings (credentials, endpoints) to the executor-side
-    * writers instead of silently rebuilding defaults there.
-    */
-  private class SerializableConf(@transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  def writeSharded(df: DataFrame, dir: String): Unit = {
-    val header = df.schema.fieldNames.toSeq
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    root.getFileSystem(conf).mkdirs(root)
-    val sconf = new SerializableConf(conf)
-    df.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val rows = it.map(_.toSeq).toSeq
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val out = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d.xlsx")
-        val fs = out.getFileSystem(sconf.value)
-        val os = fs.create(out, true)
-        try os.write(writeBytes(header, rows)) finally os.close()
-      }
-    }
   }
 
   // --- read --------------------------------------------------------------

@@ -43,13 +43,6 @@ final case class GapState(lastTsUs: Long, lastEventId: Long, lastType: String)
   */
 object Streams {
 
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
   /** On-disk schema of the driver's events parquet, parameterized on the
     * `ts` encoding — the driver has shipped INT64 epoch-nanos (read as a
     * raw long via Engine.tune's nanosAsLong) and TIMESTAMP(MICROS).
@@ -265,9 +258,8 @@ object Streams {
     */
   def drainTumblingToWarehouse(
       spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_stream_wh")
-    try {
-      val wh = graft.load.Warehouse(spark, tmpRoot.toString)
+    graft.Engine.withTempDir(spark, "graft_stream_wh") { root =>
+      val wh = graft.load.Warehouse(spark, root)
       val streamed = tumblingCounts(eventsStream(spark, dir, globFilter))
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
@@ -281,9 +273,6 @@ object Streams {
           import scala.jdk.CollectionConverters.SeqHasAsJava
           spark.createDataFrame(landed.collect().toSeq.asJava, landed.schema)
         })))
-    } finally {
-      val root = new org.apache.hadoop.fs.Path(tmpRoot.toUri)
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
     }
   }
 

@@ -35,13 +35,17 @@ class BandRangeJoinSpec extends SparkSuite {
 
   test("rewritten join returns exactly the unbanded rows") {
     val withRule = naive().collect().map(_.toString).sorted.toSeq
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Nil
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, graft.plans.BandRangeJoin.ruleName)
     try {
-      val without = naive().collect().map(_.toString).sorted.toSeq
+      val unbanded = naive()
+      assert(!optimized(unbanded).contains("graft_band_bucket"),
+        "the excluded rule still fired")
+      val without = unbanded.collect().map(_.toString).sorted.toSeq
       assert(withRule == without)
       assert(withRule.nonEmpty)
-    } finally spark.experimental.extraOptimizations = prev
+    } finally prev.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
   }
 
   test("joins without a bounded window are left alone") {

@@ -865,23 +865,6 @@ class ExtSpec extends SparkSuite {
     assert(math.abs(outW.toDouble / outH - m.width.toDouble / m.height) < 0.1)
   }
 
-  test("per-frame feature extraction is deterministic with fixed dims") {
-    val payloads = Seq((1L, "media one"), (2L, "media two"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-    val meta = Multimodal.extractMeta(spark, payloads)
-    val frames = Multimodal.sampleFrames(meta, everyN = 50)
-    val f1 = Multimodal.extractFeatures(spark, payloads, frames).collect()
-      .map(f => (f.doc_id, f.frame_id) -> f.feature.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(spark, payloads, frames).collect()
-      .map(f => (f.doc_id, f.frame_id) -> f.feature.toSeq).toMap
-    assert(f1 == f2) // deterministic across runs
-    assert(f1.nonEmpty && f1.values.forall(_.length == 8))
-    // different frames of the same doc get different features
-    val doc1 = f1.collect { case ((1L, fid), v) => fid -> v }
-    if (doc1.size > 1) assert(doc1.values.toSet.size > 1)
-  }
-
   test("decodeMedia parses real PNG/BMP/WAV headers; unknown payloads hit the stub") {
     def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
       (v >>> 8).toByte, v.toByte)

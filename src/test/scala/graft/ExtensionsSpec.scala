@@ -2,90 +2,117 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The `spark.sql.extensions=graft.functions.GraftExtensions` path: a
-  * session built with the extensions class (not Engine.tune's imperative
-  * registration) must expose the native functions through SQL and carry
-  * the as-of planner strategy.
+/** [[graft.functions.GraftExtensions]] as the one install list: a session
+  * built with it (the `spark.sql.extensions` path) and a plain session
+  * passed through `Engine.tune` both expose the native functions through
+  * SQL, plan the as-of and prefix operators, and run the `BandRangeJoin`
+  * rule.
   */
 class ExtensionsSpec extends SparkSuite {
 
-  test("GraftExtensions injects SQL functions and the as-of strategy") {
-    val base = spark // keep the shared session to restore afterwards
+  /** A second session on the shared context, with or without the
+    * extensions; the shared session is restored afterwards.
+    * `spark.sql.extensions` is a static conf read at SparkContext setup,
+    * and the shared context predates it, so this uses the builder's
+    * programmatic form: the same class the conf would instantiate.
+    */
+  private def withSession(extended: Boolean)(f: SparkSession => Unit): Unit = {
+    val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    // `spark.sql.extensions` is a static conf read at SparkContext setup;
-    // the shared test context predates it, so use the builder's
-    // programmatic form — the same class the conf would instantiate
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    try {
-      val c = s2.sql(
-        "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
-        .head().getDouble(0)
-      assert(math.abs(c - 1.0) < 1e-12)
-      val sig = s2.sql(
-        "SELECT hyperplane_sig(array(1.0d, -2.0d, 3.0d), 16) AS s")
-        .head().getLong(0)
-      assert(sig >= 0L && sig < (1L << 16))
-      assert(s2.sessionState.planner.strategies
-        .exists(_.isInstanceOf[graft.plans.AsOfJoinStrategy.type]),
-        "as-of strategy not injected")
-      assert(s2.sessionState.optimizer.batches.flatMap(_.rules)
-        .contains(graft.plans.BandRangeJoin),
-        "band-range-join rule not injected")
-    } finally {
+    val builder = SparkSession.builder().master("local[4]")
+    val s2 =
+      (if (extended) builder.withExtensions(new graft.functions.GraftExtensions()) else builder)
+        .getOrCreate()
+    try f(s2)
+    finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
     }
   }
 
-  test("a session built only with GraftExtensions plans a PrefixExec") {
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
+  private def assertInstalled(s2: SparkSession): Unit = {
+    val c = s2.sql(
+      "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
+      .head().getDouble(0)
+    assert(math.abs(c - 1.0) < 1e-12)
+    assert(s2.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy),
+      "as-of strategy not installed")
+    assert(s2.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(graft.plans.BandRangeJoin),
+      "band-range-join rule not installed")
+    import org.apache.spark.sql.functions.col
+    val df = graft.ops.Prefix.running(
+      s2.range(20).toDF("id"), Seq(col("id")), Nil, rowNumber = Some("rn"))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      (0L until 20L).map(i => (i, i + 1)))
+    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(stages.find(df.queryExecution.executedPlan)(
+      _.isInstanceOf[graft.plans.PrefixExec]).isDefined,
+      s"no PrefixExec:\n${df.queryExecution.executedPlan}")
+  }
+
+  /** Every `.scala` file under src/main, by path, with its text. */
+  private def mainSources(): Seq[(java.nio.file.Path, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no source tree at ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root)
     try {
-      import org.apache.spark.sql.functions.col
-      val df = graft.ops.Prefix.running(
-        s2.range(20).toDF("id"), Seq(col("id")), Nil, rowNumber = Some("rn"))
-      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-        (0L until 20L).map(i => (i, i + 1)))
-      val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      assert(stages.find(df.queryExecution.executedPlan)(
-        _.isInstanceOf[graft.plans.PrefixExec]).isDefined,
-        s"no PrefixExec:\n${df.queryExecution.executedPlan}")
-      // planned through the extension: Prefix.running's install saw the
-      // injected strategy and added nothing
-      assert(!s2.experimental.extraStrategies.contains(graft.plans.PrefixStrategy))
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+        .toList
+    } finally files.close()
+  }
+
+  test("GraftExtensions injects SQL functions and the as-of strategy") {
+    withSession(extended = true) { s2 =>
+      assertInstalled(s2)
+      val sig = s2.sql(
+        "SELECT hyperplane_sig(array(1.0d, -2.0d, 3.0d), 16) AS s")
+        .head().getLong(0)
+      assert(sig >= 0L && sig < (1L << 16))
+    }
+  }
+
+  test("a session built only with GraftExtensions plans a PrefixExec") {
+    withSession(extended = true) { s2 =>
+      assertInstalled(s2)
+      // the planner already has the strategies, so tune installs nothing
+      Engine.tune(s2)
+      assert(s2.experimental.extraStrategies.isEmpty)
+      assert(s2.experimental.extraOptimizations.isEmpty)
+    }
+  }
+
+  test("Engine.tune applies GraftExtensions in place to a plain session") {
+    withSession(extended = false) { s2 =>
+      assert(!s2.sessionState.planner.strategies.contains(graft.plans.PrefixStrategy))
+      Engine.tune(s2)
+      assertInstalled(s2)
     }
   }
 
   test("src/main reads exactly the four spark.graft conf keys") {
     // a conf key that only re-picks a code path is a second mechanism for
     // one decision; a new key must be added here on purpose
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"no source tree at ${root.toAbsolutePath}")
     val literal = "\"spark\\.graft\\.([A-Za-z.]+)\"".r
-    val files = java.nio.file.Files.walk(root)
-    val keys =
-      try {
-        import scala.jdk.CollectionConverters._
-        files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-          .flatMap(f => literal.findAllMatchIn(
-            new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).map(_.group(1)))
-          .toSet
-      } finally files.close()
+    val keys = mainSources().flatMap { case (_, text) =>
+      literal.findAllMatchIn(text).map(_.group(1))
+    }.toSet
     assert(keys == Set("checkpoint.reliable", "checkpoint.dir",
       "explain.noCheckpoint", "drain.timeoutMs"), s"spark.graft keys: $keys")
+  }
+
+  test("only plans/shim.scala touches experimental strategies and rules") {
+    // GraftExtensions is the one install list; the shim is the one place
+    // that applies it to a session built without it
+    val touching = mainSources().collect {
+      case (f, text) if text.contains("extraStrategies") ||
+          text.contains("extraOptimizations") => f.toString
+    }
+    assert(touching == Seq("src/main/scala/graft/plans/shim.scala"), touching)
   }
 
   test("jaro_winkler matches literature values and DuckDB edge semantics") {

@@ -62,6 +62,16 @@ class GeneratorsOrchestratorSpec extends SparkSuite {
     assert(sales.schema("date").dataType.typeName == "string")
   }
 
+  test("pipeline_health deletes its temporary warehouse before it returns") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def warehouses(): Set[String] = tmpRoot.list().filter(_.startsWith("graft_wh")).toSet
+    val before = warehouses()
+    val rows = SparkEntry.queries("pipeline_health")(spark, sfDir).collect()
+    assert(rows.length == Generators.registry.size)
+    val leaked = warehouses() -- before
+    assert(leaked.isEmpty, s"pipeline_health left $leaked in $tmpRoot")
+  }
+
   test("a failing source is contained: FAILED metric, run continues") {
     val tmp = Files.createTempDirectory("graft_test_wh2").toString
     val orch = new Orchestrator(spark, Warehouse(spark, tmp))

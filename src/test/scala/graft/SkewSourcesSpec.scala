@@ -1,33 +1,14 @@
 package graft
 
-import graft.ops.{Skew, Stats}
+import graft.ops.Stats
 
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Skew-salting correctness and source-format roundtrips. */
+/** Sketch bounds and source-format roundtrips. */
 class SkewSourcesSpec extends SparkSuite {
   import spark.implicits._
-
-  test("saltedJoin returns exactly the plain equi-join result") {
-    // skewed left: one hot key with 1000 rows
-    val left = spark.range(1100)
-      .select(when(col("id") < 1000, 7L).otherwise(col("id")).as("k"), col("id").as("v"))
-    val right = Seq((7L, "hot"), (1050L, "cold")).toDF("k", "name")
-    val plain = left.join(right, Seq("k")).select("k", "v", "name")
-    val salted = Skew.saltedJoin(left, right, "k", salts = 8).select("k", "v", "name")
-    assert(salted.count() == plain.count())
-    assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-  }
-
-  test("saltedCount matches plain groupBy count") {
-    val df = spark.range(5000)
-      .select(when(col("id") < 4000, lit("hot")).otherwise(lit("cold")).as("k"))
-    val got = Skew.saltedCount(df, "k", salts = 16)
-      .as[(String, Long)].collect().toMap
-    assert(got == Map("hot" -> 4000L, "cold" -> 1000L))
-  }
 
   test("approx_count_distinct within its error bound of the exact count") {
     // the graded frame: every group's tolerance flag must be 1, and the
@@ -242,21 +223,6 @@ class SkewSourcesSpec extends SparkSuite {
     sources.Xlsx.write(tricky, s"$dir/tricky.xlsx")
     val t2 = sources.Xlsx.read(spark, s"$dir/tricky.xlsx")
     assert(t2.select("name").as[String].head() == "a<b&c\"d")
-  }
-
-  test("sharded xlsx export writes one workbook per partition and reads back whole") {
-    val dir = Files.createTempDirectory("graft_xlsx_shard").toString
-    val inv = sources.Generators.inventory(spark, 60).repartition(4)
-    sources.Xlsx.writeSharded(inv, dir)
-    val shards = new java.io.File(dir).list().count(_.endsWith(".xlsx"))
-    assert(shards > 1, s"expected multiple workbook shards, got $shards")
-    val back = sources.Xlsx.read(spark, dir)
-    assert(back.columns.toSeq == inv.columns.toSeq)
-    val origQty = inv.select(col("sku"), col("quantity").cast("string"))
-      .as[(String, String)].collect().toMap
-    val backQty = back.select(col("sku"), col("quantity"))
-      .as[(String, String)].collect().toMap
-    assert(backQty == origQty)
   }
 
   test("xlsx read aligns differing column orders by name and rejects mismatches") {
