@@ -166,7 +166,7 @@ object Dedup {
     * (id, shd) projection, and per-query rebuilds are pure fixed cost in
     * a bench/verify run. Cache-owned — callers must not unpersist.
     */
-  private val shingledDocsCache = new graft.Engine.DirCache(t =>
+  private val shingledDocsCache = graft.Engine.DirCache.frame(t =>
     shingledFrame(t.documents, "doc_id", "text"))
 
   /** [[minhashPairs]]' banding + verify over an already-materialized
@@ -281,7 +281,7 @@ object Dedup {
       shingledDocsCache(t).select(col("id"), explode(col("shd")).as("g"))
         .groupBy("g"), maxDf))
 
-  private val rarePairsCache = new graft.Engine.DirCache(t =>
+  private val rarePairsCache = graft.Engine.DirCache.frame(t =>
     bucketPairs(cappedMembers(
       shingledDocsCache(t).select(col("id"), explode(col("shd")).as("g"))
         .groupBy("g"), 8)))
@@ -353,7 +353,7 @@ object Dedup {
     * serves them all (the string sibling of [[shingledDocsCache]]).
     * Cache-owned; callers must not free.
     */
-  private val gramStringsCache = new graft.Engine.DirCache(t =>
+  private val gramStringsCache = graft.Engine.DirCache.frame(t =>
     graft.Engine.spread(t.documents)
       .select(col("doc_id").as("id"),
         explode(array_distinct(shingles(col("text"), 3))).as("g")))
@@ -635,7 +635,7 @@ object Dedup {
     * vote loop per word is the expensive part, not the join).
     * Cache-owned — callers must not unpersist.
     */
-  private val portableFpCache = new graft.Engine.DirCache(t =>
+  private val portableFpCache = graft.Engine.DirCache.frame(t =>
     graft.Engine.spread(
       t.documents.select(col("doc_id").as("id"), col("text")))
       .select(col("id"), portableSimhashCol(col("text")).as("f")))
@@ -1061,7 +1061,7 @@ object Dedup {
     else ngramJaccardPairsImpl(t, maxDfFrac)
 
   private val jaccardPairsCache =
-    new graft.Engine.DirCache(t => ngramJaccardPairsImpl(t, 0.5))
+    graft.Engine.DirCache.frame(t => ngramJaccardPairsImpl(t, 0.5))
 
   private def ngramJaccardPairsImpl(t: Tables, maxDfFrac: Double): DataFrame = {
     val docs = t.documents

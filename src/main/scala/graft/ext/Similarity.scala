@@ -195,8 +195,9 @@ object Similarity {
     * the per-`label` means; each round is one map-only assignment pass into
     * a single vector_sum aggregate, with the tiny centroid set
     * round-tripped through the driver — the corpus itself never shuffles.
-    * The sample is localCheckpoint'ed once so each round re-reads
-    * materialized rows instead of re-running the scan + cast lineage.
+    * The sample is checkpointed once ([[graft.Engine.loopCheckpoint]]) so
+    * each round re-reads materialized rows instead of re-running the
+    * scan + cast lineage.
     */
   def lloydCentroids(
       emb: DataFrame, iters: Int = 3, trainMod: Int = 2): Seq[Array[Double]] =
@@ -220,7 +221,7 @@ object Similarity {
       emb: DataFrame, iters: Int = 3, trainMod: Int = 2): Seq[Array[Double]] = {
     val train = emb.filter(pmod(col("vec_id"), lit(trainMod)) === 0)
       .select(col("label").cast("int").as("init_cell"), col("mu"))
-      .localCheckpoint()
+      .loopCheckpoint()
     try {
       val init =
         cellFloorMeans(train.select(col("init_cell").as("cell"), col("mu")))
@@ -246,35 +247,18 @@ object Similarity {
     } finally graft.Engine.freeCheckpoint(train)
   }
 
-  private var cachedIvfDir: String = null
-  private var cachedIvfCents: Seq[Array[Double]] = null
-  graft.Engine.registerDataCache(() => synchronized {
-    cachedIvfCents = null; cachedIvfDir = null
-  })
-
   /** The session's shared IVF coarse index: [[lloydCentroidsExact]] over
-    * the corpus micro-unit vectors, memoized per dataset dir. Training is
-    * bit-deterministic given the data, so one build serves every
-    * consumer — [[qKnnIvf]], [[qSemDedup]], [[qKnnIvfPq]] — exactly the
-    * way a production pipeline trains a coarse quantizer once per corpus
-    * version and fans out. Centroids are k x dim doubles (index
-    * metadata), so the cache holds no Spark state to free — and that is
-    * why the key is the dataset dir ALONE, not (session, dir) like the
-    * frame caches: training is bit-deterministic in the data, so plain
-    * numbers computed under a previous session are still exactly right,
-    * and surviving a session restart is a feature, not staleness.
+    * the corpus micro-unit vectors, memoized per (session, dataset dir).
+    * Training is bit-deterministic given the data, so one build serves
+    * every consumer — [[qKnnIvf]], [[qSemDedup]], [[qKnnIvfPq]] — exactly
+    * the way a production pipeline trains a coarse quantizer once per
+    * corpus version and fans out. Centroids are k x dim doubles (index
+    * metadata): the value holds no frame.
     */
-  private[graft] def ivfCentroidsCached(t: Tables): Seq[Array[Double]] =
-    synchronized {
-      if (cachedIvfDir != t.dir || cachedIvfCents == null) {
-        val emb = t.embeddings.select(
-          col("vec_id"), col("label"),
-          microUnits(col("embedding")).cast("array<double>").as("mu"))
-        cachedIvfCents = lloydCentroidsExact(emb)
-        cachedIvfDir = t.dir
-      }
-      cachedIvfCents
-    }
+  private[graft] val ivfCentroidsCached = new graft.Engine.DirCache((t, _) =>
+    lloydCentroidsExact(t.embeddings.select(
+      col("vec_id"), col("label"),
+      microUnits(col("embedding")).cast("array<double>").as("mu"))))
 
   /** IVF pruned search with LEARNED coarse centroids (Lloyd's iterations,
     * see [[lloydCentroids]]); each query probes its `nProbe` nearest
@@ -511,15 +495,6 @@ object Similarity {
     (cands, rows)
   }
 
-  private var cachedPqCandsKey: (org.apache.spark.sql.SparkSession, String) = null
-  private var cachedPqCands: DataFrame = null
-  graft.Engine.registerDataCache(() => synchronized {
-    if (cachedPqCands != null) {
-      graft.Engine.freeCheckpoint(cachedPqCands)
-      cachedPqCands = null; cachedPqCandsKey = null
-    }
-  })
-
   /** The session's shared IVF-PQ candidate frame at the DEFAULT index
     * configuration and maxProbe=3, checkpointed and memoized per
     * (session, dataset dir) — the encode-once/query-many shape of a
@@ -527,26 +502,17 @@ object Similarity {
     * prank<=2 slice) and the recall curve ([[qIvfPqRecall]]) read it.
     * Cache-owned; callers must not free. Slicing prank<=n from the
     * maxProbe=3 frame is identical to computing candidates at
-    * maxProbe=n (cells are disjoint and prank is the probe order).
-    *
-    * Not [[graft.Engine.DirCache]]: the build must free the encode-side
-    * `rows` intermediate strictly AFTER the candidate frame's eager
-    * checkpoint materializes (freeing a localCheckpoint's blocks is
-    * unrecoverable — lineage is already truncated), and DirCache owns
-    * its checkpoint call so the builder has no after-materialize hook.
-    * The stale-session free is safe: [[graft.Engine.freeCheckpoint]]
-    * no-ops on a stopped SparkContext.
+    * maxProbe=n (cells are disjoint and prank is the probe order). The
+    * encode-side `rows` intermediate is freed strictly AFTER the
+    * candidate checkpoint materializes (freeing a localCheckpoint's
+    * blocks is unrecoverable — lineage is already truncated).
     */
-  private def ivfPqCandsCached(t: Tables): DataFrame = synchronized {
-    if (cachedPqCands == null || cachedPqCandsKey != ((t.spark, t.dir))) {
-      if (cachedPqCands != null) graft.Engine.freeCheckpoint(cachedPqCands)
-      val (cands, rows) = ivfPqCandidates(t, 3, 16, 4, 32, 2, 50)
-      cachedPqCands = cands.loopCheckpoint()
-      graft.Engine.freeCheckpoint(rows)
-      cachedPqCandsKey = (t.spark, t.dir)
-    }
-    cachedPqCands
-  }
+  private val ivfPqCandsCached = new graft.Engine.DirCache((t, _) => {
+    val (cands, rows) = ivfPqCandidates(t, 3, 16, 4, 32, 2, 50)
+    val m = cands.loopCheckpoint()
+    graft.Engine.freeCheckpoint(rows)
+    m
+  })
 
   def qKnnIvfPq(
       t: Tables, topK: Int = 5, nProbe: Int = 2, subspaces: Int = 16,

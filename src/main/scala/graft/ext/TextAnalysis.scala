@@ -1087,8 +1087,8 @@ object TextAnalysis {
     * covering positions; overlapping/adjacent marked ranges merge via
     * ONE window per doc (island starts where the gram start passes the
     * running max covered end).
-    */
-  /** Default-width span ranges behind a build-once session cache: three
+    *
+    * The default width sits behind a build-once session cache: three
     * graded consumers read the identical frame (q_dup_spans,
     * q_span_rewrite, q_dedup_manifest via the rewrite accounting) and
     * each re-ran the full 8-gram posexplode+md5 pipeline per query
@@ -1098,28 +1098,17 @@ object TextAnalysis {
     * is materialized once inside the build and freed as soon as the
     * ranges are. Non-default widths build uncached (sibling canaries).
     */
-  private var spanKey: (org.apache.spark.sql.SparkSession, String) = null
-  private var spanFrame: DataFrame = null
-  graft.Engine.registerDataCache(() => synchronized {
-    if (spanFrame != null) {
-      graft.Engine.freeCheckpoint(spanFrame)
-      spanFrame = null; spanKey = null
-    }
-  })
   private[graft] def dupSpanRanges(t: Tables, n: Int): DataFrame =
-    if (n != 8) dupSpanRangesBuild(t, n)
-    else synchronized {
-      if (spanFrame == null || spanKey != ((t.spark, t.dir))) {
-        if (spanFrame != null) graft.Engine.freeCheckpoint(spanFrame)
-        // grams consumed twice below (shared-hash filter + join-back):
-        // materialize once, free once the ranges are checkpointed
-        val grams = graft.Engine.loopCheckpoint(spanGrams(t, 8))
-        spanFrame = graft.Engine.loopCheckpoint(spanRangesFrom(grams, 8))
-        graft.Engine.freeCheckpoint(grams)
-        spanKey = (t.spark, t.dir)
-      }
-      spanFrame
-    }
+    if (n != 8) dupSpanRangesBuild(t, n) else spanRangesCache(t)
+
+  private val spanRangesCache = new graft.Engine.DirCache((t, _) => {
+    // grams consumed twice below (shared-hash filter + join-back):
+    // materialize once, free once the ranges are checkpointed
+    val grams = graft.Engine.loopCheckpoint(spanGrams(t, 8))
+    val ranges = graft.Engine.loopCheckpoint(spanRangesFrom(grams, 8))
+    graft.Engine.freeCheckpoint(grams)
+    ranges
+  })
 
   private[graft] def dupSpanRangesBuild(t: Tables, n: Int): DataFrame =
     spanRangesFrom(spanGrams(t, n), n)
@@ -1372,24 +1361,10 @@ object TextAnalysis {
     * the segmentation frame is checkpointed (vocabulary-sized), the merge
     * table is a driver-side list of `rounds` tuples. Cache-owned.
     */
-  private var bpeKey: (org.apache.spark.sql.SparkSession, String, Int) = null
-  private var bpeVal: (Seq[(Long, String, String, Long)], DataFrame) = null
-  graft.Engine.registerDataCache(() => synchronized {
-    if (bpeVal != null) {
-      graft.Engine.freeCheckpoint(bpeVal._2)
-      bpeVal = null; bpeKey = null
-    }
+  private val bpeLearnCached = new graft.Engine.DirCache((t, rounds) => {
+    val (merges, seqs) = bpeLearn(t, rounds)
+    (merges, graft.Engine.loopCheckpoint(seqs))
   })
-  private def bpeLearnCached(t: Tables, rounds: Int)
-      : (Seq[(Long, String, String, Long)], DataFrame) = synchronized {
-    if (bpeVal == null || bpeKey != ((t.spark, t.dir, rounds))) {
-      if (bpeVal != null) graft.Engine.freeCheckpoint(bpeVal._2)
-      val (merges, seqs) = bpeLearn(t, rounds)
-      bpeVal = (merges, graft.Engine.loopCheckpoint(seqs))
-      bpeKey = (t.spark, t.dir, rounds)
-    }
-    bpeVal
-  }
 
   def qBpeMerges(t: Tables, rounds: Int = 3): DataFrame = {
     val spark = t.documents.sparkSession

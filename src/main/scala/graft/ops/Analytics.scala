@@ -1458,15 +1458,15 @@ object Analytics {
     * the test basket frame) are session-cached per dataset dir like the
     * graph family's co-purchase index — the two consumers each probe the
     * same checkpointed frames instead of re-running the basket
-    * self-join. Cache key is the dir only, so the (probeMod, k) defaults
-    * are part of the cached spec (both registry entries use them).
+    * self-join. The cache key is (session, dir), so the (probeMod, k)
+    * defaults are part of the cached spec (both registry entries use them).
     */
   private case class RecFrames(
       recs: DataFrame, testB: DataFrame, withU: DataFrame)
 
-  private val recsCache = new graft.Engine.DirCache(t =>
+  private val recsCache = graft.Engine.DirCache.frame(t =>
     recFramesUncached(t, 199, 5).recs)
-  private val testBCache = new graft.Engine.DirCache(t =>
+  private val testBCache = graft.Engine.DirCache.frame(t =>
     recFramesUncached(t, 199, 5).testB)
 
   private def recFrames(t: Tables, probeMod: Int, k: Int): RecFrames = {

@@ -56,14 +56,16 @@ object Graph {
     * at most one edge index is ever held. Callers must NOT free the
     * returned frame — the cache owns it.
     */
-  private var cachedEdgeDir: String = null
-  private var cachedEdgeIndex: EdgeIndex = null
-  graft.Engine.registerDataCache(() => synchronized {
-    if (cachedEdgeIndex != null) {
-      graft.Engine.freeCheckpoint(cachedEdgeIndex.edges)
-      graft.Engine.freeCheckpoint(cachedEdgeIndex.deg)
-      cachedEdgeIndex = null; cachedEdgeDir = null
-    }
+  private val edgeIndexCached = new graft.Engine.DirCache((t, _) => {
+    val edges = coPurchaseEdges(t).loopCheckpoint()
+    // src-degree over the symmetric deduplicated edge set = undirected
+    // neighbor count — the degree every consumer (PageRank, profile,
+    // triangles) wants
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      .loopCheckpoint()
+    val stats = deg.agg(count(lit(1)), min("src")).head()
+    EdgeIndex(edges, deg, stats.getLong(0),
+      if (stats.isNullAt(1)) 0L else stats.getLong(1))
   })
 
   /** The shared edge index plus the node-sized statistics every graph
@@ -76,26 +78,6 @@ object Graph {
   private final case class EdgeIndex(
       edges: DataFrame, deg: DataFrame, nNodes: Long, minNode: Long)
 
-  private def edgeIndexCached(t: Tables): EdgeIndex = synchronized {
-    if (cachedEdgeDir != t.dir || cachedEdgeIndex == null ||
-        cachedEdgeIndex.edges.sparkSession != t.spark) {
-      if (cachedEdgeIndex != null) {
-        graft.Engine.freeCheckpoint(cachedEdgeIndex.edges)
-        graft.Engine.freeCheckpoint(cachedEdgeIndex.deg)
-      }
-      val edges = coPurchaseEdges(t).loopCheckpoint()
-      // src-degree over the symmetric deduplicated edge set = undirected
-      // neighbor count — the degree every consumer (PageRank, profile,
-      // triangles) wants
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .loopCheckpoint()
-      val stats = deg.agg(count(lit(1)), min("src")).head()
-      cachedEdgeIndex = EdgeIndex(edges, deg, stats.getLong(0),
-        if (stats.isNullAt(1)) 0L else stats.getLong(1))
-      cachedEdgeDir = t.dir
-    }
-    cachedEdgeIndex
-  }
   private def coPurchaseWeightedCached(t: Tables): DataFrame =
     edgeIndexCached(t).edges
   private def coPurchaseEdgesCached(t: Tables): DataFrame =
@@ -262,6 +244,13 @@ object Graph {
       (lit(num.toDouble) / lit(den.toDouble)).as("assortativity"))
   }
 
+  /** [[propagateLabels]] behind a build-once session cache keyed on
+    * `iters`: the community partition is consumed by both qLabelProp and
+    * qModularity, and re-propagating for each costs a full round set.
+    * The cache owns the final checkpoint; callers must not free it.
+    */
+  private val propagateLabelsCached = new graft.Engine.DirCache(propagateLabels)
+
   /** Synchronous label propagation (fixed `iters` rounds) over the
     * co-purchase graph: every node starts as its own label, and each round
     * every node adopts the most frequent label among its neighbors, ties
@@ -274,34 +263,8 @@ object Graph {
     * state stays node-sized. All arithmetic is integer (counts and label
     * keys), so the fixed-round unrolled-CTE oracle is value-identical.
     * Returns the checkpointed final label frame, owned by
-    * [[propagateLabelsCached]]'s session cache.
+    * [[propagateLabelsCached]].
     */
-  private var cachedLabelsKey: (String, Int) = null
-  private var cachedLabelsFrame: DataFrame = null
-  graft.Engine.registerDataCache(() => synchronized {
-    if (cachedLabelsFrame != null) {
-      graft.Engine.freeCheckpoint(cachedLabelsFrame)
-      cachedLabelsFrame = null; cachedLabelsKey = null
-    }
-  })
-
-  /** [[propagateLabels]] behind the same build-once session cache as the
-    * edge index: the community partition is consumed by both qLabelProp
-    * and qModularity, and re-propagating for each costs a full round set.
-    * The cache owns the final checkpoint; callers must not free it.
-    */
-  private def propagateLabelsCached(t: Tables, iters: Int): DataFrame =
-    synchronized {
-      if (cachedLabelsKey != (t.dir, iters) || cachedLabelsFrame == null ||
-          cachedLabelsFrame.sparkSession != t.spark) {
-        if (cachedLabelsFrame != null)
-          graft.Engine.freeCheckpoint(cachedLabelsFrame)
-        cachedLabelsFrame = propagateLabels(t, iters)
-        cachedLabelsKey = (t.dir, iters)
-      }
-      cachedLabelsFrame
-    }
-
   private def propagateLabels(t: Tables, iters: Int): DataFrame = {
     val idx = edgeIndexCached(t)
     val edges = idx.edges.select("src", "dst")
@@ -419,7 +382,7 @@ object Graph {
     * one-shuffle hash join keyed by apex / chord — the same shape, just
     * exchanged. Node-sized output, cache-owned — callers must not free.
     */
-  private val triPerNodeCache = new graft.Engine.DirCache(t => {
+  private val triPerNodeCache = graft.Engine.DirCache.frame(t => {
     val idx = edgeIndexCached(t)
     val ori = orientedEdges(idx)
     val nEdgesOri = idx.deg

@@ -153,16 +153,6 @@ object Generators {
           .as("device"),
         lit("WEB_LOGS").as("source"))
 
-  /** The reference's fixed source list (etl_pipeline.py:299-306):
-    * (source_name, generator, warehouse_table, transform_name).
-    */
-  /** The Excel source extracts through a REAL .xlsx landing: the generator
-    * exports a workbook ([[Xlsx.write]]), and the pipeline reads it back
-    * through the distributed xlsx reader with the dtype coercion pandas'
-    * read_excel would apply (reference etl_pipeline.py:133-145). Row
-    * values and counts are identical to the direct frame — numbers
-    * roundtrip through their shortest decimal representation.
-    */
   /** One PARENT landing directory per JVM (cleaned on exit), one unique
     * subdirectory per call: rewriting a shared workbook in place would
     * race a concurrent run's lazy read (binaryFile re-lists/re-reads on
@@ -177,6 +167,13 @@ object Generators {
   }
   private val xlsxLandingSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The Excel source extracts through a REAL .xlsx landing: the generator
+    * exports a workbook ([[Xlsx.write]]), and the pipeline reads it back
+    * through the distributed xlsx reader with the dtype coercion pandas'
+    * read_excel would apply (reference etl_pipeline.py:133-145). Row
+    * values and counts are identical to the direct frame — numbers
+    * roundtrip through their shortest decimal representation.
+    */
   def inventoryViaXlsx(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createDirectory(
@@ -194,6 +191,9 @@ object Generators {
         col("source"))
   }
 
+  /** The reference's fixed source list (etl_pipeline.py:299-306):
+    * (source_name, generator, warehouse_table, transform_name).
+    */
   def registry: Seq[(String, SparkSession => DataFrame, String, String)] = Seq(
     ("sales_csv", sales(_: SparkSession), "fact_sales", "sales"),
     ("customer_json", customers(_: SparkSession), "dim_customers", "customers"),

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
   * `spark.graft.checkpoint.reliable=true` swaps every driver-orchestrated
   * loop from localCheckpoint to reliable checkpoint() — results must be
   * identical in both modes (the toggle is an execution concern, not a
-  * semantic one).
+  * semantic one). Also the session cache the loops' shared facts live in
+  * ([[Engine.DirCache]]).
   */
 class CheckpointModeSpec extends SparkSuite {
 
@@ -32,9 +33,9 @@ class CheckpointModeSpec extends SparkSuite {
   }
 
   test("BFS hops and pagerank agree across checkpoint modes") {
-    // the graph cache is keyed by dir only, so both runs would otherwise
-    // share one edge index — that is fine (the index is mode-agnostic
-    // data); the loops themselves re-checkpoint per run
+    // both runs share one session-cached edge index, keyed on (session,
+    // dir) — that is fine (the index is mode-agnostic data); BFS and
+    // PageRank are not cached, so their loops re-checkpoint per run
     val localBfs = ops.Graph.qBfsHops(tables).collect().toSeq
     val localPr = ops.Graph.qPagerank(tables).collect().toSeq
     val (relBfs, relPr) = withReliable {
@@ -47,18 +48,73 @@ class CheckpointModeSpec extends SparkSuite {
     assert(spark.sparkContext.getCheckpointDir.nonEmpty)
   }
 
+  /** The `rdd-N` directories under the reliable checkpoint directory. */
+  private def reliableCheckpoints(): Set[String] =
+    spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+      Option(new java.io.File(new java.net.URI(d)).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("rdd-")).map(_.getName)
+    }.toSet
+
   // every remaining driver-orchestrated loop operator, exercised in BOTH
   // modes — the 100 TB lineage-truncation posture is tested per operator,
   // not asserted once. Results must be identical: the toggle changes
-  // where intermediate frames persist, never what they contain.
+  // where intermediate frames persist, never what they contain. The data
+  // caches are reset before each run, so a cached operator's loop runs
+  // in each mode instead of serving the other mode's frame.
   private def bothModes(name: String)(run: => Seq[org.apache.spark.sql.Row])
       : Unit =
     test(s"$name agrees across checkpoint modes") {
+      Engine.resetDataCaches()
       val local = run
+      Engine.resetDataCaches()
+      val before = reliableCheckpoints()
       val reliable = withReliable(run)
       assert(local == reliable, s"$name diverged between checkpoint modes")
       assert(local.nonEmpty)
+      assert((reliableCheckpoints() -- before).nonEmpty,
+        s"$name wrote no reliable checkpoint")
     }
+
+  test("DirCache builds once per (session, dir, k) and frees every frame it drops") {
+    val sc = spark.sparkContext
+    def rddIds(v: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
+      Seq(v._1, v._2).flatMap(_.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }).toSet
+    def live(ids: Set[Int]): Set[Int] = ids.intersect(sc.getPersistentRDDs.keySet)
+    var builds = 0
+    val pair = new Engine.DirCache((t, k) => {
+      builds += 1
+      (Engine.loopCheckpoint(spark.range(k + 1).toDF("x")),
+        Engine.loopCheckpoint(spark.range(3).toDF("y")))
+    })
+    val a = Tables(spark, "/dircache/a")
+    val b = Tables(spark, "/dircache/b")
+    val first = pair(a, 1)
+    val firstIds = rddIds(first)
+    assert(firstIds.size == 2 && live(firstIds) == firstIds)
+    assert((pair(a, 1) eq first) && builds == 1)
+    // a key change (dir, then k) frees the superseded value's frames
+    val second = pair(b, 1)
+    assert(builds == 2 && live(firstIds).isEmpty)
+    val third = pair(b, 2)
+    assert(builds == 3 && live(rddIds(second)).isEmpty)
+    assert(third._1.count() == 3L)
+    // a reset frees every frame of a multi-frame value; the next call rebuilds
+    val thirdIds = rddIds(third)
+    assert(live(thirdIds) == thirdIds)
+    Engine.resetDataCaches()
+    assert(live(thirdIds).isEmpty)
+    pair(b, 2)
+    assert(builds == 4)
+    // a frameless value: built once, dropped by a reset
+    var plainBuilds = 0
+    val plain = new Engine.DirCache((t, _) => { plainBuilds += 1; Seq(t.dir) })
+    assert(plain(a) == Seq(a.dir) && plain(a) == Seq(a.dir) && plainBuilds == 1)
+    Engine.resetDataCaches()
+    assert(plain(a) == Seq(a.dir) && plainBuilds == 2)
+    Engine.resetDataCaches()
+  }
 
   bothModes("SSSP")(ops.Graph.qSssp(tables).collect().toSeq)
   bothModes("HITS")(ops.Graph.qHits(tables).collect().toSeq)

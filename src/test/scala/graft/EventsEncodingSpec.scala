@@ -22,7 +22,7 @@ class EventsEncodingSpec extends SparkSuite {
     (4L, 1700003600000001L, 8L, "purchase", 9.0, "{}"))
 
   private def writeDirs(): (String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_enc").toString
+    val root = tempDir("graft_enc").toString
     import spark.implicits._
     val base = rowsUs.toDF(
       "event_id", "ts_us", "user_id", "event_type", "value", "props")

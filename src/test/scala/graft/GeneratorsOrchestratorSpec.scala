@@ -7,8 +7,6 @@ import graft.sources.Generators
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Generators are deterministic and schema-faithful; the orchestrator runs
   * the full 6-source pipeline end-to-end with error containment
   * (reference: etl_pipeline.py:249-348).
@@ -41,7 +39,7 @@ class GeneratorsOrchestratorSpec extends SparkSuite {
   }
 
   test("full pipeline run: all sources SUCCESS, health persisted, counts add up") {
-    val tmp = Files.createTempDirectory("graft_test_wh").toString
+    val tmp = tempDir("graft_test_wh").toString
     val wh = Warehouse(spark, tmp)
     val run = new Orchestrator(spark, wh).runPipeline("test_run")
     assert(run.status == PipelineStatus.Success.name)
@@ -73,7 +71,7 @@ class GeneratorsOrchestratorSpec extends SparkSuite {
   }
 
   test("a failing source is contained: FAILED metric, run continues") {
-    val tmp = Files.createTempDirectory("graft_test_wh2").toString
+    val tmp = tempDir("graft_test_wh2").toString
     val orch = new Orchestrator(spark, Warehouse(spark, tmp))
     val m = orch.runSource(
       "boom", _ => throw new RuntimeException("synthetic failure"),

@@ -4,8 +4,6 @@ import graft.ops.Stats
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Sketch bounds and source-format roundtrips. */
 class SkewSourcesSpec extends SparkSuite {
   import spark.implicits._
@@ -123,7 +121,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("csv and json source formats roundtrip the customer generator") {
-    val tmp = Files.createTempDirectory("graft_fmt").toString
+    val tmp = tempDir("graft_fmt").toString
     val src = sources.Generators.customers(spark, 200)
     src.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
     src.write.mode("overwrite").json(s"$tmp/json")
@@ -165,7 +163,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("partitioned warehouse write prunes partitions on read") {
-    val tmp = Files.createTempDirectory("graft_part").toString
+    val tmp = tempDir("graft_part").toString
     val wh = load.Warehouse(spark, tmp)
     val sales = graft.transform.Transforms.sales(sources.Generators.sales(spark, 500))
     wh.loadPartitioned(sales, "fact_sales_p", Seq("month"))
@@ -181,7 +179,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("dynamic partition pruning: a filtered dim prunes the partitioned fact at runtime") {
-    val tmp = Files.createTempDirectory("graft_dpp").toString
+    val tmp = tempDir("graft_dpp").toString
     val wh = load.Warehouse(spark, tmp)
     val sales = graft.transform.Transforms.sales(sources.Generators.sales(spark, 500))
     wh.loadPartitioned(sales, "fact_sales_dpp", Seq("month"))
@@ -205,7 +203,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("xlsx source roundtrips the inventory generator (reference Excel export)") {
-    val dir = Files.createTempDirectory("graft_xlsx").toString
+    val dir = tempDir("graft_xlsx").toString
     val inv = sources.Generators.inventory(spark, 50)
     sources.Xlsx.write(inv, s"$dir/inventory.xlsx")
 
@@ -226,7 +224,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("xlsx read aligns differing column orders by name and rejects mismatches") {
-    val dir = Files.createTempDirectory("graft_xlsx_align").toString
+    val dir = tempDir("graft_xlsx_align").toString
     // two workbooks, same columns in DIFFERENT order: values must land
     // under the right names regardless of which file defines the header
     sources.Xlsx.write(Seq(("s1", 10L)).toDF("sku", "qty"), s"$dir/a.xlsx")
@@ -250,7 +248,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("xlsx landing feeds the standard clean stage like any other source") {
-    val dir = Files.createTempDirectory("graft_xlsx_land").toString
+    val dir = tempDir("graft_xlsx_clean").toString
     val inv = sources.Generators.inventory(spark, 40)
     sources.Xlsx.write(inv.union(inv.limit(5)), s"$dir/export.xlsx") // 5 dup rows
     val landed = sources.Xlsx.read(spark, dir)
@@ -259,7 +257,7 @@ class SkewSourcesSpec extends SparkSuite {
   }
 
   test("orc warehouse format roundtrips with identical rows") {
-    val tmp = Files.createTempDirectory("graft_orc").toString
+    val tmp = tempDir("graft_orc").toString
     val wh = load.Warehouse(spark, tmp)
     val src = tables.nation
     wh.load(src, "nation_orc", format = "orc")

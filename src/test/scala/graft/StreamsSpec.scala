@@ -71,7 +71,7 @@ class StreamsSpec extends SparkSuite {
 
   test("file-source streaming over the real events parquet matches the batch counts") {
     // stage the single parquet file as a landing-zone directory
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_in")
+    val dir = tempDir("graft_stream_in")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("part-000.parquet"))
@@ -191,7 +191,7 @@ class StreamsSpec extends SparkSuite {
   test("Trigger.AvailableNow drains the backlog and terminates on its own") {
     // the scheduled-ingestion mode: process everything currently in the
     // landing zone, then stop — no long-running query to babysit
-    val in = java.nio.file.Files.createTempDirectory("graft_an_in")
+    val in = tempDir("graft_an_in")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       in.resolve("part-000.parquet"))
@@ -290,8 +290,8 @@ class StreamsSpec extends SparkSuite {
     // landing-zone in -> dedup stream -> durable parquet out: the shape of
     // a real ingestion job (checkpoint dir carries offsets + dedup state)
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
+    val outDir = tempDir("graft_sink_out").toString
+    val ckptDir = tempDir("graft_sink_ckpt").toString
     val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
     val events = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
     val q = Streams.dedupWithinWatermark(events)
@@ -313,8 +313,8 @@ class StreamsSpec extends SparkSuite {
     // stream -> merge-into-warehouse: each microbatch upserts by key, so
     // replays and late corrections converge instead of duplicating
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_fb_wh").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fb_ckpt").toString
+    val root = tempDir("graft_fb_wh").toString
+    val ckpt = tempDir("graft_fb_ckpt").toString
     val wh = graft.load.Warehouse(spark, root)
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("id", "v")
