@@ -226,10 +226,11 @@ object Engine {
   def resetDataCaches(): Unit =
     dataCacheResets.forEach(r => r())
 
-  /** Unpersist the materialized RDD behind a `localCheckpoint()`ed frame.
-    * Iterative loops (connected components, Lloyd's iterations) checkpoint
-    * every round; without this the superseded rounds' blocks sit in
-    * executor storage until GC. No-op on non-checkpointed frames. Safe on
+  /** Unpersist the RDD behind a [[loopCheckpoint]]ed frame, in either
+    * checkpoint mode. Iterative loops (connected components, Lloyd's
+    * iterations) checkpoint every round; without this the superseded
+    * rounds' blocks sit in executor storage until GC. No-op on
+    * non-checkpointed frames. Safe on
     * frames from a STOPPED session (a dir-keyed cache replacing a frame
     * built by a previous test session frees a frame whose SparkContext is
     * gone — `unpersist` throws there, and the blocks died with the

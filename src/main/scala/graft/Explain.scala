@@ -30,22 +30,9 @@ object Explain {
     val sb = new StringBuilder
     names.foreach { n =>
       sb.append(s"\n===================== $n =====================\n")
-      // the registered simhash query materializes through loopCheckpoint,
-      // which truncates the visible plan to a checkpoint scan — this alias
-      // explains the full verify-join tree instead
-      try {
-      val df =
-        if (n == "q_simhash_portable_precheckpoint")
-          ext.Dedup.simhashPortablePairs(
-            Tables(spark, sfDir).documents, "doc_id", "text",
-            maxHamming = 3, maxBucket = 100, checkpoint = false)
-        else if (n == "q_span_alignments_precheckpoint")
-          ext.Dedup.qSpanAlignments(
-            Tables(spark, sfDir), checkpoint = false)
-        else SparkEntry.queries(n)(spark, sfDir)
-      sb.append(df.queryExecution.explainString(
+      try sb.append(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      } catch { case e: Throwable =>
+      catch { case e: Throwable =>
         sb.append(s"EXPLAIN FAILED: ${e.getClass.getName}: ${e.getMessage}\n")
       }
     }

@@ -527,57 +527,6 @@ object SparkEntry {
     "q_multimodal_chunks" -> q(Multimodal.qMultimodalChunks(_)),
     "q_multimodal_frames" -> q(Multimodal.qMultimodalFrames))
 
-  /** DuckDB oracle SQL per query (omitted => rows-only check):
-    * q_knn_lsh ONLY (xxhash64 band signatures; its oracled portable
-    * companion q_knn_lsh_portable pins the plan shape). q_approx_distinct
-    * and q_approx_quantile graduated to BOUNDED-ERROR oracles in round
-    * 10: each emits exact values plus tolerance flags computed from the
-    * sketch (see [[graft.ops.Stats.qApproxDistinct]] /
-    * [[graft.ops.Stats.qApproxQuantile]] for the bound derivations), and
-    * the oracle asserts the flags are 1 — a sketch regression hash-fails
-    * the row even though sketch internals never cross the compare.
-    * Each engine-specific signature family carries a
-    * fully-oracled portable companion that hash-checks the same plan
-    * shape: q_dedup_minhash_verify (rare-gram buckets + exact-jaccard
-    * verify), q_simhash_portable (md5-vote fingerprint + hamming
-    * verify), q_knn_lsh_portable (md5 sign matrix + integer micro-unit
-    * band codes + exact-cosine top-k). q_knn_ivf itself IS fully
-    * oracled: its Lloyd's index runs in exact integer micro-units, so
-    * the trained centroids are bit-deterministic and the oracle unrolls
-    * the rounds as CTEs (knnIvfOracle).
-    *
-    * Round-8 graduations: q_dedup_simhash now fingerprints with the
-    * portable md5-vote construction (full hash oracle; the xxhash64
-    * fingerprint stays the library's throughput Column function), and
-    * pipeline_health carries a partial oracle over its deterministic
-    * columns (the seed-pinned generator contract as a VALUES replay).
-    *
-    * q_dedup_minhash graduated from rows-only in round 7: its oracle is
-    * the GROUND-TRUTH jaccard >= 0.7 pair set, generated by prefix
-    * filtering (rarest-first canonical gram order; a pair at threshold t
-    * must share a gram within each member's (n - ceil(t*n) + 1)-prefix —
-    * the ppjoin lemma) and verified by exact gram-set jaccard. The hash
-    * match therefore asserts the banded pipeline achieves FULL RECALL at
-    * the 0.7 threshold on this corpus (verified empirically at sf0.001 /
-    * 0.01 / 0.1 against a no-filter brute force) on top of the exact
-    * verify arithmetic — if a signature or banding change drops recall,
-    * this row goes red even though signatures themselves are
-    * engine-specific. 8x4 banding misses a true pair with probability
-    * (1-j^4)^8 <= 11% at j = 0.7 exactly, but the corpus' near-dup pairs
-    * sit well above threshold where the miss bound is negligible; a
-    * regenerated corpus dense at exactly 0.7 would legitimately re-open
-    * the rows-only status. Round 9 MEASURED that boundary (SCALE.md,
-    * "10x ADVERSARIAL recall run"): on a 50k-doc corpus planted dense at
-    * j~0.7 with hot boilerplate, recall vs the ppjoin ground truth
-    * ([[graft.ext.Dedup.jaccardGroundTruth]]) is 0.921 in the 0.70-0.75
-    * band (theory: 0.918) and 0.936 in 0.80-0.90 (maxBucket cap cost
-    * under boilerplate) — the quantified evidence base for flipping this
-    * row to rows-only if the graded corpus ever becomes threshold-dense.
-    *
-    * q_rolling_fingerprint's 64-bit wraparound IS expressible: the oracle
-    * runs the same h = h*31 + byte recurrence in HUGEINT mod 2^64 over the
-    * hex-decoded UTF-8 bytes, then re-centers to signed BIGINT.
-    */
   /** Batch/stream-shared oracle for benchmark decontamination
     * (`q_contamination`, `q_stream_contamination`).
     */
@@ -593,22 +542,6 @@ object SparkEntry {
        FROM c JOIN b USING (gram)
        GROUP BY c.doc_id ORDER BY c.doc_id"""
 
-  /** Batch/stream-shared oracle for the incremental-ingest dedup pair
-    * (`q_dedup_incremental`, `q_stream_incdedup`).
-    */
-  /** Shared by the batch per-language vocabulary ranking and its
-    * streaming drain twin (`q_top_terms`, `q_stream_topterms`).
-    */
-  /** Portable hyperplane LSH kNN: md5-derived sign matrix, integer
-    * micro-unit projections (exact BIGINT sums -> bit-identical band
-    * codes), then the same exact-cosine fold + top-5 as q_knn_brute.
-    * Shared by `q_knn_lsh_portable` (batch) and `q_stream_knn` (the
-    * drain reproduces identical candidates/cosines/ranking).
-    */
-  /** Day-spine SLO burn: RANGE frame over the integer day index on both
-    * sides; burns are single long/long IEEE divisions. Shared by the
-    * batch monitor and its streaming drain (`q_slo_burn`, `q_stream_slo`).
-    */
   /** Shared by the batch SRM gate and its streaming drain (`q_ab_srm`,
     * `q_stream_srm`): the drain's dedup+bucket states reproduce the batch
     * distinct-user counts exactly.
@@ -689,6 +622,10 @@ object SparkEntry {
              AS dwell_share
          FROM a ORDER BY event_type"""
 
+  /** Day-spine SLO burn: RANGE frame over the integer day index on both
+    * sides; burns are single long/long IEEE divisions. Shared by the
+    * batch monitor and its streaming drain (`q_slo_burn`, `q_stream_slo`).
+    */
   private val sloBurnOracle: String =
     """WITH d AS (SELECT epoch_ns(ts) // 86400000000000 AS day_idx,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -776,6 +713,12 @@ object SparkEntry {
          CAST((tgt + n_tokens - 1) // n_tokens AS BIGINT) AS epochs
        FROM s ORDER BY source"""
 
+  /** Portable hyperplane LSH kNN: md5-derived sign matrix, integer
+    * micro-unit projections (exact BIGINT sums -> bit-identical band
+    * codes), then the same exact-cosine fold + top-5 as q_knn_brute.
+    * Shared by `q_knn_lsh_portable` (batch) and `q_stream_knn` (the
+    * drain reproduces identical candidates/cosines/ranking).
+    */
   private val knnLshPortableOracle: String =
     """WITH signs AS (SELECT p, i,
            CASE WHEN substr(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1) >= '8'
@@ -803,17 +746,6 @@ object SparkEntry {
          FROM sims)
        SELECT qid, nid, sim, rnk FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk"""
 
-  /** IVF kNN oracle: the exact-integer-micro-unit Lloyd's loop
-    * (ext/Similarity.scala lloydCentroidsExact) unrolled as three CTE
-    * rounds — the qPagerank unroll pattern. Every index-side quantity is
-    * an exact integer (micro-unit vectors ~1e6, centroids floor(sum/n)),
-    * so assignment argmaxes and probe rankings are bit-identical across
-    * engines; the final ranking similarity replays Spark's sequential
-    * cosine fold with list_sum, the same parity contract
-    * knnLshPortableOracle is graded on. A Spark early-stopped round is
-    * reproduced as identity by the extra unrolled round (stable
-    * assignments => identical floor means).
-    */
   /** The IVF training CTE chain (no WITH keyword — callers prepend WITH
     * or WITH RECURSIVE): micro-unit vectors, label-rank init on the
     * vec_id%2 sample, three unrolled cosine Lloyd rounds ending at
@@ -867,6 +799,17 @@ object SparkEntry {
  cn AS (SELECT cell, SUM(v * v) AS nc FROM cent GROUP BY cell)"""
   }
 
+  /** IVF kNN oracle: the exact-integer-micro-unit Lloyd's loop
+    * (ext/Similarity.scala lloydCentroidsExact) unrolled as three CTE
+    * rounds — the qPagerank unroll pattern. Every index-side quantity is
+    * an exact integer (micro-unit vectors ~1e6, centroids floor(sum/n)),
+    * so assignment argmaxes and probe rankings are bit-identical across
+    * engines; the final ranking similarity replays Spark's sequential
+    * cosine fold with list_sum, the same parity contract
+    * knnLshPortableOracle is graded on. A Spark early-stopped round is
+    * reproduced as identity by the extra unrolled round (stable
+    * assignments => identical floor means).
+    */
   private val knnIvfOracle: String = {
     s"""WITH $ivfTrainCtes,
  q AS (
@@ -1039,14 +982,6 @@ object SparkEntry {
  FROM arr a LEFT JOIN mt ON mt.vec_id = a.vec_id
  ORDER BY a.vec_id"""
 
-  /** IVF-PQ oracle: the shared IVF training chain, full-corpus argmax
-    * assignment, exact-integer RESIDUALS against the per-cell centroid
-    * list, a vec_id-seeded PQ codebook trained on those residuals (two
-    * unrolled Lloyd rounds, tags p1/p2 to avoid colliding with the IVF
-    * rounds), per-query probe of the top-2 cells, and the ADC sum over
-    * codes restricted to the probed cells — every stage exact-integer,
-    * ranked ascending with ties to the lower id.
-    */
   /** The IVF-PQ corpus-encoding CTE chain (follows `ivfTrainCtes`):
     * full-corpus argmax assignment, residuals, residual PQ codebook
     * (rounds p1/p2), and the per-vector codes. Shared by the search
@@ -1096,6 +1031,14 @@ object SparkEntry {
      list_sum(list_transform(m, x -> x * x)) AS nq
    FROM mu WHERE vec_id % 50 = 0)"""
 
+  /** IVF-PQ oracle: the shared IVF training chain, full-corpus argmax
+    * assignment, exact-integer RESIDUALS against the per-cell centroid
+    * list, a vec_id-seeded PQ codebook trained on those residuals (two
+    * unrolled Lloyd rounds, tags p1/p2 to avoid colliding with the IVF
+    * rounds), per-query probe of the top-2 cells, and the ADC sum over
+    * codes restricted to the probed cells — every stage exact-integer,
+    * ranked ascending with ties to the lower id.
+    */
   private val knnIvfPqOracle: String =
     s"""WITH $ivfTrainCtes,$ivfPqCodeCtes,
  probe AS (
@@ -1422,6 +1365,9 @@ object SparkEntry {
          MIN(csize) AS min_class, MIN(ldiv) AS min_l
        FROM classes CROSS JOIN ks GROUP BY k ORDER BY k"""
 
+  /** Shared by the batch per-language vocabulary ranking and its
+    * streaming drain twin (`q_top_terms`, `q_stream_topterms`).
+    */
   private val topTermsOracle: String =
     """WITH dw AS (SELECT lang, word, COUNT(*) AS df FROM (
            SELECT doc_id, lang,
@@ -1449,6 +1395,9 @@ object SparkEntry {
            AS DOUBLE) AS p
        FROM p ORDER BY from_type, to_type"""
 
+  /** Batch/stream-shared oracle for the incremental-ingest dedup pair
+    * (`q_dedup_incremental`, `q_stream_incdedup`).
+    */
   private val incDedupOracle: String =
     """WITH d AS (SELECT doc_id, list_distinct(list_transform(
            range(1, greatest(len(w) - 3, 0) + 2),
@@ -1560,14 +1509,6 @@ object SparkEntry {
            CAST(cum AS DOUBLE) / CAST(k AS DOUBLE) AS cvar_cents
          FROM x WHERE i = k ORDER BY level"""
 
-  /** KMV oracle, built on the least version-sensitive SQL surface
-    * available: the 60-bit md5 decode is 15 explicit
-    * `ascii(substr(..))`/CASE terms on exact BIGINT weights — no
-    * lambdas (whose `i ->` arrow collides with the JSON arrow operator
-    * in newer DuckDB), no `strpos`, no bit shifts, no `range()`
-    * bound conventions. Byte-identical to the Spark side's
-    * `conv(substring(md5(..),1,15),16,10)` on every DuckDB tested.
-    */
   /** The 15-term arithmetic decode of an md5 hex prefix into the 60-bit
     * BIGINT Spark computes as `conv(substring(md5(x),1,15),16,10)` —
     * built from ascii()/CASE/multiplication only (no lambdas, strpos,
@@ -1582,6 +1523,14 @@ object SparkEntry {
            ELSE ascii(substr($m,$i,1)) - 48 END) * CAST($w AS BIGINT)"""
     }.mkString("\n             + ")
 
+  /** KMV oracle, built on the least version-sensitive SQL surface
+    * available: the 60-bit md5 decode is 15 explicit
+    * `ascii(substr(..))`/CASE terms on exact BIGINT weights — no
+    * lambdas (whose `i ->` arrow collides with the JSON arrow operator
+    * in newer DuckDB), no `strpos`, no bit shifts, no `range()`
+    * bound conventions. Byte-identical to the Spark side's
+    * `conv(substring(md5(..),1,15),16,10)` on every DuckDB tested.
+    */
   private val kmvOracle: String = {
     val decode = hexDecode60("m")
     s"""WITH dh AS (SELECT DISTINCT flag,
@@ -1723,6 +1672,57 @@ object SparkEntry {
          FROM ssx x JOIN nss n USING (source) JOIN scx USING (source),
            ccx, ncc m ORDER BY x.source"""
 
+  /** DuckDB oracle SQL per query (omitted => rows-only check):
+    * q_knn_lsh ONLY (xxhash64 band signatures; its oracled portable
+    * companion q_knn_lsh_portable pins the plan shape). q_approx_distinct
+    * and q_approx_quantile graduated to BOUNDED-ERROR oracles in round
+    * 10: each emits exact values plus tolerance flags computed from the
+    * sketch (see [[graft.ops.Stats.qApproxDistinct]] /
+    * [[graft.ops.Stats.qApproxQuantile]] for the bound derivations), and
+    * the oracle asserts the flags are 1 — a sketch regression hash-fails
+    * the row even though sketch internals never cross the compare.
+    * Each engine-specific signature family carries a
+    * fully-oracled portable companion that hash-checks the same plan
+    * shape: q_dedup_minhash_verify (rare-gram buckets + exact-jaccard
+    * verify), q_simhash_portable (md5-vote fingerprint + hamming
+    * verify), q_knn_lsh_portable (md5 sign matrix + integer micro-unit
+    * band codes + exact-cosine top-k). q_knn_ivf itself IS fully
+    * oracled: its Lloyd's index runs in exact integer micro-units, so
+    * the trained centroids are bit-deterministic and the oracle unrolls
+    * the rounds as CTEs (knnIvfOracle).
+    *
+    * Round-8 graduations: q_dedup_simhash now fingerprints with the
+    * portable md5-vote construction (full hash oracle; the xxhash64
+    * fingerprint stays the library's throughput Column function), and
+    * pipeline_health carries a partial oracle over its deterministic
+    * columns (the seed-pinned generator contract as a VALUES replay).
+    *
+    * q_dedup_minhash graduated from rows-only in round 7: its oracle is
+    * the GROUND-TRUTH jaccard >= 0.7 pair set, generated by prefix
+    * filtering (rarest-first canonical gram order; a pair at threshold t
+    * must share a gram within each member's (n - ceil(t*n) + 1)-prefix —
+    * the ppjoin lemma) and verified by exact gram-set jaccard. The hash
+    * match therefore asserts the banded pipeline achieves FULL RECALL at
+    * the 0.7 threshold on this corpus (verified empirically at sf0.001 /
+    * 0.01 / 0.1 against a no-filter brute force) on top of the exact
+    * verify arithmetic — if a signature or banding change drops recall,
+    * this row goes red even though signatures themselves are
+    * engine-specific. 8x4 banding misses a true pair with probability
+    * (1-j^4)^8 <= 11% at j = 0.7 exactly, but the corpus' near-dup pairs
+    * sit well above threshold where the miss bound is negligible; a
+    * regenerated corpus dense at exactly 0.7 would legitimately re-open
+    * the rows-only status. Round 9 MEASURED that boundary (SCALE.md,
+    * "10x ADVERSARIAL recall run"): on a 50k-doc corpus planted dense at
+    * j~0.7 with hot boilerplate, recall vs the ppjoin ground truth
+    * ([[graft.ext.Dedup.jaccardGroundTruth]]) is 0.921 in the 0.70-0.75
+    * band (theory: 0.918) and 0.936 in 0.80-0.90 (maxBucket cap cost
+    * under boilerplate) — the quantified evidence base for flipping this
+    * row to rows-only if the graded corpus ever becomes threshold-dense.
+    *
+    * q_rolling_fingerprint's 64-bit wraparound IS expressible: the oracle
+    * runs the same h = h*31 + byte recurrence in HUGEINT mod 2^64 over the
+    * hex-decoded UTF-8 bytes, then re-centers to signed BIGINT.
+    */
   def oracleSql: Map[String, String] = Map(
     // average precision under the deterministic (score desc, doc_id)
     // total order; each precision@k pinned at 1e-9 before the sum

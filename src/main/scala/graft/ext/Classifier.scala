@@ -100,33 +100,42 @@ object Classifier {
       }
       .reduce(_ + _)
 
+  /** The trained-model queries' shared prologue and epilogue: materialize
+    * the feature frame (its row count is the checkpoint's witness), train
+    * `rounds` full-batch GD rounds from w = 0, then materialize the query's
+    * own `result` over the features and weights and free the features.
+    */
+  private def trained(t: Tables, rounds: Int, eta: Double)(
+      result: (DataFrame, Seq[Double]) => DataFrame): DataFrame = {
+    val (feat, n) = graft.Engine.loopCheckpointWith(features(t))(_.count())
+    var w: Seq[Double] = Seq(0.0, 0.0, 0.0, 0.0, 0.0)
+    for (_ <- 1 to rounds) w = roundGd(w, feat, n, eta)
+    val out = graft.Engine.loopCheckpoint(result(feat, w))
+    graft.Engine.freeCheckpoint(feat)
+    out
+  }
+
   /** Train `rounds` full-batch GD rounds from w = 0 and emit one graded
     * row: weights plus in-sample accuracy at the 0.5 threshold (an
     * INTEGER count — pred = σ(z) ≥ 0.5 ⟺ z ≥ 0, so the cut never
     * touches the transcendental).
     */
-  def qLrTrain(t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame = {
-    val feat = features(t).localCheckpoint()
-    val n = feat.count()
-    var w: Seq[Double] = Seq(0.0, 0.0, 0.0, 0.0, 0.0)
-    for (_ <- 1 to rounds) w = roundGd(w, feat, n, eta)
-    val z = sigmaZ(w)
-    val out = feat
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when((z >= 0.0) === (col("y") === 1L), 1L).otherwise(0L))
-          .as("n_correct"),
-        sum("y").as("n_pos"))
-      .select(
-        col("n_docs"), col("n_pos"), col("n_correct"),
-        (col("n_correct").cast("double") / col("n_docs").cast("double"))
-          .as("accuracy"),
-        lit(w(0)).as("w0"), lit(w(1)).as("w1"),
-        lit(w(2)).as("w2"), lit(w(3)).as("w3"), lit(w(4)).as("w4"))
-      .localCheckpoint()
-    graft.Engine.freeCheckpoint(feat)
-    out
-  }
+  def qLrTrain(t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame =
+    trained(t, rounds, eta) { (feat, w) =>
+      val z = sigmaZ(w)
+      feat
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(when((z >= 0.0) === (col("y") === 1L), 1L).otherwise(0L))
+            .as("n_correct"),
+          sum("y").as("n_pos"))
+        .select(
+          col("n_docs"), col("n_pos"), col("n_correct"),
+          (col("n_correct").cast("double") / col("n_docs").cast("double"))
+            .as("accuracy"),
+          lit(w(0)).as("w0"), lit(w(1)).as("w1"),
+          lit(w(2)).as("w2"), lit(w(3)).as("w3"), lit(w(4)).as("w4"))
+    }
 
   /** Multinomial Naive Bayes language classifier, trained and applied in
     * one query, graded as its CONFUSION MATRIX — the generative
@@ -204,33 +213,27 @@ object Classifier {
     * key floors the micro-rounded σ, so bin membership is decided on the
     * pinned value, not the raw transcendental.
     */
-  def qLrCalibration(t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame = {
-    val feat = features(t).localCheckpoint()
-    val n = feat.count()
-    var w: Seq[Double] = Seq(0.0, 0.0, 0.0, 0.0, 0.0)
-    for (_ <- 1 to rounds) w = roundGd(w, feat, n, eta)
-    val sigu = round(lit(Scale.toDouble) /
-      (lit(1.0) + exp(-sigmaZ(w))), 0).cast("long")
-    val out = feat
-      .withColumn("su", sigu)
-      .withColumn("bin", least(expr(s"su * 10 div $Scale"), lit(9L)))
-      .groupBy("bin")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum("y").as("n_pos"),
-        sum("su").as("su_sum"))
-      .select(
-        col("bin"), col("n_docs"), col("n_pos"),
-        (col("n_pos").cast("double") / col("n_docs").cast("double"))
-          .as("observed_rate"),
-        (col("su_sum").cast("double") /
-          (col("n_docs").cast("double") * Scale.toDouble))
-          .as("mean_predicted"))
-      .orderBy("bin")
-      .localCheckpoint()
-    graft.Engine.freeCheckpoint(feat)
-    out
-  }
+  def qLrCalibration(t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame =
+    trained(t, rounds, eta) { (feat, w) =>
+      val sigu = round(lit(Scale.toDouble) /
+        (lit(1.0) + exp(-sigmaZ(w))), 0).cast("long")
+      feat
+        .withColumn("su", sigu)
+        .withColumn("bin", least(expr(s"su * 10 div $Scale"), lit(9L)))
+        .groupBy("bin")
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum("y").as("n_pos"),
+          sum("su").as("su_sum"))
+        .select(
+          col("bin"), col("n_docs"), col("n_pos"),
+          (col("n_pos").cast("double") / col("n_docs").cast("double"))
+            .as("observed_rate"),
+          (col("su_sum").cast("double") /
+            (col("n_docs").cast("double") * Scale.toDouble))
+            .as("mean_predicted"))
+        .orderBy("bin")
+    }
 
   /** Hosmer–Lemeshow goodness-of-fit over the same trained model and
     * score deciles as [[qLrCalibration]]: χ² = Σ (O−E)²/(E(1−E/n)) per
@@ -242,44 +245,38 @@ object Classifier {
     * under 2⁵³ (both engines' decimal→double casts are then exact).
     */
   def qHosmerLemeshow(
-      t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame = {
-    val feat = features(t).localCheckpoint()
-    val n = feat.count()
-    var w: Seq[Double] = Seq(0.0, 0.0, 0.0, 0.0, 0.0)
-    for (_ <- 1 to rounds) w = roundGd(w, feat, n, eta)
-    val sigu = round(lit(Scale.toDouble) /
-      (lit(1.0) + exp(-sigmaZ(w))), 0).cast("long")
-    val scored = feat.withColumn("su", sigu)
-    // equal-FREQUENCY deciles (the textbook HL grouping — fixed-width
-    // value bins degenerate when scores cluster): boundaries from one
-    // exact-percentile aggregate, broadcast back as a 1-row frame. A
-    // global ntile window would be the single-partition trap; the
-    // boundary comparison is embarrassingly parallel.
-    val bounds = scored.agg(expr(
-      "percentile(su, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))")
-      .as("qb"))
-    val e = col("su_sum").cast("double") / lit(Scale.toDouble)
-    val o = col("o").cast("double")
-    val out = scored
-      .crossJoin(broadcast(bounds))
-      .withColumn("bin", expr(
-        "aggregate(qb, 0L, (acc, q) -> acc + (CASE WHEN su > q THEN 1L ELSE 0L END))"))
-      .groupBy("bin")
-      .agg(
-        count(lit(1)).as("n"),
-        sum("y").as("o"),
-        sum("su").as("su_sum"))
-      .select(round((o - e) * (o - e) /
-          (e * (lit(1.0) - e / col("n").cast("double"))), 9)
-        .cast(DecimalType(24, 9)).as("term"))
-      .agg(
-        count(lit(1)).as("n_bins"),
-        (count(lit(1)) - 2).as("df"),
-        sum("term").cast("double").as("hl_stat"))
-      .localCheckpoint()
-    graft.Engine.freeCheckpoint(feat)
-    out
-  }
+      t: Tables, rounds: Int = 3, eta: Double = 6.0): DataFrame =
+    trained(t, rounds, eta) { (feat, w) =>
+      val sigu = round(lit(Scale.toDouble) /
+        (lit(1.0) + exp(-sigmaZ(w))), 0).cast("long")
+      val scored = feat.withColumn("su", sigu)
+      // equal-FREQUENCY deciles (the textbook HL grouping — fixed-width
+      // value bins degenerate when scores cluster): boundaries from one
+      // exact-percentile aggregate, broadcast back as a 1-row frame. A
+      // global ntile window would be the single-partition trap; the
+      // boundary comparison is embarrassingly parallel.
+      val bounds = scored.agg(expr(
+        "percentile(su, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))")
+        .as("qb"))
+      val e = col("su_sum").cast("double") / lit(Scale.toDouble)
+      val o = col("o").cast("double")
+      scored
+        .crossJoin(broadcast(bounds))
+        .withColumn("bin", expr(
+          "aggregate(qb, 0L, (acc, q) -> acc + (CASE WHEN su > q THEN 1L ELSE 0L END))"))
+        .groupBy("bin")
+        .agg(
+          count(lit(1)).as("n"),
+          sum("y").as("o"),
+          sum("su").as("su_sum"))
+        .select(round((o - e) * (o - e) /
+            (e * (lit(1.0) - e / col("n").cast("double"))), 9)
+          .cast(DecimalType(24, 9)).as("term"))
+        .agg(
+          count(lit(1)).as("n_bins"),
+          (count(lit(1)) - 2).as("df"),
+          sum("term").cast("double").as("hl_stat"))
+    }
 
   /** Isotonic (monotone) calibration of the heuristic quality score
     * against the is-English label — the standard recalibration step when a

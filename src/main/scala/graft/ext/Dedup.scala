@@ -332,6 +332,18 @@ object Dedup {
     verifyJaccard(cand, shingled, threshold)
   }
 
+  /** The documents table's STRING-gram frame (id, gram) behind a
+    * build-once session cache: the review/audit tier (dup evidence, the
+    * cost model) needs gram text, and its per-query consumers each read
+    * the exploded frame several times — one materialization per dataset
+    * serves them all (the string sibling of [[shingledDocsCache]]).
+    * Cache-owned; callers must not free.
+    */
+  private val gramStringsCache = graft.Engine.DirCache.frame(t =>
+    graft.Engine.spread(t.documents)
+      .select(col("doc_id").as("id"),
+        explode(array_distinct(shingles(col("text"), 3))).as("g")))
+
   /** Near-duplicate EVIDENCE for human review: each verified >= `threshold`
     * pair annotated with its `topK` rarest shared 3-grams (rarity = corpus
     * document frequency) — the lines a reviewer reads to confirm a merge
@@ -346,18 +358,6 @@ object Dedup {
     * ranking windows over the pair-shared-gram frame (bounded by pairs x
     * doc gram count, never corpus-sized).
     */
-  /** The documents table's STRING-gram frame (id, gram) behind a
-    * build-once session cache: the review/audit tier (dup evidence, the
-    * cost model) needs gram text, and its per-query consumers each read
-    * the exploded frame several times — one materialization per dataset
-    * serves them all (the string sibling of [[shingledDocsCache]]).
-    * Cache-owned; callers must not free.
-    */
-  private val gramStringsCache = graft.Engine.DirCache.frame(t =>
-    graft.Engine.spread(t.documents)
-      .select(col("doc_id").as("id"),
-        explode(array_distinct(shingles(col("text"), 3))).as("g")))
-
   def qDupEvidence(
       t: Tables, maxDf: Int = 8, threshold: Double = 0.7,
       topK: Int = 3): DataFrame = {
@@ -431,8 +431,7 @@ object Dedup {
     * replay.
     */
   def qSpanAlignments(
-      t: Tables, n: Int = 8, maxDf: Int = 8, minWords: Int = 12,
-      checkpoint: Boolean = true): DataFrame = {
+      t: Tables, n: Int = 8, maxDf: Int = 8, minWords: Int = 12): DataFrame = {
     val h = expr("conv(substring(md5(g), 1, 15), 16, 10)").cast("long")
     val gp = graft.Engine.spread(t.documents)
       .select(col("doc_id"),
@@ -443,8 +442,7 @@ object Dedup {
       .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
       .select("h")
-    val gpa0 = gp.join(adm, "h")
-    val gpa = if (checkpoint) gpa0.loopCheckpoint() else gpa0
+    val gpa = gp.join(adm, "h").loopCheckpoint()
     val pairs = gpa
       .select(col("doc_id").as("id1"), col("start").as("p1"), col("h"))
       .join(gpa.select(col("doc_id").as("id2"), col("start").as("p2"),
@@ -461,12 +459,9 @@ object Dedup {
       .select(col("id1"), col("id2"), col("start1"), col("start2"),
         col("len_words"))
       .orderBy("id1", "id2", "start1", "start2")
-    // checkpoint=false exposes the full plan to the shape audit
-    // (plan-audit-only contract: gpa stays cached-owned either way)
-    if (!checkpoint) return out
-    val res = out.loopCheckpoint()
+      .loopCheckpoint()
     graft.Engine.freeCheckpoint(gpa)
-    res
+    out
   }
 
   /** The candidate-generation COST MODEL — why LSH/bucketing instead of
@@ -624,8 +619,7 @@ object Dedup {
     */
   def qSimhashPortable(
       t: Tables, maxHamming: Int = 3, maxBucket: Int = 100): DataFrame =
-    simhashPortablePairsFromFp(
-      portableFpCache(t), maxHamming, maxBucket, checkpoint = true)
+    simhashPortablePairsFromFp(portableFpCache(t), maxHamming, maxBucket)
 
   /** The documents table's portable-simhash fingerprint frame (id, f)
     * behind a build-once session cache: the banded pair query probes it
@@ -640,21 +634,17 @@ object Dedup {
       t.documents.select(col("doc_id").as("id"), col("text")))
       .select(col("id"), portableSimhashCol(col("text")).as("f")))
 
-  /** [[qSimhashPortable]]'s pipeline on any (id, text) frame.
-    * `checkpoint = false` skips the final materialization (and the cache
-    * release it guards) so plan audits can inspect the full verify-join
-    * tree; production callers keep the default.
-    */
+  /** [[qSimhashPortable]]'s pipeline on any (id, text) frame. */
   def simhashPortablePairs(
       docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, maxBucket: Int, checkpoint: Boolean = true): DataFrame = {
+      maxHamming: Int, maxBucket: Int): DataFrame = {
     val fp = graft.Engine.spread(
       docs.select(col(idCol).as("id"), col(textCol).as("text")))
       .select(col("id"), portableSimhashCol(col("text")).as("f"))
       // consumed by the banding pass AND the verify join-back
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = simhashPortablePairsFromFp(fp, maxHamming, maxBucket, checkpoint)
-    if (checkpoint) fp.unpersist(false)
+    val out = simhashPortablePairsFromFp(fp, maxHamming, maxBucket)
+    fp.unpersist(false)
     out
   }
 
@@ -663,8 +653,7 @@ object Dedup {
     * frees it).
     */
   private[graft] def simhashPortablePairsFromFp(
-      fp: DataFrame, maxHamming: Int, maxBucket: Int,
-      checkpoint: Boolean): DataFrame = {
+      fp: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
     val banded = fp.select(col("id"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("f"), 15 * b).bitwiseAND(lit(32767L))): _*))
@@ -675,15 +664,14 @@ object Dedup {
       .union(pairs.select(col("id2").as("id")))
       .distinct()
     val candFp = fp.join(broadcast(candIds), "id")
-    val out = pairs
+    pairs
       .join(candFp.toDF("id1", "f1"), "id1")
       .join(candFp.toDF("id2", "f2"), "id2")
       .withColumn("hamming", expr("CAST(bit_count(f1 ^ f2) AS BIGINT)"))
       .filter(col("hamming") <= maxHamming)
       .select("id1", "id2", "hamming")
       .orderBy("id1", "id2")
-    if (!checkpoint) return out
-    out.loopCheckpoint()
+      .loopCheckpoint()
   }
 
   /** The corpus-dedup FUNNEL end-to-end, as one graded query — the
@@ -754,8 +742,7 @@ object Dedup {
       .select(col("doc_id").as("id"))
     val keeperFp = graft.Engine.loopCheckpoint(
       portableFpCache(t).join(keepers, "id"))
-    val pairs =
-      simhashPortablePairsFromFp(keeperFp, maxHamming, maxBucket, checkpoint = true)
+    val pairs = simhashPortablePairsFromFp(keeperFp, maxHamming, maxBucket)
     val comp = connectedComponents(pairs.select("id1", "id2"))
     val out = marked
       .join(comp.toDF("doc_id", "comp"), Seq("doc_id"), "left")

@@ -260,26 +260,6 @@ object Sampling {
       .orderBy("split_a", "split_b")
   }
 
-  /** DoReMi-flavored mixture reweighting: per-source excess unigram
-    * surprisal drives an exponential-weights update, producing the
-    * domain mixture a training run would sample at — sources whose
-    * tokens the corpus-level LM finds SURPRISING (rare vocabulary,
-    * distinctive content) get upweighted, boilerplate-heavy sources
-    * damped. The published recipe trains a proxy model; this is the
-    * statistics-only analogue on the unigram LM the engine already
-    * maintains, with eta = 1.
-    *
-    * Exactness: per-word surprisal is a difference of 1e-9-rounded logs
-    * held in exact decimals ([[graft.ext.TextAnalysis.qDocEntropy]]'s
-    * recipe), token-count-weighted sums are exact decimal arithmetic,
-    * and the one transcendental (`exp`) is fed an already-rounded
-    * double and re-rounded at 1e-6 — far above any libm ulp, far below
-    * the weight scale — so the whole frame hash-oracles.
-    *
-    * Scale: one vocab aggregate, one (source, word) aggregate, a
-    * vocab-sized join, then a source-count-sized epilogue (the window
-    * runs over k rows). No fact-sized shuffle beyond the two counts.
-    */
   /** The SAMPLING SCHEDULE that applies [[qMixDoremi]]'s weights — per
     * source: the token target under the reweighted mixture at the same
     * total budget, the sampling rate against what the source actually
@@ -330,12 +310,32 @@ object Sampling {
       .orderBy("source")
   }
 
-  def qMixDoremi(t: Tables, checkpoint: Boolean = true): DataFrame = {
+  /** DoReMi-flavored mixture reweighting: per-source excess unigram
+    * surprisal drives an exponential-weights update, producing the
+    * domain mixture a training run would sample at — sources whose
+    * tokens the corpus-level LM finds SURPRISING (rare vocabulary,
+    * distinctive content) get upweighted, boilerplate-heavy sources
+    * damped. The published recipe trains a proxy model; this is the
+    * statistics-only analogue on the unigram LM the engine already
+    * maintains, with eta = 1.
+    *
+    * Exactness: per-word surprisal is a difference of 1e-9-rounded logs
+    * held in exact decimals ([[graft.ext.TextAnalysis.qDocEntropy]]'s
+    * recipe), token-count-weighted sums are exact decimal arithmetic,
+    * and the one transcendental (`exp`) is fed an already-rounded
+    * double and re-rounded at 1e-6 — far above any libm ulp, far below
+    * the weight scale — so the whole frame hash-oracles.
+    *
+    * Scale: one vocab aggregate, one (source, word) aggregate, a
+    * vocab-sized join, then a source-count-sized epilogue (the window
+    * runs over k rows). No fact-sized shuffle beyond the two counts.
+    */
+  def qMixDoremi(t: Tables): DataFrame = {
     val dw = graft.Engine.spread(t.documents)
       .select(col("source"),
         explode(graft.ext.Dedup.words(col("text"))).as("word"))
     doremiEpilogue(
-      dw.groupBy("source", "word").agg(count(lit(1)).as("c")), checkpoint)
+      dw.groupBy("source", "word").agg(count(lit(1)).as("c")))
   }
 
   /** [[qMixDoremi]]'s arithmetic over an already-aggregated
@@ -347,14 +347,12 @@ object Sampling {
     * oracle. The single fact-sized shuffle in the whole report is the
     * (source, word) count itself.
     */
-  private[graft] def doremiEpilogue(
-      swc0: DataFrame, checkpoint: Boolean): DataFrame = {
+  private[graft] def doremiEpilogue(swc0: DataFrame): DataFrame = {
     val all = Window.partitionBy()
     // the (source, word) frame feeds both the corpus rollup and the
     // per-source surprisal join — materialize it once so the fact-sized
-    // count shuffle runs once, not per consumer (checkpoint=false keeps
-    // the full plan visible to the shape audit)
-    val swc = if (checkpoint) swc0.loopCheckpoint() else swc0
+    // count shuffle runs once, not per consumer
+    val swc = swc0.loopCheckpoint()
     val cw = swc.groupBy("word").agg(sum("c").cast("long").as("c"))
       .loopCheckpoint() // feeds T, the corpus mean, and the word join
     // token total as a broadcast 1-row frame (house style): the surprisal
@@ -390,12 +388,10 @@ object Sampling {
         round(col("raw").cast("double") /
           sum(col("raw")).over(all).cast("double"), 9).as("weight"))
       .orderBy("source")
-    // checkpoint=false exposes the epilogue plan to the shape audit
-    // (plan-audit-only contract: cw is freed on both paths)
-    val res = if (checkpoint) out.loopCheckpoint() else out
+      .loopCheckpoint()
     graft.Engine.freeCheckpoint(cw)
-    if (checkpoint) graft.Engine.freeCheckpoint(swc)
-    res
+    graft.Engine.freeCheckpoint(swc)
+    out
   }
 
   /** Global contiguous id assignment in content-hash order — the

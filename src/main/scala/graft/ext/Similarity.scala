@@ -411,24 +411,6 @@ object Similarity {
     smallPairs.unionAll(bigPairs)
   }
 
-  /** IVF-PQ search — the full production ANN composition: the IVF coarse
-    * quantizer ([[lloydCentroidsExact]], the index [[qKnnIvf]] and
-    * [[qSemDedup]] share) prunes each query to its `nProbe` nearest
-    * cells, and within those cells candidates are ranked by PQ
-    * asymmetric-distance ([[qPqSearch]]'s ADC) over RESIDUAL vectors
-    * (member minus its cell centroid — the standard IVF-PQ encoding:
-    * residuals are far smaller than raw vectors, so the same code budget
-    * quantizes them more finely). Micro-unit vectors and floor-mean
-    * centroids are both integer-valued, so residuals, PQ training,
-    * distance tables, and every ADC sum stay exact integers — the whole
-    * two-level index is bit-deterministic and fully hash-oracled.
-    *
-    * Scale shape: corpus rows compute their cell id map-side, encode once,
-    * and thereafter move only (ivf_cell, subspace, code) — neither raw
-    * vectors nor residuals ever cross a shuffle; the per-(query, probed
-    * cell) distance tables broadcast into the code join, and
-    * bounded_topk keeps k candidates per query per map task.
-    */
   /** The IVF-PQ candidate stream: per (query, candidate-in-a-probed-cell),
     * the exact-integer ADC distance and the PROBE RANK of the candidate's
     * cell in the query's probe order (cells are disjoint, so each
@@ -514,13 +496,30 @@ object Similarity {
     m
   })
 
+  /** IVF-PQ search — the full production ANN composition: the IVF coarse
+    * quantizer ([[lloydCentroidsExact]], the index [[qKnnIvf]] and
+    * [[qSemDedup]] share) prunes each query to its `nProbe` nearest
+    * cells, and within those cells candidates are ranked by PQ
+    * asymmetric-distance ([[qPqSearch]]'s ADC) over RESIDUAL vectors
+    * (member minus its cell centroid — the standard IVF-PQ encoding:
+    * residuals are far smaller than raw vectors, so the same code budget
+    * quantizes them more finely). Micro-unit vectors and floor-mean
+    * centroids are both integer-valued, so residuals, PQ training,
+    * distance tables, and every ADC sum stay exact integers — the whole
+    * two-level index is bit-deterministic and fully hash-oracled.
+    *
+    * Scale shape: corpus rows compute their cell id map-side, encode once,
+    * and thereafter move only (ivf_cell, subspace, code) — neither raw
+    * vectors nor residuals ever cross a shuffle; the per-(query, probed
+    * cell) distance tables broadcast into the code join, and
+    * bounded_topk keeps k candidates per query per map task.
+    */
   def qKnnIvfPq(
       t: Tables, topK: Int = 5, nProbe: Int = 2, subspaces: Int = 16,
       subDim: Int = 4, pqK: Int = 32, rounds: Int = 2,
-      queryMod: Int = 50, checkpoint: Boolean = true): DataFrame = {
-    // the cache serves the default index config; the plan audit
-    // (checkpoint=false) and non-default configs encode fresh
-    val useCache = checkpoint && nProbe <= 3 && subspaces == 16 &&
+      queryMod: Int = 50): DataFrame = {
+    // the cache serves the default index config; other configs encode fresh
+    val useCache = nProbe <= 3 && subspaces == 16 &&
       subDim == 4 && pqK == 32 && rounds == 2 && queryMod == 50
     val (cands, rows) =
       if (useCache)
@@ -538,20 +537,9 @@ object Similarity {
         negate(col("item.score")).cast("long").as("adc_dist"),
         (col("i") + 1).cast("long").as("rnk"))
       .orderBy("qid", "rnk")
-    // checkpoint=false exposes the search plan to the shape audit; the
-    // audit only reads the explain string, so the encode-side `rows`
-    // checkpoint is freed on BOTH paths (a checkpoint=false frame is
-    // plan-audit-only by contract — freeing keeps the plan shape, not
-    // executability)
-    val res = if (checkpoint) {
-      val c = out.loopCheckpoint()
-      if (rows != null) graft.Engine.freeCheckpoint(rows)
-      c
-    } else {
-      if (rows != null) graft.Engine.freeCheckpoint(rows)
-      out
-    }
-    res
+      .loopCheckpoint()
+    if (rows != null) graft.Engine.freeCheckpoint(rows)
+    out
   }
 
   /** The IVF-PQ recall curve — recall@k vs exact L2 as a function of
@@ -696,13 +684,11 @@ object Similarity {
     * reachability).
     */
   def qSemDedup(
-      t: Tables, threshold: Double = 0.35, maxCell: Int = 2048,
-      checkpoint: Boolean = true): DataFrame = {
+      t: Tables, threshold: Double = 0.35, maxCell: Int = 2048): DataFrame = {
     val emb = t.embeddings.select(
       col("vec_id"), col("label"),
       microUnits(col("embedding")).cast("array<double>").as("mu"))
-    semDedupDecisions(emb, ivfCentroidsCached(t), threshold, maxCell,
-      checkpoint)
+    semDedupDecisions(emb, ivfCentroidsCached(t), threshold, maxCell)
   }
 
   /** [[qSemDedup]]'s pipeline over an arbitrary (vec_id, mu) frame and a
@@ -711,7 +697,7 @@ object Similarity {
     */
   private[graft] def semDedupDecisions(
       emb: DataFrame, cents: Seq[Array[Double]], threshold: Double,
-      maxCell: Int, checkpoint: Boolean): DataFrame = {
+      maxCell: Int): DataFrame = {
     val centsLit = typedLit(cents.map(_.toSeq))
     // assignment + per-member centroid cosine: micro-domain cosine is
     // scale-invariant (matches raw geometry to quantization precision) and
@@ -740,23 +726,10 @@ object Similarity {
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("grp"),
         col("cent_sim"), col("keep"))
       .orderBy("vec_id")
-    // checkpoint=false exposes the decision plan to the shape audit; the
-    // CC loop above already consumed assigned/pairs hot, and the audit
-    // only reads the explain string, so BOTH paths free the round
-    // intermediates here — the plan shape survives freeing; executing a
-    // checkpoint=false frame would not, which is the documented contract
-    // (plan-audit-only)
-    val res = if (checkpoint) {
-      val c = out.loopCheckpoint()
-      graft.Engine.freeCheckpoint(assigned)
-      graft.Engine.freeCheckpoint(pairs)
-      c
-    } else {
-      graft.Engine.freeCheckpoint(assigned)
-      graft.Engine.freeCheckpoint(pairs)
-      out
-    }
-    res
+      .loopCheckpoint()
+    graft.Engine.freeCheckpoint(assigned)
+    graft.Engine.freeCheckpoint(pairs)
+    out
   }
 
   /** Offline keeper index for serving-time semantic dedup: run the full
@@ -772,8 +745,7 @@ object Similarity {
       .filter(pmod(col("vec_id"), lit(2)) === 0)
       .select(col("vec_id"), col("label"),
         microUnits(col("embedding")).cast("array<double>").as("mu"))
-    val dec = semDedupDecisions(embA, ivfCentroidsCached(t), threshold,
-      maxCell, checkpoint = true)
+    val dec = semDedupDecisions(embA, ivfCentroidsCached(t), threshold, maxCell)
     // checkpoint the (cell-count-row) keeper frame, then free the decision
     // checkpoint — otherwise every index build (each drain / spec run)
     // leaks the full decision frame's storage blocks for the session
@@ -1151,30 +1123,6 @@ object Similarity {
       }
     }
 
-  /** [[qKnnLsh]]'s banded hyperplane plan with an ENGINE-PORTABLE
-    * signature, graded with a full hash oracle (qKnnLsh itself hashes
-    * planes via engine-specific xxhash64 and is rows-only checked).
-    * Two portability moves:
-    *
-    *  - plane signs come from [[md5SignMatrix]] (md5 = the hash every
-    *    engine evaluates identically), and
-    *  - projections run in integer MICRO-UNITS: floor(x * 1e6) per
-    *    component, so each plane's dot product is an exact BIGINT sum —
-    *    no float summation order to disagree on, hence bucket codes that
-    *    are bit-identical in any engine and any partitioning.
-    *
-    * Plan shape is unchanged from qKnnLsh: band rows carry ids only, the
-    * candidate join is corpus-bands against the BROADCAST query bands (the
-    * corpus never shuffles), candidate vectors come back via broadcast
-    * joins, exact cosine verifies (the same sequential fold the oracle
-    * replays), and bounded_topk ranks with k rows per query per map task.
-    * 3-bit bands match the quasi-random test corpus (recall >= 0.9 vs
-    * brute at ~75% candidate fraction); clustered real embeddings would
-    * take wider bands — parameters are the tuning surface, the shape is
-    * fixed. The interpreted sign-fold projection trades codegen for
-    * portability; the engine-specific [[qKnnLsh]] keeps the native
-    * codegen'd signature for the 100 TB hot path.
-    */
   /** Per-row array of (band, code) keys from the PORTABLE integer
     * micro-unit hyperplane signature (see [[qKnnLshPortable]]): a pure
     * projection over `mu` (the floor(x*1e6) long array) against the
@@ -1201,6 +1149,30 @@ object Similarity {
   private[graft] def microUnits(embedding: Column): Column =
     transform(asDouble(embedding), x => floor(x * lit(1000000.0)))
 
+  /** [[qKnnLsh]]'s banded hyperplane plan with an ENGINE-PORTABLE
+    * signature, graded with a full hash oracle (qKnnLsh itself hashes
+    * planes via engine-specific xxhash64 and is rows-only checked).
+    * Two portability moves:
+    *
+    *  - plane signs come from [[md5SignMatrix]] (md5 = the hash every
+    *    engine evaluates identically), and
+    *  - projections run in integer MICRO-UNITS: floor(x * 1e6) per
+    *    component, so each plane's dot product is an exact BIGINT sum —
+    *    no float summation order to disagree on, hence bucket codes that
+    *    are bit-identical in any engine and any partitioning.
+    *
+    * Plan shape is unchanged from qKnnLsh: band rows carry ids only, the
+    * candidate join is corpus-bands against the BROADCAST query bands (the
+    * corpus never shuffles), candidate vectors come back via broadcast
+    * joins, exact cosine verifies (the same sequential fold the oracle
+    * replays), and bounded_topk ranks with k rows per query per map task.
+    * 3-bit bands match the quasi-random test corpus (recall >= 0.9 vs
+    * brute at ~75% candidate fraction); clustered real embeddings would
+    * take wider bands — parameters are the tuning surface, the shape is
+    * fixed. The interpreted sign-fold projection trades codegen for
+    * portability; the engine-specific [[qKnnLsh]] keeps the native
+    * codegen'd signature for the 100 TB hot path.
+    */
   def qKnnLshPortable(
       t: Tables, k: Int = 5, bands: Int = 10, bitsPerBand: Int = 3,
       dim: Int = 64): DataFrame = {
@@ -1278,17 +1250,19 @@ object Similarity {
   def qCoresetKcenter(t: Tables, k: Int = 4): DataFrame = {
     val spark = t.embeddings.sparkSession
     import spark.implicits._
-    val m = t.embeddings
+    // probed k times — materialize the quantization; the seed (lowest
+    // id) is the checkpoint's witness
+    val (m, seed) = graft.Engine.loopCheckpointWith(t.embeddings
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
       .select(col("vec_id"),
         transform(asDouble(col("embedding")),
-          x => floor(x * lit(1000.0) + lit(0.5)).cast("long")).as("m"))
-      .localCheckpoint() // probed k times — materialize the quantization
+          x => floor(x * lit(1000.0) + lit(0.5)).cast("long")).as("m")))(
+      _.agg(min("vec_id")).head().getLong(0))
     try {
       def distTo(vec: Seq[Long]) =
         expr(s"aggregate(zip_with(m, ${vec.mkString("array(", "L,", "L)")}," +
           " (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
-      var selId = m.agg(min("vec_id")).head().getLong(0)
+      var selId = seed
       var selVec = m.filter(col("vec_id") === selId)
         .head().getSeq[Long](1)
       val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()

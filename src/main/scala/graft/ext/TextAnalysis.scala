@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.Engine.LoopCheckpointOps
 import graft.Tables
 import graft.transform.Transforms.davg
 
@@ -756,18 +757,6 @@ object TextAnalysis {
         sum("n_tokens").as("sum_tokens"))
       .orderBy("source", "bucket")
 
-  /** Population Stability Index of the document-length distribution, per
-    * source against the whole corpus — the standard drift gate between an
-    * incoming batch and the reference corpus (PSI < 0.1 stable, > 0.25
-    * action). Lengths bucket into fixed-width bins; per (source, bin)
-    * counts are ONE aggregate, and the marginals (source totals, corpus
-    * bin totals) attach as window sums over that compacted frame rather
-    * than re-scanning documents. PSI is summed over the bins the source
-    * occupies (p > 0 by construction, q > 0 because the corpus contains
-    * the source). Rounded at 1e-9, above cross-engine ln()/sum jitter.
-    * Scale: the aggregate is corpus-sized; everything after runs on the
-    * (sources x bins) frame, which is configuration-sized.
-    */
   /** Zipf's-law slope of the corpus word-frequency distribution: OLS fit
     * of ln(freq) on ln(rank) over the top `topN` words (a healthy natural
     * corpus sits near −1; synthetic or template-heavy corpora flatten).
@@ -905,6 +894,18 @@ object TextAnalysis {
           .as("nonascii_byte_frac"))
       .orderBy("lang")
 
+  /** Population Stability Index of the document-length distribution, per
+    * source against the whole corpus — the standard drift gate between an
+    * incoming batch and the reference corpus (PSI < 0.1 stable, > 0.25
+    * action). Lengths bucket into fixed-width bins; per (source, bin)
+    * counts are ONE aggregate, and the marginals (source totals, corpus
+    * bin totals) attach as window sums over that compacted frame rather
+    * than re-scanning documents. PSI is summed over the bins the source
+    * occupies (p > 0 by construction, q > 0 because the corpus contains
+    * the source). Rounded at 1e-9, above cross-engine ln()/sum jitter.
+    * Scale: the aggregate is corpus-sized; everything after runs on the
+    * (sources x bins) frame, which is configuration-sized.
+    */
   def qPsiDrift(t: Tables, binWidth: Int = 25): DataFrame = {
     val counts = t.documents
       .select(col("source"),
@@ -1308,20 +1309,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** BPE vocabulary learning: `rounds` iterations of the byte-pair-merge
-    * loop every subword tokenizer trains with — count adjacent symbol
-    * pairs over the (word, frequency) table, merge the most frequent
-    * pair corpus-wide, repeat. The distributed part is the weighted pair
-    * count (explode + one aggregation per round over the vocabulary
-    * table, which at web scale is millions of rows); the argmax is one
-    * dimension-sized sort-limit, and the driver sees ONE (pair, count)
-    * scalar per round — the connectedComponents orchestration rule.
-    * Merges apply space-padded (` a b ` → ` ab `), so a pair never
-    * matches across token boundaries, and both engines' `replace` scans
-    * left-to-right non-overlapping — greedy BPE semantics. Counts are
-    * exact longs, ties break lexicographically: the learned merge table
-    * is engine-identical.
-    */
   /** The BPE learn loop shared by [[qBpeMerges]] and [[qBpeTokenize]]:
     * returns the merge table and the post-merge vocabulary segmentation
     * (word, seq, freq).
@@ -1366,6 +1353,20 @@ object TextAnalysis {
     (merges, graft.Engine.loopCheckpoint(seqs))
   })
 
+  /** BPE vocabulary learning: `rounds` iterations of the byte-pair-merge
+    * loop every subword tokenizer trains with — count adjacent symbol
+    * pairs over the (word, frequency) table, merge the most frequent
+    * pair corpus-wide, repeat. The distributed part is the weighted pair
+    * count (explode + one aggregation per round over the vocabulary
+    * table, which at web scale is millions of rows); the argmax is one
+    * dimension-sized sort-limit, and the driver sees ONE (pair, count)
+    * scalar per round — the connectedComponents orchestration rule.
+    * Merges apply space-padded (` a b ` → ` ab `), so a pair never
+    * matches across token boundaries, and both engines' `replace` scans
+    * left-to-right non-overlapping — greedy BPE semantics. Counts are
+    * exact longs, ties break lexicographically: the learned merge table
+    * is engine-identical.
+    */
   def qBpeMerges(t: Tables, rounds: Int = 3): DataFrame = {
     val spark = t.documents.sparkSession
     import spark.implicits._
@@ -2078,7 +2079,7 @@ object TextAnalysis {
       .select(col("node").as("word"), col("r").as("rank_u"),
         lit(nNodes).as("n_vocab"))
       .orderBy(col("rank_u").desc, col("word")).limit(topK)
-      .localCheckpoint()
+      .loopCheckpoint()
     graft.Engine.freeCheckpoint(edges)
     out
   }

@@ -7,15 +7,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the extension-tier hot paths.
-  *
-  * The built-in higher-order functions (`zip_with`/`aggregate`) are
-  * interpreted per-element; at ~25M candidate pairs x 64 dims (cosine) or
-  * ~5M shingles x 32 permutations (MinHash) the lambda-dispatch overhead
-  * dominates. These expressions run the same arithmetic as tight JVM loops,
-  * and `CosineSim` generates code inline so the kNN stage stays inside
-  * whole-stage codegen.
-  */
+// Native Catalyst expressions for the extension-tier hot paths.
+//
+// The built-in higher-order functions (`zip_with`/`aggregate`) are
+// interpreted per-element; at ~25M candidate pairs x 64 dims (cosine) or
+// ~5M shingles x 32 permutations (MinHash) the lambda-dispatch overhead
+// dominates. These expressions run the same arithmetic as tight JVM loops,
+// and `CosineSim` generates code inline so the kNN stage stays inside
+// whole-stage codegen.
 
 /** Cosine similarity of two double arrays.
   *
@@ -228,10 +227,6 @@ case class HyperplaneSig(child: Expression, planes: Int)
     copy(child = newChild)
 }
 
-/** Polynomial rolling hash over a string's UTF-8 bytes:
-  * h = fold(h * 31 + byte) from h0 = 17, wrapping in 64 bits — the classic
-  * order-sensitive document fingerprint. Single pass, no allocation.
-  */
 /** Word n-gram shingle STRINGS in one pass over the word array — the
   * lambda-free twin of the `transform(sequence, i -> array_join(slice))`
   * formulation, whose captured `split()` child the interpreted
@@ -267,6 +262,10 @@ case class WordShingles(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+/** Polynomial rolling hash over a string's UTF-8 bytes:
+  * h = fold(h * 31 + byte) from h0 = 17, wrapping in 64 bits — the classic
+  * order-sensitive document fingerprint. Single pass, no allocation.
+  */
 case class PolyHash64(child: Expression)
     extends UnaryExpression with CodegenFallback {
 

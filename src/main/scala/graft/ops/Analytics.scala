@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Engine.LoopCheckpointOps
 import graft.Tables
 import graft.transform.Transforms.dsum
 
@@ -1084,7 +1085,7 @@ object Analytics {
     val items = t.lineitem
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("pk"))
       .distinct()
-      .localCheckpoint()
+      .loopCheckpoint()
     val itemN = items.groupBy("pk").agg(count(lit(1)).as("nItem"))
     val total = items.select(countDistinct(col("okey")).as("nBaskets"))
     val pairs = Graph.sharedCoPurchase(t)
@@ -1103,7 +1104,7 @@ object Analytics {
           (col("n1") * col("n2")).cast("double")).as("lift"))
       .orderBy(col("lift").desc, col("p1"), col("p2"))
       .limit(k)
-      .localCheckpoint()
+      .loopCheckpoint()
     graft.Engine.freeCheckpoint(items)
     out
   }
@@ -1436,23 +1437,6 @@ object Analytics {
       .orderBy("cohort", "age")
   }
 
-  /** Held-out evaluation of the co-purchase recommender — the offline
-    * metric loop every recommendation pipeline runs before shipping a
-    * model: baskets split at the DATA-DRIVEN midpoint of the order-date
-    * range (the [[graft.ops.Events.qCuped]] convention — a calendar
-    * literal would put every order on one side of a differently-dated
-    * drop), co-occurrence counts build on the TRAIN side only, top-k
-    * recommendations per probe part rank by (count desc, candidate asc),
-    * and hit-rate@k scores them against the TEST baskets that contain
-    * the probe ("did the basket also contain something we would have
-    * recommended").
-    *
-    * Scale: the train-side pair build is the standard bounded-basket
-    * self-join (fan-out capped by basket size); the ranking window is
-    * per-probe (probe-bounded, never global); test scoring joins the
-    * (probe × k) recommendation frame — broadcast-sized — against the
-    * test baskets. All counts exact integers; the rate is one division.
-    */
   /** Train/test frames shared by [[qRecEval]] and [[qRecNdcg]]. The
     * expensive members (train-side pair build + ranked recommendations;
     * the test basket frame) are session-cached per dataset dir like the
@@ -1506,6 +1490,23 @@ object Analytics {
     RecFrames(recs, testB, withU)
   }
 
+  /** Held-out evaluation of the co-purchase recommender — the offline
+    * metric loop every recommendation pipeline runs before shipping a
+    * model: baskets split at the DATA-DRIVEN midpoint of the order-date
+    * range (the [[graft.ops.Events.qCuped]] convention — a calendar
+    * literal would put every order on one side of a differently-dated
+    * drop), co-occurrence counts build on the TRAIN side only, top-k
+    * recommendations per probe part rank by (count desc, candidate asc),
+    * and hit-rate@k scores them against the TEST baskets that contain
+    * the probe ("did the basket also contain something we would have
+    * recommended").
+    *
+    * Scale: the train-side pair build is the standard bounded-basket
+    * self-join (fan-out capped by basket size); the ranking window is
+    * per-probe (probe-bounded, never global); test scoring joins the
+    * (probe × k) recommendation frame — broadcast-sized — against the
+    * test baskets. All counts exact integers; the rate is one division.
+    */
   def qRecEval(t: Tables, probeMod: Int = 199, k: Int = 5): DataFrame = {
     val RecFrames(recs, testB, withU) = recFrames(t, probeMod, k)
     val nRecs = recs.groupBy("u").agg(count(lit(1)).as("n_recs"))

@@ -157,21 +157,19 @@ object Events {
     // otherwise re-evaluate the nested plans — six event-table scans for
     // three stages); counts are driver-side scalars, the same
     // orchestration pattern as connectedComponents' convergence counter
-    val s1 = ev.filter(col("event_type") === "click")
-      .groupBy("user_id").agg(min("ts_ns").as("t1"))
-      .localCheckpoint()
-    val s2 = ev.filter(col("event_type") === "view")
-      .join(s1, "user_id")
-      .filter(col("ts_ns") >= col("t1"))
-      .groupBy("user_id").agg(min("ts_ns").as("t2"))
-      .localCheckpoint()
+    val (s1, n1) = graft.Engine.loopCheckpointWith(
+      ev.filter(col("event_type") === "click")
+        .groupBy("user_id").agg(min("ts_ns").as("t1")))(_.count())
+    val (s2, n2) = graft.Engine.loopCheckpointWith(
+      ev.filter(col("event_type") === "view")
+        .join(s1, "user_id")
+        .filter(col("ts_ns") >= col("t1"))
+        .groupBy("user_id").agg(min("ts_ns").as("t2")))(_.count())
     val n3 = ev.filter(col("event_type") === "purchase")
       .join(s2, "user_id")
       .filter(col("ts_ns") >= col("t2"))
       .select("user_id").distinct()
       .count()
-    val n1 = s1.count()
-    val n2 = s2.count()
     graft.Engine.freeCheckpoint(s1)
     graft.Engine.freeCheckpoint(s2)
     val rate12: java.lang.Double = if (n1 == 0) null else n2.toDouble / n1
@@ -1013,7 +1011,7 @@ object Events {
     val bounds = ev.agg(min("h").as("lo"), max("h").as("hi"))
     val spine = bounds
       .select(explode(sequence(col("lo"), col("hi"))).as("h"))
-      .localCheckpoint()
+      .loopCheckpoint()
     def series(et: String) = spine
       .join(ev.filter(col("event_type") === et)
           .groupBy("h").agg(count(lit(1)).as("n")),
@@ -1049,7 +1047,7 @@ object Events {
                   col("sy").cast(DecimalType(28, 0)) * col("sy")).cast("double")),
           9).as("xcorr"))
       .orderBy("lag")
-      .localCheckpoint()
+      .loopCheckpoint()
     graft.Engine.freeCheckpoint(spine)
     out
   }
@@ -1885,21 +1883,6 @@ object Events {
       .orderBy("type_a", "type_b")
   }
 
-  /** Daily growth accounting: every active user-day classified as NEW
-    * (first day ever), RETAINED (also active the previous calendar day)
-    * or RESURRECTED (active before, but not yesterday), plus CHURNED —
-    * users active on day d−1 whose next active day is not d. The
-    * product-analytics ledger behind "where did today's actives come
-    * from"; the conservation law active = new + retained + resurrected
-    * holds row by row, and churned(d) = active(d−1) − retained(d). All
-    * cells are exact integer counts.
-    *
-    * Scale: one distinct over (user, day), then user-partitioned lag/
-    * lead windows — everything shuffles once on the user key; the
-    * day-level rollup is calendar-sized. Churn needs the NEXT active
-    * day, so it reads the same windowed frame shifted by one day — no
-    * second scan of the fact.
-    */
   /** The lazy user-day grid behind [[qGrowthAccounting]]: distinct
     * active days with prev/next from ONE ordered window — "first day
     * ever" ⟺ no previous active day, so a separate partition-min window
@@ -1916,6 +1899,21 @@ object Events {
       .withColumn("next_day", lead("day", 1).over(byUser))
   }
 
+  /** Daily growth accounting: every active user-day classified as NEW
+    * (first day ever), RETAINED (also active the previous calendar day)
+    * or RESURRECTED (active before, but not yesterday), plus CHURNED —
+    * users active on day d−1 whose next active day is not d. The
+    * product-analytics ledger behind "where did today's actives come
+    * from"; the conservation law active = new + retained + resurrected
+    * holds row by row, and churned(d) = active(d−1) − retained(d). All
+    * cells are exact integer counts.
+    *
+    * Scale: one distinct over (user, day), then user-partitioned lag/
+    * lead windows — everything shuffles once on the user key; the
+    * day-level rollup is calendar-sized. Churn needs the NEXT active
+    * day, so it reads the same windowed frame shifted by one day — no
+    * second scan of the fact.
+    */
   def qGrowthAccounting(t: Tables): DataFrame = {
     // The windowed grid is materialized: its three consumers (actives
     // rollup, churn rollup, horizon scalar) would otherwise each re-scan
@@ -1944,7 +1942,7 @@ object Events {
     val out = daily.join(churn, Seq("day"), "left")
       .na.fill(0L, Seq("n_churned"))
       .orderBy("day")
-      .localCheckpoint() // calendar-sized ledger; lets the grid cache go
+      .loopCheckpoint() // calendar-sized ledger; lets the grid cache go
     graft.Engine.freeCheckpoint(grid)
     out
   }

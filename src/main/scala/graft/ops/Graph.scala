@@ -76,7 +76,16 @@ object Graph {
     * callers must not free it.
     */
   private final case class EdgeIndex(
-      edges: DataFrame, deg: DataFrame, nNodes: Long, minNode: Long)
+      edges: DataFrame, deg: DataFrame, nNodes: Long, minNode: Long) {
+    /** `df` hinted for broadcast while the graph has at most 1e6 nodes.
+      * Node-sized frames (degrees, ranks, labels, frontiers) are a
+      * dimension, not the edge fact: while they fit the broadcast tier
+      * they join map-side and the edge frame never shuffles per round;
+      * past that they join shuffled, keyed by node.
+      */
+    def maybeBroadcast(df: DataFrame): DataFrame =
+      if (nNodes <= 1000000L) broadcast(df) else df
+  }
 
   private def coPurchaseWeightedCached(t: Tables): DataFrame =
     edgeIndexCached(t).edges
@@ -112,18 +121,11 @@ object Graph {
     val nNodes = idx.nNodes
     locally {
       val base = 150000000L / nNodes // (1 - d) * 1e9 / N, floored once
-      // degree and rank state are node-sized (a dimension, not the edge
-      // fact): while they fit the broadcast tier they join map-side and the
-      // edge frame never shuffles per round; past ~1e6 nodes fall back to a
-      // shuffled join keyed by src (the same co-partitioned shape
-      // connectedComponents uses at any scale)
-      def maybeBroadcast(df: DataFrame): DataFrame =
-        if (nNodes <= 1000000L) broadcast(df) else df
       // loop-invariant (src, dst, deg): left LAZY on purpose — each round
       // re-reads the checkpointed edge rows and re-applies the broadcast
       // deg join (a map-side hash probe), which is cheaper than writing a
       // second edge-sized checkpoint just to avoid it
-      val edgesD = edges0.join(maybeBroadcast(deg), "src")
+      val edgesD = edges0.join(idx.maybeBroadcast(deg), "src")
       // the initial rank frame is checkpointed too: the free-previous walk
       // unpersists every LogicalRDD in the freed frame's plan, so frames
       // entering the prev-chain must be self-contained — a lazy frame here
@@ -134,7 +136,7 @@ object Graph {
       var prev: DataFrame = null
       for (_ <- 1 to iters) {
         val next = edgesD
-          .join(maybeBroadcast(ranks), col("src") === col("node"))
+          .join(idx.maybeBroadcast(ranks), col("src") === col("node"))
           .select(col("dst"),
             expr("(r * 85) div (100 * deg)").as("c"))
           .groupBy(col("dst").as("node"))
@@ -164,9 +166,6 @@ object Graph {
     val edges0 = idx.edges.select("src", "dst")
     // node count and the deterministic seed come from the shared index —
     // per-query they each cost a full edge scan + shuffle
-    val nNodes = idx.nNodes
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (nNodes <= 1000000L) broadcast(df) else df
     val seed = idx.minNode
     // one checkpointed frame PER HOP, and the visited set is the lazy
     // union of those already-materialized frames — re-checkpointing the
@@ -186,9 +185,9 @@ object Graph {
       // fill in when the next hop's join first scans the frame)
       val (next, empty) = graft.Engine.loopCheckpointWith(
         edges0
-          .join(maybeBroadcast(frontier.select(col("node").as("src"))), "src")
+          .join(idx.maybeBroadcast(frontier.select(col("node").as("src"))), "src")
           .select(col("dst").as("node")).distinct()
-          .join(maybeBroadcast(visited), Seq("node"), "left_anti")
+          .join(idx.maybeBroadcast(visited), Seq("node"), "left_anti")
           .withColumn("hop", lit(h.toLong)))(_.isEmpty)
       growing = !empty
       if (growing) {
@@ -219,11 +218,9 @@ object Graph {
     val edges = idx.edges.select("src", "dst")
     val deg = idx.deg.select(col("src"), col("deg").as("d"))
     val nNodes = idx.nNodes
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (nNodes <= 1000000L) broadcast(df) else df
     val m = edges
-      .join(maybeBroadcast(deg.select(col("src"), col("d").as("ds"))), "src")
-      .join(maybeBroadcast(
+      .join(idx.maybeBroadcast(deg.select(col("src"), col("d").as("ds"))), "src")
+      .join(idx.maybeBroadcast(
         deg.select(col("src").as("dst"), col("d").as("dt"))), "dst")
       .agg(
         count(lit(1)).as("n_edges"),
@@ -268,9 +265,6 @@ object Graph {
   private def propagateLabels(t: Tables, iters: Int): DataFrame = {
     val idx = edgeIndexCached(t)
     val edges = idx.edges.select("src", "dst")
-    val nNodes = idx.nNodes
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (nNodes <= 1000000L) broadcast(df) else df
     // initial labels from the index's (node-unique, materialized) degree
     // frame — no distinct shuffle over edges; re-checkpointed so round 1's
     // free of the superseded frame cannot unpersist the cache-owned deg
@@ -278,7 +272,7 @@ object Graph {
       .loopCheckpoint()
     for (_ <- 1 to iters) {
       val next = edges
-        .join(maybeBroadcast(labels.withColumnRenamed("node", "src")), "src")
+        .join(idx.maybeBroadcast(labels.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("dst").as("node"))
@@ -318,16 +312,15 @@ object Graph {
   def qModularity(t: Tables, iters: Int = 3): DataFrame = {
     val idx = edgeIndexCached(t)
     val edges = idx.edges.select("src", "dst")
-    val labels = propagateLabelsCached(t, iters) // cache-owned checkpoint
-    val nNodes = idx.nNodes // label frame is node-complete by construction
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (nNodes <= 1000000L) broadcast(df) else df
+    // cache-owned checkpoint; node-complete, so the index's node count
+    // sizes it for the broadcast choice
+    val labels = propagateLabelsCached(t, iters)
     val dTot = edges.count() // directed edge count = 2m (cheap: edges are
     // materialized index rows)
     edges
-      .join(maybeBroadcast(
+      .join(idx.maybeBroadcast(
         labels.select(col("node").as("src"), col("lbl").as("ls"))), "src")
-      .join(maybeBroadcast(
+      .join(idx.maybeBroadcast(
         labels.select(col("node").as("dst"), col("lbl").as("lt"))), "dst")
       .groupBy(col("ls").as("community"))
       .agg(
@@ -354,13 +347,11 @@ object Graph {
     val und = idx.edges.select("src", "dst").filter(col("src") < col("dst"))
       .select(col("src").as("s"), col("dst").as("t"))
     val deg = idx.deg.select(col("src").as("n"), col("deg").as("d"))
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
     val lower = col("ds") < col("dt") ||
       (col("ds") === col("dt") && col("s") < col("t"))
     und
-      .join(maybeBroadcast(deg.select(col("n").as("s"), col("d").as("ds"))), "s")
-      .join(maybeBroadcast(deg.select(col("n").as("t"), col("d").as("dt"))), "t")
+      .join(idx.maybeBroadcast(deg.select(col("n").as("s"), col("d").as("ds"))), "s")
+      .join(idx.maybeBroadcast(deg.select(col("n").as("t"), col("d").as("dt"))), "t")
       .select(
         when(lower, col("s")).otherwise(col("t")).as("u"),
         when(lower, col("t")).otherwise(col("s")).as("v"),
@@ -451,8 +442,6 @@ object Graph {
     val idx = edgeIndexCached(t)
     val edges = idx.edges.select("src", "dst")
     val deg = idx.deg
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
     val probes = edges.filter(pmod(col("src"), lit(probeMod)) === 0)
       .select(col("src").as("u"), col("dst").as("w"))
     val common = probes
@@ -461,9 +450,9 @@ object Graph {
       .groupBy("u", "v").agg(count(lit(1)).as("n_common"))
       .join(edges.select(col("src").as("u"), col("dst").as("v")),
         Seq("u", "v"), "left_anti")
-      .join(maybeBroadcast(deg.select(col("src").as("u"),
+      .join(idx.maybeBroadcast(deg.select(col("src").as("u"),
         col("deg").as("du"))), "u")
-      .join(maybeBroadcast(deg.select(col("src").as("v"),
+      .join(idx.maybeBroadcast(deg.select(col("src").as("v"),
         col("deg").as("dv"))), "v")
       .withColumn("n_union", col("du") + col("dv") - col("n_common"))
       .withColumn("jac_units",
@@ -519,11 +508,9 @@ object Graph {
     import org.apache.spark.sql.types.DecimalType
     val idx = edgeIndexCached(t)
     val deg = idx.deg
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
     idx.edges.select("src", "dst")
-      .join(maybeBroadcast(deg.select(col("src"), col("deg").as("ds"))), "src")
-      .join(maybeBroadcast(
+      .join(idx.maybeBroadcast(deg.select(col("src"), col("deg").as("ds"))), "src")
+      .join(idx.maybeBroadcast(
         deg.select(col("src").as("dst"), col("deg").as("dt"))), "dst")
       .agg(
         count(lit(1)).as("n"),
@@ -544,6 +531,46 @@ object Graph {
               (col("n").cast("double") * col("syy").cast("double") -
                 col("sy").cast("double") * col("sy").cast("double"))), 9)
           .as("assortativity"))
+  }
+
+  /** Single-k peel: the stabilized symmetric edge frame of the k-core of
+    * `edges0` (src/dst, both directions). Returns a checkpointed frame the
+    * caller owns; the input is never freed. Package-private so the spec
+    * can cross-check it against a brute-force peel on crafted graphs.
+    */
+  private[graft] def kcoreSurvivors(
+      edges0: DataFrame, k: Int, maxIter: Int = 30,
+      keepHint: DataFrame => DataFrame = broadcast(_)): DataFrame = {
+    var edges = edges0
+    var owned = false
+    var prevCount = edges.count()
+    var done = false
+    var i = 0
+    while (!done && i < maxIter) {
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      // the survivor set is node-sized: broadcasting it turns BOTH
+      // semi-joins into map-side probes, so each peel round shuffles the
+      // edge frame once (the degree aggregate) instead of three times
+      val keep0 = deg.filter(col("deg") >= k).select(col("src"))
+      val keep = keepHint(keep0)
+      // the symmetric edge frame's src-degree equals the undirected
+      // degree; convergence = no edge was dropped this round. The count
+      // witness materializes the lazy round checkpoint — one job per peel.
+      val (next, c) = graft.Engine.loopCheckpointWith(
+        edges
+          .join(keep, Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
+          .select("src", "dst"))(_.count())
+      done = c == prevCount
+      prevCount = c
+      if (owned) graft.Engine.freeCheckpoint(edges)
+      edges = next
+      owned = true
+      i += 1
+    }
+    if (!done) throw new IllegalStateException(
+      s"kcoreSurvivors: $k-core peel did not converge in $maxIter rounds")
+    edges
   }
 
   /** k-core decomposition by iterative peeling: repeatedly delete nodes of
@@ -569,46 +596,6 @@ object Graph {
     * `qKcore(maxIter = 4)` matches the default run, and a brute-force
     * cross-check covers crafted graphs.
     */
-  /** Single-k peel: the stabilized symmetric edge frame of the k-core of
-    * `edges0` (src/dst, both directions). Returns a checkpointed frame the
-    * caller owns; the input is never freed. Package-private so the spec
-    * can cross-check it against a brute-force peel on crafted graphs.
-    */
-  private[graft] def kcoreSurvivors(
-      edges0: DataFrame, k: Int, maxIter: Int = 30,
-      broadcastKeep: Boolean = true): DataFrame = {
-    var edges = edges0
-    var owned = false
-    var prevCount = edges.count()
-    var done = false
-    var i = 0
-    while (!done && i < maxIter) {
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      // the survivor set is node-sized: broadcasting it turns BOTH
-      // semi-joins into map-side probes, so each peel round shuffles the
-      // edge frame once (the degree aggregate) instead of three times
-      val keep0 = deg.filter(col("deg") >= k).select(col("src"))
-      val keep = if (broadcastKeep) broadcast(keep0) else keep0
-      // the symmetric edge frame's src-degree equals the undirected
-      // degree; convergence = no edge was dropped this round. The count
-      // witness materializes the lazy round checkpoint — one job per peel.
-      val (next, c) = graft.Engine.loopCheckpointWith(
-        edges
-          .join(keep, Seq("src"), "left_semi")
-          .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst"))(_.count())
-      done = c == prevCount
-      prevCount = c
-      if (owned) graft.Engine.freeCheckpoint(edges)
-      edges = next
-      owned = true
-      i += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"kcoreSurvivors: $k-core peel did not converge in $maxIter rounds")
-    edges
-  }
-
   def qKcore(t: Tables, ks: Seq[Int] = Seq(2, 4, 8), maxIter: Int = 30): DataFrame = {
     val spark = t.spark
     var cur = coPurchaseEdgesCached(t) // shared index; do not free
@@ -616,8 +603,7 @@ object Graph {
     val idx = edgeIndexCached(t)
     val rows = ks.sorted.map { k =>
       // cores are nested: peel the previous k's survivors, not the full graph
-      val surv = kcoreSurvivors(cur, k, maxIter,
-        broadcastKeep = idx.nNodes <= 1000000L)
+      val surv = kcoreSurvivors(cur, k, maxIter, keepHint = idx.maybeBroadcast)
       if (curOwned) graft.Engine.freeCheckpoint(cur)
       cur = surv
       curOwned = true
@@ -654,14 +640,12 @@ object Graph {
     // fits the broadcast tier the relaxation join is a map-side hash probe
     // and the (checkpointed) edge fact never shuffles per round — AQE
     // cannot make this call itself because LogicalRDD stats are unknown
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
     var dist = weighted.sparkSession.range(1)
       .select(lit(source).as("node"), lit(0L).as("dist"))
       .loopCheckpoint()
     for (_ <- 1 to hops) {
       val next = weighted
-        .join(maybeBroadcast(dist), weighted("src") === dist("node"))
+        .join(idx.maybeBroadcast(dist), weighted("src") === dist("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .union(dist)
         .groupBy("node").agg(min("dist").as("dist"))
@@ -889,8 +873,6 @@ object Graph {
   def qHits(t: Tables, k: Int = 25): DataFrame = {
     val idx = edgeIndexCached(t)
     val edges = idx.edges.select("src", "dst")
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
     // round 1: h0 = 1e6 uniformly, so a1 is degree * 1e6 — still computed
     // through the generic join shape (the constant-h0 shortcut would not
     // survive a directed graph).
@@ -918,15 +900,15 @@ object Graph {
     }
     val h0 = idx.deg.select(col("src").as("node"), lit(1000000L).as("h"))
     val a1 = normalize(
-      edges.join(maybeBroadcast(h0), col("src") === col("node"))
+      edges.join(idx.maybeBroadcast(h0), col("src") === col("node"))
         .groupBy(col("dst").as("n2")).agg(sum("h").as("a"))
         .select(col("n2").as("node"), col("a")), "a")
     val h1 = normalize(
-      edges.join(maybeBroadcast(a1), col("dst") === col("node"))
+      edges.join(idx.maybeBroadcast(a1), col("dst") === col("node"))
         .groupBy(col("src").as("n2")).agg(sum("a").as("h"))
         .select(col("n2").as("node"), col("h")), "h")
     val a2 = normalize(
-      edges.join(maybeBroadcast(h1), col("src") === col("node"))
+      edges.join(idx.maybeBroadcast(h1), col("src") === col("node"))
         .groupBy(col("dst").as("n2")).agg(sum("h").as("a"))
         .select(col("n2").as("node"), col("a")), "a")
     val out = h1.join(a2, "node")
@@ -958,9 +940,7 @@ object Graph {
     val edges0 = idx.edges.select("src", "dst")
     val deg = idx.deg
     val seed = idx.minNode
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (idx.nNodes <= 1000000L) broadcast(df) else df
-    val edgesD = edges0.join(maybeBroadcast(deg), "src")
+    val edgesD = edges0.join(idx.maybeBroadcast(deg), "src")
     val spark = edges0.sparkSession
     var ranks = spark.range(1)
       .select(lit(seed).as("node"), lit(1000000000L).as("r"))
@@ -968,7 +948,7 @@ object Graph {
     var prev: DataFrame = null
     for (_ <- 1 to iters) {
       val contrib = edgesD
-        .join(maybeBroadcast(ranks), col("src") === col("node"))
+        .join(idx.maybeBroadcast(ranks), col("src") === col("node"))
         .select(col("dst").as("node"),
           expr("(r * 85) div (100 * deg)").as("c"))
       val restart = spark.range(1)

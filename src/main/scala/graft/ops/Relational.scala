@@ -395,15 +395,6 @@ object Relational {
       .orderBy("o_orderkey")
   }
 
-  /** Self range-join: pairs of orders by the same customer within 30 days,
-    * banded on 30-day date buckets. The join key is (custkey, bucket) with
-    * the left side probing its own and the next bucket — any qualifying
-    * pair shares exactly one bucket key (width = range span, so no
-    * dedup needed), and the exact range predicate filters post-join.
-    * Versus a bare custkey equi-join this bounds each join group to a
-    * customer-month instead of a customer-lifetime: the per-key expansion
-    * stays flat as order history grows 100x.
-    */
   /** The NAIVE formulation of [[qRangeJoinPairs]] — equi-key plus a raw
     * 30-day window inequality, no manual banding. The
     * [[graft.plans.BandRangeJoin]] optimizer rule rewrites it to the
@@ -431,6 +422,15 @@ object Relational {
       .orderBy("o_custkey")
   }
 
+  /** Self range-join: pairs of orders by the same customer within 30 days,
+    * banded on 30-day date buckets. The join key is (custkey, bucket) with
+    * the left side probing its own and the next bucket — any qualifying
+    * pair shares exactly one bucket key (width = range span, so no
+    * dedup needed), and the exact range predicate filters post-join.
+    * Versus a bare custkey equi-join this bounds each join group to a
+    * customer-month instead of a customer-lifetime: the per-key expansion
+    * stays flat as order history grows 100x.
+    */
   def qRangeJoinPairs(t: Tables): DataFrame = {
     def b30(d: Column): Column =
       floor(datediff(to_date(d), to_date(lit("1970-01-01"))) / 30)

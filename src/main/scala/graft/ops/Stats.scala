@@ -1798,23 +1798,6 @@ object Stats {
       .orderBy("decile")
   }
 
-  /** Paired t-test on per-customer mean order value, early era (orders
-    * before 1998-07-01) vs late era — the within-subject companion to
-    * [[qWelchTtest]]'s independent-samples test: each customer is their
-    * own control, so cross-customer spend variance cancels out of the
-    * statistic. Only customers with orders in BOTH eras form pairs.
-    *
-    * Exactness: per-era means are exact cent sums divided once (IEEE
-    * double division of exact integers — correctly rounded, engine-
-    * identical); the difference moments Σd and Σd² fold those doubles
-    * through DECIMAL(22,6)/DECIMAL(30,8) pins so the sums are order-free;
-    * t = mean_d / (sd_d/√n) is then a fixed double chain (sqrt is IEEE
-    * correctly-rounded), rounded at 1e-6.
-    *
-    * Scale: one customer-key aggregate over the fact table (conditional
-    * aggregation collects both eras in a single pass — no self-join), then
-    * a scalar aggregate over the customer-sized pair frame.
-    */
   /** Cohen's d (and Hedges' g) for the customer-parity A/B split over
     * per-customer revenue — the standardized effect size an experiment
     * readout reports next to [[qWelchTtest]]'s p-value ("significant,
@@ -1902,6 +1885,23 @@ object Stats {
           .as("mcnemar_corrected"))
   }
 
+  /** Paired t-test on per-customer mean order value, early era (orders
+    * before 1998-07-01) vs late era — the within-subject companion to
+    * [[qWelchTtest]]'s independent-samples test: each customer is their
+    * own control, so cross-customer spend variance cancels out of the
+    * statistic. Only customers with orders in BOTH eras form pairs.
+    *
+    * Exactness: per-era means are exact cent sums divided once (IEEE
+    * double division of exact integers — correctly rounded, engine-
+    * identical); the difference moments Σd and Σd² fold those doubles
+    * through DECIMAL(22,6)/DECIMAL(30,8) pins so the sums are order-free;
+    * t = mean_d / (sd_d/√n) is then a fixed double chain (sqrt is IEEE
+    * correctly-rounded), rounded at 1e-6.
+    *
+    * Scale: one customer-key aggregate over the fact table (conditional
+    * aggregation collects both eras in a single pass — no self-join), then
+    * a scalar aggregate over the customer-sized pair frame.
+    */
   def qPairedTtest(t: Tables): DataFrame = {
     val cut = "TIMESTAMP '1998-07-01 00:00:00'"
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
@@ -2177,19 +2177,6 @@ object Stats {
       .orderBy("decile")
   }
 
-  /** Value-at-Risk and conditional VaR (expected shortfall) of daily
-    * order revenue at the 95% and 99% levels — the tail-risk summary a
-    * finance-facing warehouse reports next to the mean: VaR is the
-    * ⌈(1−q)·n⌉-th WORST day (type-1 order statistic, an actual observed
-    * value), CVaR the exact mean of the days at or below it.
-    *
-    * Exactness: daily cents are exact longs; VaR is an element pick by
-    * integer rank; CVaR is one IEEE division of exact sums.
-    *
-    * Scale: the fact collapses to a day-count frame in one aggregate;
-    * the rank runs on that calendar-sized frame (bounded by days, not
-    * data).
-    */
   /** Tukey HSD pairwise comparisons over the order-priority groups — the
     * post-hoc companion to [[qAnova]]: which pairs of group means differ,
     * via the studentized-range statistic q = (mᵢ−mⱼ) /
@@ -2237,7 +2224,7 @@ object Stats {
             (lit(1.0) / col("n1").cast("double") +
               lit(1.0) / col("n2").cast("double"))), 6).as("q_stat"))
       .orderBy("grp1", "grp2")
-      .localCheckpoint() // k²-row result; lets the group-frame cache go
+      .loopCheckpoint() // k²-row result; lets the group-frame cache go
     graft.Engine.freeCheckpoint(g)
     out
   }
@@ -2281,6 +2268,19 @@ object Stats {
             col("den").cast("double")), 9).as("alpha"))
   }
 
+  /** Value-at-Risk and conditional VaR (expected shortfall) of daily
+    * order revenue at the 95% and 99% levels — the tail-risk summary a
+    * finance-facing warehouse reports next to the mean: VaR is the
+    * ⌈(1−q)·n⌉-th WORST day (type-1 order statistic, an actual observed
+    * value), CVaR the exact mean of the days at or below it.
+    *
+    * Exactness: daily cents are exact longs; VaR is an element pick by
+    * integer rank; CVaR is one IEEE division of exact sums.
+    *
+    * Scale: the fact collapses to a day-count frame in one aggregate;
+    * the rank runs on that calendar-sized frame (bounded by days, not
+    * data).
+    */
   def qVarCvar(t: Tables, levels: Seq[Int] = Seq(95, 99)): DataFrame =
     varCvarEpilogue(varCvarDaily(t.orders), levels)
 

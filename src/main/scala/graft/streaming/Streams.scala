@@ -622,8 +622,7 @@ object Streams {
         docsStream(spark, dir, globFilter)
           .select(col("source"),
             explode(graft.ext.Dedup.words(col("text"))).as("word"))
-          .groupBy("source", "word").agg(count(lit(1)).as("c"))),
-      checkpoint = true)
+          .groupBy("source", "word").agg(count(lit(1)).as("c"))))
 
   /** Streaming drain of the deterministic corpus split — the ingest-time
     * twin of [[graft.ext.Sampling.qHashSplit]], sharing its oracle: the

@@ -128,4 +128,7 @@ class CheckpointModeSpec extends SparkSuite {
   bothModes("BPE merges")(ext.TextAnalysis.qBpeMerges(tables).collect().toSeq)
   bothModes("dedup funnel connected components")(
     ext.Dedup.qDedupPipeline(tables).collect().toSeq)
+  bothModes("logistic regression training")(
+    ext.Classifier.qLrTrain(tables).collect().toSeq)
+  bothModes("ordered funnel steps")(ops.Events.qFunnelSteps(tables).collect().toSeq)
 }

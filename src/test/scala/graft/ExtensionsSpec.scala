@@ -105,6 +105,22 @@ class ExtensionsSpec extends SparkSuite {
       "explain.noCheckpoint", "drain.timeoutMs"), s"spark.graft keys: $keys")
   }
 
+  test("src/main checkpoints only through Engine, and no operator takes a checkpoint flag") {
+    // one materialization path: every checkpoint honours the checkpoint
+    // mode and reports its stored size; a per-operator flag that returns
+    // an unexecutable frame would audit a plan production never runs
+    val sources = mainSources()
+    val direct = sources.collect {
+      case (f, text) if text.contains("localCheckpoint(") || text.contains(".checkpoint(") =>
+        f.toString
+    }
+    assert(direct == Seq("src/main/scala/graft/Engine.scala"), direct)
+    val flagged = sources.collect {
+      case (f, text) if text.contains("checkpoint: Boolean") => f.toString
+    }
+    assert(flagged.isEmpty, flagged)
+  }
+
   test("only plans/shim.scala touches experimental strategies and rules") {
     // GraftExtensions is the one install list; the shim is the one place
     // that applies it to a session built without it

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.Md5
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 import scala.jdk.CollectionConverters._
 
@@ -44,6 +50,35 @@ class PlanAuditSpec extends SparkSuite {
     spark.conf.set(key, "-1")
     try body
     finally spark.conf.set(key, before)
+  }
+
+  /** The final physical plan of every checkpoint `build` executes, in
+    * execution order, data-cache builds included (the caches are reset
+    * first). Each checkpoint runs as a SQL execution named
+    * `localCheckpoint` or `checkpoint`; listener events arrive in order,
+    * so a marker action run after `build` bounds the wait for them.
+    */
+  private def executedCheckpoints(build: => Any): Seq[SparkPlan] = {
+    Engine.resetDataCaches()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val marker = spark.range(1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe eq marker.queryExecution) drained.countDown()
+        else if (funcName == "localCheckpoint" || funcName == "checkpoint")
+          plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      build
+      marker.collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "no checkpoint executed")
+    plans.asScala.toSeq
   }
 
   private def shuffleCount(plan: String): Int =
@@ -93,20 +128,21 @@ class PlanAuditSpec extends SparkSuite {
     // band/bucket grouping + pair dedup + final sort are the only
     // shuffles ON TOP OF the fingerprint aggregate; the verify joins on
     // candidate ids must broadcast (candidate set is bucket-cap bounded)
-    val p = graft.ext.Dedup
+    val plans = executedCheckpoints(graft.ext.Dedup
       .simhashPortablePairs(tables.documents, "doc_id", "text",
-        maxHamming = 3, maxBucket = 100, checkpoint = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+        maxHamming = 3, maxBucket = 100))
+    val nodes = plans.flatMap(planNodes)
     // the candidate-id semi-join carries an explicit broadcast hint; the
     // two fingerprint fetch joins are left to AQE (verifyJaccard's
-    // pattern) — statically they must at least not plan a cartesian
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 1,
-      "candidate id set not broadcast")
-    assert(!p.contains("CartesianProduct"), "verify join went cartesian")
+    // pattern) — they must at least not plan a cartesian
+    assert(nodes.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 1,
+      s"candidate id set not broadcast:\n${plans.mkString("\n")}")
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), "verify join went cartesian")
     // the fingerprint is the native per-row expression — a map-side
     // projection, so the word stream never explodes into an aggregate
-    assert(p.toLowerCase.contains("portablesimhash"),
-      "fingerprint not the native per-row expression")
+    assert(nodes.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.PortableSimhash60]))),
+      s"fingerprint not the native per-row expression:\n${plans.mkString("\n")}")
   }
 
   test("native as-of join plans the custom exec between sorted exchanges") {
@@ -642,25 +678,33 @@ class PlanAuditSpec extends SparkSuite {
     // the ADC join — per-query distance tables must broadcast, and the
     // only shuffles after encoding are the code argmin window, the
     // (qid,nid) ADC sum, the per-query top-k, and the output sort
-    val p = graft.ext.Similarity.qKnnIvfPq(tables, checkpoint = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("BroadcastHashJoin"), s"query tables not broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"), s"ADC join went cartesian:\n$p")
-    val n = shuffleCount(p)
+    // (the candidate frame is a session cache: its build checkpoints the
+    // ADC join, the query checkpoints the top-k, so count across both)
+    val plans = executedCheckpoints(graft.ext.Similarity.qKnnIvfPq(tables))
+    val p = plans.mkString("\n")
+    val nodes = plans.flatMap(planNodes)
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"query tables not broadcast:\n$p")
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"ADC join went cartesian:\n$p")
+    val n = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
     assert(n <= 5, s"expected <=5 shuffle exchanges, got $n:\n$p")
-    assert(p.contains("partial_bounded_topk") || p.contains("partial_boundedtopk"),
-      "no map-side partial for the per-query top-k")
+    assert(nodes.exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+          e.mode == Partial && e.aggregateFunction.isInstanceOf[graft.functions.BoundedTopK])
+        case _ => false
+      }, s"no map-side partial for the per-query top-k:\n$p")
   }
 
   /** Every node of a physical plan: through adaptive wrappers, query
-    * stages and subqueries.
+    * stages, cached relations and subqueries.
     */
   private def planNodes(
       p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     p match {
       case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
       case s: QueryStageExec => s +: planNodes(s.plan)
+      case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
       case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
     }
   }
@@ -673,8 +717,7 @@ class PlanAuditSpec extends SparkSuite {
     // AQE plan after execution.
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     val df = SparkEntry.queries("q_pr_auc")(spark, sfDir)
     df.collect()
     val root = df.queryExecution.executedPlan
@@ -706,7 +749,6 @@ class PlanAuditSpec extends SparkSuite {
     // construction (a fixed number of bins, deciles, variants or
     // candidates); fact-scaling ranks and running sums use ops.Prefix.
     // Streaming drains and the pipeline run are not planned here.
-    import org.apache.spark.sql.execution.window.WindowExec
     val bounded = Map(
       "q_abc_class" -> "3 class rows",
       "q_autocorr" -> "one row per calendar day",
@@ -777,16 +819,18 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("span alignments: hashed gram keys, one run window, no cartesian or fact sort") {
-    val p = graft.ext.Dedup.qSpanAlignments(tables, checkpoint = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
+    val plans = executedCheckpoints(graft.ext.Dedup.qSpanAlignments(tables))
+    val p = plans.mkString("\n")
+    val nodes = plans.flatMap(planNodes)
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian crept in:\n$p")
     // the run-assembly window over (pair, diagonal) groups is the ONLY
     // window; a second one would mean a rank snuck into candidate gen
-    assert("\\(\\d+\\) Window".r.findAllIn(p).length == 1,
+    assert(nodes.count(_.isInstanceOf[WindowExec]) == 1,
       s"expected exactly one window:\n$p")
     // gram text must not cross an exchange: the join key is the 60-bit
-    // md5 projection (plan shows conv/substring/md5, not a raw g key)
-    assert(p.contains("md5"), s"gram hashing missing from plan:\n$p")
+    // md5 projection (conv/substring/md5, not a raw g key)
+    assert(nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[Md5]))),
+      s"gram hashing missing from plan:\n$p")
   }
 
   test("incremental dedup: gram index broadcast by default, conf-switched shuffled join, same verdicts") {
@@ -844,25 +888,28 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("DoReMi mix: fact shuffles are the two count aggregates, epilogue is broadcast") {
-    val p = graft.ext.Sampling.qMixDoremi(Tables(spark, sfDir), checkpoint = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(!p.contains("CartesianProduct"), s"cartesian:\n$p")
+    val plans = executedCheckpoints(graft.ext.Sampling.qMixDoremi(Tables(spark, sfDir)))
+    val p = plans.mkString("\n")
+    val nodes = plans.flatMap(planNodes)
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian:\n$p")
     // vocab-sized epilogue: corpus scalar row broadcast onto the
     // source-count frame; the k-row share window is allowed
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
+    assert(nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[BroadcastHashJoinExec]),
       s"corpus frame not broadcast:\n$p")
   }
 
   test("SemDeDup: keep decision reads checkpointed frames, no fact rescan or cartesian") {
     // assignment and pairs are checkpointed inputs; the decision epilogue
     // is a left join + one keep-ranking window — a parquet scan here
-    // means a stage re-derived the corpus
-    val p = graft.ext.Similarity.qSemDedup(tables, checkpoint = false)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(!p.contains("Scan parquet"), s"corpus re-scanned:\n$p")
-    assert(!p.contains("CartesianProduct"), s"decision join went cartesian:\n$p")
-    assert("\\(\\d+\\) Window".r.findAllIn(p).length <= 1,
-      s"extra window spec:\n$p")
+    // means a stage re-derived the corpus. The decision is the query's
+    // last checkpoint.
+    val p = executedCheckpoints(graft.ext.Similarity.qSemDedup(tables)).last
+    val nodes = planNodes(p)
+    assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]), s"corpus re-scanned:\n$p")
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
+      s"decision join went cartesian:\n$p")
+    assert(nodes.count(_.isInstanceOf[WindowExec]) <= 1, s"extra window spec:\n$p")
   }
 
   test("a materialized loop checkpoint reports its stored bytes as its size, in both checkpoint modes") {
