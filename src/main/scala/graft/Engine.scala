@@ -80,7 +80,8 @@ object Engine {
     * `spark.graft.checkpoint.dir`) and every loop switches to a RELIABLE
     * `checkpoint()` — round state survives executor loss and is not bound
     * by executor storage memory, which is what a 100 TB edge fact needs.
-    * Same loop code either way; the toggle is pure configuration.
+    * Same loop code either way, and every call materializes; the toggle is
+    * pure configuration.
     *
     * The returned frame's size estimate is at most what the checkpoint
     * stores: its block bytes (local) or its file bytes (reliable). Spark's
@@ -126,12 +127,6 @@ object Engine {
       df: org.apache.spark.sql.DataFrame,
       eager: Boolean): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
-    // Plan-audit mode (graft.Explain sets this): return the frame
-    // unmaterialized so `.explain` shows the full operator tree instead
-    // of a checkpoint scan. Never set during graded/bench execution —
-    // freeCheckpoint on an unmaterialized frame is a no-op by design.
-    if (spark.conf.getOption("spark.graft.explain.noCheckpoint").contains("true"))
-      return df
     if (spark.conf.getOption("spark.graft.checkpoint.reliable").contains("true")) {
       if (spark.sparkContext.getCheckpointDir.isEmpty)
         spark.sparkContext.setCheckpointDir(

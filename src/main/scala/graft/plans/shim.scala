@@ -37,18 +37,17 @@ object GraftSqlShim {
     * hold deserialized row objects, larger than the row bytes Spark's
     * estimates count, so a leaf already estimated below its stored bytes
     * keeps its estimate (raising it flipped `q_dup_evidence`'s candidate-pair
-    * broadcast to a shuffled join, 3 s to 11 s at sf0.1). A frame that is
-    * not a checkpoint leaf, or has nothing stored yet, is returned as it
-    * is.
+    * broadcast to a shuffled join, 3 s to 11 s at sf0.1). `df` is a
+    * checkpoint, as every frame `Engine` checkpoints is; one with nothing
+    * stored yet is returned as it is.
     */
-  def withStoredSize(df: DataFrame): DataFrame = df.queryExecution.logical match {
-    case lr: LogicalRDD =>
-      storedBytes(lr).filter(_ < lr.computeStats().sizeInBytes).fold(df) { bytes =>
-        val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-        ofRows(session, lr.copy()(session,
-          Some(Statistics(sizeInBytes = bytes.max(1L))), Some(lr.constraints)))
-      }
-    case _ => df
+  def withStoredSize(df: DataFrame): DataFrame = {
+    val lr = df.queryExecution.logical.asInstanceOf[LogicalRDD]
+    storedBytes(lr).filter(_ < lr.computeStats().sizeInBytes).fold(df) { bytes =>
+      val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+      ofRows(session, lr.copy()(session,
+        Some(Statistics(sizeInBytes = bytes.max(1L))), Some(lr.constraints)))
+    }
   }
 
   private def storedBytes(lr: LogicalRDD): Option[BigInt] =

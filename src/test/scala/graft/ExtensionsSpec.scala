@@ -66,6 +66,12 @@ class ExtensionsSpec extends SparkSuite {
     } finally files.close()
   }
 
+  /** The first group of every match of `literal` in src/main. */
+  private def mainLiterals(literal: scala.util.matching.Regex): Set[String] =
+    mainSources().flatMap { case (_, text) =>
+      literal.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+
   test("GraftExtensions injects SQL functions and the as-of strategy") {
     withSession(extended = true) { s2 =>
       assertInstalled(s2)
@@ -94,15 +100,19 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
-  test("src/main reads exactly the four spark.graft conf keys") {
+  test("src/main reads exactly the three spark.graft conf keys") {
     // a conf key that only re-picks a code path is a second mechanism for
     // one decision; a new key must be added here on purpose
-    val literal = "\"spark\\.graft\\.([A-Za-z.]+)\"".r
-    val keys = mainSources().flatMap { case (_, text) =>
-      literal.findAllMatchIn(text).map(_.group(1))
-    }.toSet
-    assert(keys == Set("checkpoint.reliable", "checkpoint.dir",
-      "explain.noCheckpoint", "drain.timeoutMs"), s"spark.graft keys: $keys")
+    val keys = mainLiterals("\"spark\\.graft\\.([A-Za-z.]+)\"".r)
+    assert(keys == Set("checkpoint.reliable", "checkpoint.dir", "drain.timeoutMs"),
+      s"spark.graft keys: $keys")
+  }
+
+  test("src/main reads exactly the six SPARK_GRAFT environment variables") {
+    // same rule as the conf keys: a new variable must be added here on purpose
+    val vars = mainLiterals("\"SPARK_GRAFT_([A-Z_]+)\"".r)
+    assert(vars == Set("BENCH_OUT", "CPUS", "ONLY", "PLANS_OUT", "SF_DIR", "WARM"),
+      s"SPARK_GRAFT variables: $vars")
   }
 
   test("src/main checkpoints only through Engine, and no operator takes a checkpoint flag") {

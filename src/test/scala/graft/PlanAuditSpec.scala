@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Md5
-import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{ExplodeBase, Md5}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowExecBase, WindowGroupLimitExec}
 
 import scala.jdk.CollectionConverters._
 
@@ -21,26 +24,6 @@ class PlanAuditSpec extends SparkSuite {
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** Full-tree audit for queries whose shared intermediates loopCheckpoint
-    * (round-10 advice): with checkpoints live, the heavy subtree appears
-    * as `Scan ExistingRDD` and scale assertions pass vacuously — and
-    * constructing the query in a test eagerly executes the build.
-    * `noCheckpoint` makes checkpoints pass-throughs (no execution, full
-    * operator tree). Data caches are reset before (so a frame another
-    * suite already materialized doesn't truncate the tree) and after (so
-    * an UNMATERIALIZED frame stored by a cache built under noCheckpoint
-    * never leaks into later suites' real executions).
-    */
-  private def fullPlan(name: String): String = {
-    Engine.resetDataCaches()
-    spark.conf.set("spark.graft.explain.noCheckpoint", "true")
-    try formatted(name)
-    finally {
-      spark.conf.unset("spark.graft.explain.noCheckpoint")
-      Engine.resetDataCaches()
-    }
-  }
-
   /** Run `body` with broadcast joins off (threshold -1): the plan an
     * index gets once its size estimate outgrows a broadcast.
     */
@@ -52,33 +35,25 @@ class PlanAuditSpec extends SparkSuite {
     finally spark.conf.set(key, before)
   }
 
-  /** The final physical plan of every checkpoint `build` executes, in
-    * execution order, data-cache builds included (the caches are reset
-    * first). Each checkpoint runs as a SQL execution named
-    * `localCheckpoint` or `checkpoint`; listener events arrive in order,
-    * so a marker action run after `build` bounds the wait for them.
+  /** The plan of each checkpoint `build` runs ([[Explain.executedCheckpoints]]),
+    * asserting there is at least one.
     */
   private def executedCheckpoints(build: => Any): Seq[SparkPlan] = {
-    Engine.resetDataCaches()
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val marker = spark.range(1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe eq marker.queryExecution) drained.countDown()
-        else if (funcName == "localCheckpoint" || funcName == "checkpoint")
-          plans.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      build
-      marker.collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener events did not arrive")
-    } finally spark.listenerManager.unregister(listener)
-    assert(!plans.isEmpty, "no checkpoint executed")
-    plans.asScala.toSeq
+    val runs = Explain.executedCheckpoints(spark)(build)
+    assert(runs.nonEmpty, "no checkpoint executed")
+    runs.map(_.executedPlan)
+  }
+
+  /** The plans a registry query executes, as text and as planned nodes:
+    * each checkpoint its construction ran, then its own (unexecuted) plan,
+    * which reads every checkpointed frame as a scan. Each checkpointed
+    * subtree appears once.
+    */
+  private def plannedQuery(name: String): (String, Seq[SparkPlan]) = {
+    var query: org.apache.spark.sql.DataFrame = null
+    val plans = executedCheckpoints { query = SparkEntry.queries(name)(spark, sfDir) } :+
+      query.queryExecution.executedPlan
+    (plans.mkString("\n"), plans.flatMap(plannedNodes))
   }
 
   private def shuffleCount(plan: String): Int =
@@ -135,9 +110,11 @@ class PlanAuditSpec extends SparkSuite {
     // the candidate-id semi-join carries an explicit broadcast hint; the
     // two fingerprint fetch joins are left to AQE (verifyJaccard's
     // pattern) — they must at least not plan a cartesian
-    assert(nodes.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 1,
-      s"candidate id set not broadcast:\n${plans.mkString("\n")}")
-    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), "verify join went cartesian")
+    for (ns <- Seq(nodes, plans.flatMap(plannedNodes))) {
+      assert(ns.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 1,
+        s"candidate id set not broadcast:\n${plans.mkString("\n")}")
+      assert(!ns.exists(_.isInstanceOf[CartesianProductExec]), "verify join went cartesian")
+    }
     // the fingerprint is the native per-row expression — a map-side
     // projection, so the word stream never explodes into an aggregate
     assert(nodes.exists(_.expressions.exists(
@@ -270,22 +247,27 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("bigram surprisal aggregates to vocab frames: no sorts, no cache scan") {
-    val p = fullPlan("q_bigram_surprisal")
-    assert(!p.contains("InMemoryTableScan"), "rewrite should not persist")
+    val (p, nodes) = plannedQuery("q_bigram_surprisal")
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), "rewrite should not persist")
     // the vocab-join shape replaced the windowed one: the corpus LM must
     // come from hash aggregates (windows would show Sort + Window nodes
     // over the full gram stream — the 9.9s plan this replaced)
-    assert(!p.contains("Window"), s"LM must not be computed by windows:\n$p")
+    assert(!nodes.exists(n => n.isInstanceOf[WindowExecBase] || n.isInstanceOf[WindowGroupLimitExec]),
+      s"LM must not be computed by windows:\n$p")
     // exchanges: 2x spread + gram->vocab agg + vocab->firsts agg + sampled
     // doc-gram agg + the shuffle_hash LM join keys (both sides of both
     // joins — pinned to hash joins so AQE can't flip them to sort-merge)
     // + final doc agg + output sort; all but the gram->vocab partial-agg
     // exchange move vocab- or sample-sized frames
-    assert(shuffleCount(p) <= 12, s"too many exchanges:\n$p")
-    assert(p.contains("ShuffledHashJoin"),
+    val n = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(n <= 12, s"too many exchanges ($n):\n$p")
+    assert(nodes.exists(_.isInstanceOf[ShuffledHashJoinExec]),
       "LM joins must be pinned hash joins, not sort-merge")
-    assert("partial_count".r.findAllIn(p).nonEmpty,
-      "gram stream must combine map-side before its exchange")
+    assert(nodes.exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+          e.mode == Partial && e.aggregateFunction.isInstanceOf[Count])
+        case _ => false
+      }, "gram stream must combine map-side before its exchange")
   }
 
   test("tpch q19: disjunctive predicate keeps the equi-join; prefilters pushed") {
@@ -298,11 +280,11 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("anomaly IQR broadcasts the fence frame; fact side never sorts globally") {
-    val p = fullPlan("q_anomaly_iqr")
-    assert(p.contains("BroadcastHashJoin"), "fences must broadcast back")
+    val (p, nodes) = plannedQuery("q_anomaly_iqr")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), "fences must broadcast back")
     // global sort allowed only for the 5-row presentation ORDER BY: every
     // Sort node must sit above the final aggregate, not on the fact stream
-    assert(!p.contains("SortMergeJoin"), "fact joined by sort-merge")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"fact joined by sort-merge:\n$p")
   }
 
   test("centroid similarity: corpus collapses via partial vector_sum; pair join is label-sized") {
@@ -371,20 +353,19 @@ class PlanAuditSpec extends SparkSuite {
     // the corpus tf stream must never shuffle on the word key to reach
     // the (dimension-sized) topic dictionary — a sort-merge fallback
     // would reshuffle every (doc, word) pair
-    val p = fullPlan("q_topic_scores")
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 2,
-      "dictionary/hot-word guards not broadcast")
-    assert(!p.contains("SortMergeJoin"), s"corpus shuffled to meet a dim:\n$p")
+    val (p, nodes) = plannedQuery("q_topic_scores")
+    assert(nodes.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 2,
+      s"dictionary/hot-word guards not broadcast:\n$p")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"corpus shuffled to meet a dim:\n$p")
   }
 
   test("bm25 broadcasts query-term stats; corpus contributes scan passes only") {
     // the term filter runs post-explode (a posting probe at index time),
     // so the scale claims are: df/stats meet tf through broadcasts and
     // nothing falls back to a corpus-wide sort-merge join
-    val p = fullPlan("q_bm25_search")
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 1,
-      "df dimension not broadcast")
-    assert(!p.contains("SortMergeJoin"), s"query-term join fell back to SMJ:\n$p")
+    val (p, nodes) = plannedQuery("q_bm25_search")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"df dimension not broadcast:\n$p")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"query-term join fell back to SMJ:\n$p")
   }
 
   test("morton clustering key plans as the native expression, zmax broadcasts") {
@@ -634,21 +615,22 @@ class PlanAuditSpec extends SparkSuite {
     // the nPerm-way sequence explode must sit ABOVE the customer-key
     // aggregate: exactly one fact-sized Exchange (custkey), then the
     // permutation stream aggregates by b
-    val p = fullPlan("q_permutation_test")
-    assert(p.contains("Generate") && p.contains("explode("),
-      s"no explode in plan:\n$p")
-    // count tree nodes only (formatted repeats each scan in the detail
-    // section): once for the permutation stream, once for the observed gap
-    val scans = "[:+]- Scan parquet".r.findAllIn(p).length
+    val (p, nodes) = plannedQuery("q_permutation_test")
+    assert(nodes.exists {
+        case g: GenerateExec => g.generator.isInstanceOf[ExplodeBase]
+        case _ => false
+      }, s"no explode in plan:\n$p")
+    // once for the permutation stream, once for the observed gap
+    val scans = nodes.count(_.isInstanceOf[FileSourceScanExec])
     assert(scans <= 2, s"fact scanned more than twice:\n$p")
   }
 
   test("kneser-ney: probe contexts and type total broadcast") {
-    val p = fullPlan("q_kneser_ney")
-    assert(p.contains("BroadcastHashJoin"), s"probes not broadcast:\n$p")
+    val (p, nodes) = plannedQuery("q_kneser_ney")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"probes not broadcast:\n$p")
     // the continuation-count join is vocab×vocab on the gram key: hash
     // join on the shuffled key, no sort of the bigram-type frame
-    assert(!p.contains("SortMergeJoin"), s"vocab SMJ:\n$p")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"vocab SMJ:\n$p")
   }
 
   test("tukey hsd: group frame materialized once, fact never re-scanned") {
@@ -683,8 +665,10 @@ class PlanAuditSpec extends SparkSuite {
     val plans = executedCheckpoints(graft.ext.Similarity.qKnnIvfPq(tables))
     val p = plans.mkString("\n")
     val nodes = plans.flatMap(planNodes)
-    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"query tables not broadcast:\n$p")
-    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"ADC join went cartesian:\n$p")
+    for (ns <- Seq(nodes, plans.flatMap(plannedNodes))) {
+      assert(ns.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"query tables not broadcast:\n$p")
+      assert(!ns.exists(_.isInstanceOf[CartesianProductExec]), s"ADC join went cartesian:\n$p")
+    }
     val n = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
     assert(n <= 5, s"expected <=5 shuffle exchanges, got $n:\n$p")
     assert(nodes.exists {
@@ -694,20 +678,25 @@ class PlanAuditSpec extends SparkSuite {
       }, s"no map-side partial for the per-query top-k:\n$p")
   }
 
-  /** Every node of a physical plan: through adaptive wrappers, query
-    * stages, cached relations and subqueries.
+  /** Every node of a physical plan: through adaptive wrappers (their
+    * current plan, the final one once executed), query stages, cached
+    * relations and subqueries.
     */
-  private def planNodes(
-      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = walk(p, _.executedPlan)
+
+  /** Every node of a physical plan as planned: an adaptive plan is read
+    * through its initial plan, so a sort-merge join that AQE converts to
+    * a broadcast at runtime still shows as a sort-merge join.
+    */
+  private def plannedNodes(p: SparkPlan): Seq[SparkPlan] = walk(p, _.initialPlan)
+
+  private def walk(p: SparkPlan, adaptive: AdaptiveSparkPlanExec => SparkPlan): Seq[SparkPlan] =
     p match {
-      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-      case s: QueryStageExec => s +: planNodes(s.plan)
-      case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
+      case a: AdaptiveSparkPlanExec => walk(adaptive(a), adaptive)
+      case s: QueryStageExec => s +: walk(s.plan, adaptive)
+      case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan, adaptive)
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk(_, adaptive))
     }
-  }
 
   test("prefix: q_pr_auc runs one PrefixExec over one range shuffle") {
     // ops.Prefix is one operator: it requires an ordered distribution, so
@@ -716,7 +705,6 @@ class PlanAuditSpec extends SparkSuite {
     // broadcast, and no reliance on exchange reuse. Checked on the final
     // AQE plan after execution.
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     val df = SparkEntry.queries("q_pr_auc")(spark, sfDir)
     df.collect()
@@ -822,7 +810,8 @@ class PlanAuditSpec extends SparkSuite {
     val plans = executedCheckpoints(graft.ext.Dedup.qSpanAlignments(tables))
     val p = plans.mkString("\n")
     val nodes = plans.flatMap(planNodes)
-    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian crept in:\n$p")
+    for (ns <- Seq(nodes, plans.flatMap(plannedNodes)))
+      assert(!ns.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian crept in:\n$p")
     // the run-assembly window over (pair, diagonal) groups is the ONLY
     // window; a second one would mean a rank snuck into candidate gen
     assert(nodes.count(_.isInstanceOf[WindowExec]) == 1,
@@ -890,13 +879,14 @@ class PlanAuditSpec extends SparkSuite {
   test("DoReMi mix: fact shuffles are the two count aggregates, epilogue is broadcast") {
     val plans = executedCheckpoints(graft.ext.Sampling.qMixDoremi(Tables(spark, sfDir)))
     val p = plans.mkString("\n")
-    val nodes = plans.flatMap(planNodes)
-    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian:\n$p")
-    // vocab-sized epilogue: corpus scalar row broadcast onto the
-    // source-count frame; the k-row share window is allowed
-    assert(nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
-        n.isInstanceOf[BroadcastHashJoinExec]),
-      s"corpus frame not broadcast:\n$p")
+    for (nodes <- Seq(plans.flatMap(planNodes), plans.flatMap(plannedNodes))) {
+      assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), s"cartesian:\n$p")
+      // vocab-sized epilogue: corpus scalar row broadcast onto the
+      // source-count frame; the k-row share window is allowed
+      assert(nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+          n.isInstanceOf[BroadcastHashJoinExec]),
+        s"corpus frame not broadcast:\n$p")
+    }
   }
 
   test("SemDeDup: keep decision reads checkpointed frames, no fact rescan or cartesian") {
@@ -907,9 +897,30 @@ class PlanAuditSpec extends SparkSuite {
     val p = executedCheckpoints(graft.ext.Similarity.qSemDedup(tables)).last
     val nodes = planNodes(p)
     assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]), s"corpus re-scanned:\n$p")
-    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
-      s"decision join went cartesian:\n$p")
+    for (ns <- Seq(nodes, plannedNodes(p)))
+      assert(!ns.exists(_.isInstanceOf[CartesianProductExec]),
+        s"decision join went cartesian:\n$p")
     assert(nodes.count(_.isInstanceOf[WindowExec]) <= 1, s"extra window spec:\n$p")
+  }
+
+  test("Explain.executedCheckpoints returns each checkpoint a build runs, cache builds included") {
+    import org.apache.spark.sql.functions.col
+    val join = tables.orders.join(tables.lineitem, col("o_orderkey") === col("l_orderkey"))
+    var ck: org.apache.spark.sql.DataFrame = null
+    val one = Explain.executedCheckpoints(spark) { ck = Engine.loopCheckpoint(join) }
+    assert(one.size == 1, s"expected one checkpoint, got ${one.size}")
+    assert(planNodes(one.head.executedPlan).exists(_.isInstanceOf[BaseJoinExec]),
+      s"join missing from the checkpoint plan:\n${one.head.executedPlan}")
+    Engine.freeCheckpoint(ck)
+    // the edge index is a data cache: already built here, its build is
+    // still captured because the helper resets the caches first
+    def adamicAdar = SparkEntry.queries("q_adamic_adar")(spark, sfDir)
+    adamicAdar
+    val outputs = Explain.executedCheckpoints(spark)(adamicAdar)
+      .map(_.executedPlan.output.map(_.name))
+    assert(outputs.contains(Seq("src", "dst", "shared")) && outputs.contains(Seq("src", "deg")),
+      s"edge-index build not captured: $outputs")
+    assert(Explain.executedCheckpoints(spark)(SparkEntry.queries("q1_agg")(spark, sfDir)).isEmpty)
   }
 
   test("a materialized loop checkpoint reports its stored bytes as its size, in both checkpoint modes") {
