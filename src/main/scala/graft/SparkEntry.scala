@@ -4,6 +4,7 @@ import graft.ext.{Classifier, Dedup, Multimodal, Sampling, Similarity, TextAnaly
 import graft.load.Warehouse
 import graft.ops.{Analytics, Events, Graph, Relational, Skew, Stats, TpchSql}
 import graft.orchestrate.Orchestrator
+import graft.streaming.Streams
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -194,8 +195,7 @@ object SparkEntry {
     "q_dup_size_hist" -> q(Dedup.qDupSizeHist(_)),
     "q_node_jaccard" -> q(Graph.qNodeJaccard(_)),
     "q_partial_corr" -> q(Stats.qPartialCorr),
-    "q_stream_srm" -> q(t =>
-      graft.streaming.Streams.drainSrm(t.spark, t.dir, "events.parquet")),
+    "q_stream_srm" -> q(Streams.drainSrm),
     "q_mahalanobis" -> q(Stats.qMahalanobis(_)),
     "q_modularity" -> q(Graph.qModularity(_)),
     "q_bfs_hops" -> q(Graph.qBfsHops(_)),
@@ -369,14 +369,10 @@ object SparkEntry {
     "q_propensity_match" -> q(Stats.qPropensityMatch(_)),
     "q_qini_curve" -> q(Stats.qQiniCurve),
     "q_var_cvar" -> q(Stats.qVarCvar(_)),
-    "q_stream_brier" -> q(t =>
-      graft.streaming.Streams.drainBrier(t.spark, t.dir, "documents.parquet")),
-    "q_stream_holt" -> q(t =>
-      graft.streaming.Streams.drainHoltWinters(t.spark, t.dir, "events.parquet")),
-    "q_stream_var_cvar" -> q(t =>
-      graft.streaming.Streams.drainVarCvar(t.spark, t.dir, "orders.parquet")),
-    "q_stream_mmd" -> q(t =>
-      graft.streaming.Streams.drainMmdDrift(t.spark, t.dir, "documents.parquet")),
+    "q_stream_brier" -> q(Streams.drainBrier),
+    "q_stream_holt" -> q(Streams.drainHoltWinters),
+    "q_stream_var_cvar" -> q(Streams.drainVarCvar),
+    "q_stream_mmd" -> q(Streams.drainMmdDrift),
     "q_nb_confusion" -> q(Classifier.qNbConfusion),
     "q_top_terms" -> q(Sampling.qTopTerms(_)),
     "q_train_shards" -> q(Sampling.qTrainShards(_)),
@@ -429,90 +425,59 @@ object SparkEntry {
     //   -> watermarked windowed state -> sink; graded against the same
     //   oracle as the batch twin q_tumbling_window) —
     "q_stream_tumbling" -> q(t =>
-      graft.streaming.Streams.drainTumblingCounts(t.spark, t.dir, "events.parquet")
+      Streams.drainTumblingCounts(t)
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy("window_start", "event_type")),
     "q_stream_hourly_users" -> q(t =>
-      graft.streaming.Streams.drainDistinctUsers(t.spark, t.dir, "events.parquet")
+      Streams.drainDistinctUsers(t)
         .select(
           date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("n_users"))
         .orderBy("hour")),
-    "q_stream_quality_funnel" -> q(t =>
-      graft.streaming.Streams
-        .drainQualityFunnel(t.spark, t.dir, "documents.parquet")
-        .orderBy("source")),
-    "q_stream_hash_split" -> q(t =>
-      graft.streaming.Streams.drainHashSplit(t.spark, t.dir, "documents.parquet")),
-    "q_stream_moments" -> q(t =>
-      graft.streaming.Streams.drainMoments(t.spark, t.dir, "orders.parquet")),
-    "q_stream_dim_stats" -> q(t =>
-      graft.streaming.Streams.drainDimStats(t.spark, t.dir, "embeddings.parquet")),
+    "q_stream_quality_funnel" -> q(t => Streams.drainQualityFunnel(t).orderBy("source")),
+    "q_stream_hash_split" -> q(Streams.drainHashSplit),
+    "q_stream_moments" -> q(Streams.drainMoments),
+    "q_stream_dim_stats" -> q(Streams.drainDimStats),
     "q_stream_sliding" -> q(t =>
-      graft.streaming.Streams.drainSlidingCounts(t.spark, t.dir, "events.parquet")
+      Streams.drainSlidingCounts(t)
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"))
         .orderBy("window_start", "event_type")),
     "q_stream_dedup" -> q(t =>
-      graft.streaming.Streams.drainDistinctUsers(t.spark, t.dir, "events.parquet")
+      Streams.drainDistinctUsers(t)
         .select(
           date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("n_users"))
         .orderBy("hour")),
     "q_stream_upsert" -> q(t =>
-      graft.streaming.Streams.drainTumblingToWarehouse(t.spark, t.dir, "events.parquet")
+      Streams.drainTumblingToWarehouse(t)
         .orderBy("window_start", "event_type")),
-    "q_stream_sessionize" -> q(t =>
-      graft.streaming.Streams.drainSessionize(t.spark, t.dir, "events.parquet")
-        .orderBy("user_id", "session_id")),
-    "q_stream_ratelimit" -> q(t =>
-      graft.streaming.Streams.drainRateLimit(t.spark, t.dir, "events.parquet")),
-    "q_stream_transitions" -> q(t =>
-      graft.streaming.Streams.drainTransitions(t.spark, t.dir, "events.parquet")),
-    "q_stream_topterms" -> q(t =>
-      graft.streaming.Streams.drainTopTerms(t.spark, t.dir, "documents.parquet")),
-    "q_stream_incdedup" -> q(t =>
-      graft.streaming.Streams
-        .drainIncrementalDedup(t.spark, t.dir, "documents.parquet")
-        .orderBy("id_new", "id_old")),
-    "q_stream_contamination" -> q(t =>
-      graft.streaming.Streams
-        .drainContamination(t.spark, t.dir, "documents.parquet")),
-    "q_stream_mix_doremi" -> q(t =>
-      graft.streaming.Streams
-        .drainMixDoremi(t.spark, t.dir, "documents.parquet")),
-    "q_stream_neardedup" -> q(t =>
-      graft.streaming.Streams
-        .drainSimhashGroups(t.spark, t.dir, "documents.parquet")),
-    "q_stream_knn" -> q(t =>
-      graft.streaming.Streams.drainKnn(t.spark, t.dir, "embeddings.parquet")),
-    "q_stream_semdedup" -> q(t =>
-      graft.streaming.Streams.drainSemDedup(t.spark, t.dir, "embeddings.parquet")),
-    "q_stream_ivf_ingest" -> q(t =>
-      graft.streaming.Streams.drainIvfIngest(t.spark, t.dir, "embeddings.parquet")),
-    "q_stream_kanonymity" -> q(t =>
-      graft.streaming.Streams.drainKAnonymity(t.spark, t.dir, "customer.parquet")),
-    "q_stream_emd" -> q(t =>
-      graft.streaming.Streams.drainEmdDrift(t.spark, t.dir, "documents.parquet")),
-    "q_stream_slo" -> q(t =>
-      graft.streaming.Streams.drainSloBurn(t.spark, t.dir, "events.parquet")),
+    "q_stream_sessionize" -> q(t => Streams.drainSessionize(t).orderBy("user_id", "session_id")),
+    "q_stream_ratelimit" -> q(Streams.drainRateLimit),
+    "q_stream_transitions" -> q(Streams.drainTransitions),
+    "q_stream_topterms" -> q(Streams.drainTopTerms),
+    "q_stream_incdedup" -> q(t => Streams.drainIncrementalDedup(t).orderBy("id_new", "id_old")),
+    "q_stream_contamination" -> q(Streams.drainContamination),
+    "q_stream_mix_doremi" -> q(Streams.drainMixDoremi),
+    "q_stream_neardedup" -> q(Streams.drainSimhashGroups),
+    "q_stream_knn" -> q(Streams.drainKnn),
+    "q_stream_semdedup" -> q(Streams.drainSemDedup),
+    "q_stream_ivf_ingest" -> q(Streams.drainIvfIngest),
+    "q_stream_kanonymity" -> q(Streams.drainKAnonymity(_)),
+    "q_stream_emd" -> q(Streams.drainEmdDrift(_)),
+    "q_stream_slo" -> q(Streams.drainSloBurn),
     "q_dwell_time" -> q(Events.qDwellTime),
-    "q_stream_dwell" -> q(t =>
-      graft.streaming.Streams.drainDwellTime(t.spark, t.dir, "events.parquet")),
-    "q_stream_burstiness" -> q(t =>
-      graft.streaming.Streams.drainBurstiness(t.spark, t.dir, "events.parquet")),
-    "q_stream_benford" -> q(t =>
-      graft.streaming.Streams.drainBenford(t.spark, t.dir, "events.parquet")),
-    "q_stream_enrich" -> q(t =>
-      graft.streaming.Streams.drainEnrich(t.spark, t.dir, "events.parquet")
-        .orderBy("segment")),
+    "q_stream_dwell" -> q(Streams.drainDwellTime),
+    "q_stream_burstiness" -> q(Streams.drainBurstiness),
+    "q_stream_benford" -> q(Streams.drainBenford),
+    "q_stream_enrich" -> q(t => Streams.drainEnrich(t).orderBy("segment")),
     "q_stream_join" -> q(t =>
-      graft.streaming.Streams.drainClickViewJoin(t.spark, t.dir, "events.parquet")
+      Streams.drainClickViewJoin(t)
         .select(
           col("click_id"), col("user_id"),
           date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")

@@ -50,14 +50,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * maintenance — as a REAL multi-microbatch backlog, recording
   * per-microbatch wall time, input rows, and state-store rows via a
   * StreamingQueryListener. Landing-zone design: the graded drains read
-  * the driver testdata layout (one single-file parquet per table,
-  * `maxFilesPerTrigger=1` → ONE microbatch), so this leg re-cuts the
-  * corpus into `chunks` single-file parquets next to the full-table
-  * directories — static sides resolve unchanged while the stream side
-  * sees a `chunks`-deep backlog. Chunking key `pmod(id, chunks)`
-  * interleaves originals and replicas across microbatches — each batch
-  * carries fresh docs, exact dups, and near-dups of docs from OTHER
-  * batches, the adversarial arrival order for cross-batch state.
+  * the driver testdata layout (one single-file parquet per table, so ONE
+  * microbatch), so this leg re-cuts each table into a directory of
+  * `chunks` single-file parquets. [[Tables]] reads that directory whole
+  * for a drain's static side and streams it one file per microbatch, so
+  * the stream side sees a `chunks`-deep backlog. Chunking key
+  * `pmod(id, chunks)` interleaves originals and replicas across
+  * microbatches — each batch carries fresh docs, exact dups, and
+  * near-dups of docs from OTHER batches, the adversarial arrival order
+  * for cross-batch state.
   *
   * == adversarial leg ==
   * The plain corpus makes near-dup recall easy — replica pairs sit far
@@ -213,19 +214,20 @@ object Stress {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
 
-    // landing zone: full-table dirs for the static sides + chunked
-    // single-file backlog for the stream sides
+    // landing zone: each table is a directory of `chunks` single-file
+    // pieces, the whole table for the static sides and a backlog of
+    // `chunks` microbatches for the stream sides
     val land = s"$outDir/stream"
+    fs.delete(new Path(land), true)
     def cutChunks(table: String, key: String): Unit = {
       val df = spark.read.parquet(s"$outDir/$table.parquet")
-      df.write.mode("overwrite").parquet(s"$land/$table.parquet")
       for (i <- 0 until chunks) {
         val tmp = s"$land/_tmp_${table}_$i"
         df.filter(pmod(col(key), lit(chunks)) === i)
           .coalesce(1).write.mode("overwrite").parquet(tmp)
         val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        val dest = new Path(s"$land/${table}_chunk_$i.parquet")
-        if (fs.exists(dest)) fs.delete(dest, false)
+        val dest = new Path(s"$land/$table.parquet/chunk_$i.parquet")
+        fs.mkdirs(dest.getParent)
         fs.rename(part, dest)
         fs.delete(new Path(tmp), true)
       }
@@ -233,6 +235,7 @@ object Stress {
     cutChunks("documents", "doc_id")
     cutChunks("embeddings", "vec_id")
     println(s"""{"stress":"landing","chunks":$chunks,"dir":"$land"}""")
+    val t = Tables(spark, land)
 
     // per-microbatch progress: one JSON line per trigger with wall ms and
     // total state-store rows, labeled with the drain under measurement
@@ -279,22 +282,16 @@ object Stress {
       val thresholdBefore = spark.conf.get(thresholdKey)
       spark.conf.set(thresholdKey, "1g")
       val vb = timed("incdedup_broadcast")(
-        streaming.Streams.drainIncrementalDedup(
-          spark, land, "documents_chunk_*.parquet"))
+        streaming.Streams.drainIncrementalDedup(t))
       spark.conf.set(thresholdKey, "-1")
       val vs = timed("incdedup_shuffle")(
-        streaming.Streams.drainIncrementalDedup(
-          spark, land, "documents_chunk_*.parquet"))
+        streaming.Streams.drainIncrementalDedup(t))
       spark.conf.set(thresholdKey, thresholdBefore)
       println(s"""{"stress":"incdedup_verdicts_identical","value":${vb == vs},""" +
         s""""pairs":${vb.size}}""")
 
-      timed("semdedup_stream")(
-        streaming.Streams.drainSemDedup(
-          spark, land, "embeddings_chunk_*.parquet"))
-      timed("ivf_ingest_stream")(
-        streaming.Streams.drainIvfIngest(
-          spark, land, "embeddings_chunk_*.parquet"))
+      timed("semdedup_stream")(streaming.Streams.drainSemDedup(t))
+      timed("ivf_ingest_stream")(streaming.Streams.drainIvfIngest(t))
     } finally {
       spark.streams.removeListener(listener)
       spark.conf.unset("spark.graft.drain.timeoutMs")

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
-/** Readers for the driver-provided parquet testdata (TESTDATA.md).
+/** Readers for the driver-provided parquet testdata (TESTDATA.md), batch
+  * and stream: the one reader of a table.
   *
   * All readers are plain parquet scans, so Catalyst pushes filters and
   * prunes columns down to the file scan — callers should select/filter
@@ -38,16 +40,19 @@ final case class Tables(spark: SparkSession, dir: String) {
   /** Events with `ts` as a naive (NTZ) timestamp at microsecond precision,
     * matching how DuckDB/pandas see the column, plus `ts_ns` — the exact
     * epoch-nanosecond long the engine uses for integer interval arithmetic.
-    *
-    * The driver has shipped two on-disk encodings for `ts`: INT64
+    */
+  def events: DataFrame = normalizeEvents(eventsRaw, TimestampNTZType)
+
+  /** The driver has shipped two on-disk encodings for `ts`: INT64
     * TIMESTAMP(NANOS) (read as a raw long via Engine.tune's nanosAsLong)
     * and plain TIMESTAMP(MICROS). Branch on the scanned type so both land
-    * on the same (ts: NTZ, ts_ns: long) contract.
+    * on the same (ts: `tsType`, ts_ns: long) contract. The batch reader
+    * asks for NTZ; a stream asks for TIMESTAMP, the only type
+    * `withWatermark` accepts.
     */
-  def events: DataFrame = {
-    val raw = eventsRaw
+  private def normalizeEvents(raw: DataFrame, tsType: DataType): DataFrame =
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw
           .withColumn("ts_ns", col("ts"))
           .withColumn(
@@ -55,16 +60,33 @@ final case class Tables(spark: SparkSession, dir: String) {
             // 2^53 exact range, so float division truncates to the wrong
             // microsecond
             "ts",
-            timestamp_micros(expr("ts_ns div 1000")).cast(TimestampNTZType))
+            timestamp_micros(expr("ts_ns div 1000")).cast(tsType))
       case _ =>
         // TIMESTAMP(MICROS): micros fit 2^53-free long math exactly; the
-        // NTZ->TZ cast is identity under the engine's pinned UTC session
+        // NTZ<->TZ casts are identity under the engine's pinned UTC session
         raw
-          .withColumn("ts", col("ts").cast(TimestampNTZType))
-          .withColumn(
-            "ts_ns",
-            unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)) * lit(1000L))
+          .withColumn("ts", col("ts").cast(tsType))
+          .withColumn("ts_ns", unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
     }
+
+  /** Table `name` as a file-source stream, declared with the batch frame's
+    * schema, so one footer read serves both (a stream needs its schema
+    * before it starts). Events come normalized as in [[events]], with `ts`
+    * a TIMESTAMP. A directory-form table streams its directory, one file
+    * per microbatch; a file source cannot point at a single file, so a
+    * one-file table (the driver's layout) streams its parent directory
+    * filtered to that file name.
+    */
+  def stream(name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val reader = spark.readStream
+      .schema(t(name).schema)
+      .option("maxFilesPerTrigger", "1")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val raw =
+      if (fs.getFileStatus(path).isDirectory) reader.parquet(path.toString)
+      else reader.option("pathGlobFilter", path.getName).parquet(dir)
+    if (name == "events") normalizeEvents(raw, TimestampType) else raw
   }
 
   /** Register every table as a temp view under its canonical name, making

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Tables
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,59 +45,6 @@ final case class GapState(lastTsUs: Long, lastEventId: Long, lastType: String)
   */
 object Streams {
 
-  /** On-disk schema of the driver's events parquet, parameterized on the
-    * `ts` encoding — the driver has shipped INT64 epoch-nanos (read as a
-    * raw long via Engine.tune's nanosAsLong) and TIMESTAMP(MICROS).
-    */
-  def eventFileSchema(tsType: org.apache.spark.sql.types.DataType): StructType =
-    StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-
-  /** File-based streaming source over the events parquet directory,
-    * normalized to the batch contract (ts: TimestampType, ts_ns: exact
-    * epoch-nanos long — see Tables.events). A streaming source needs a
-    * static schema, so the `ts` encoding is probed with one batch footer
-    * read before the stream is declared. In production this is the
-    * landing-zone directory a collector appends to; `maxFilesPerTrigger`
-    * bounds per-microbatch work.
-    */
-  def eventsStream(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    // the probed batch type is threaded into the declared stream schema
-    // VERBATIM — hardcoding e.g. TimestampNTZType here would make the
-    // vectorized reader reject a future TIMESTAMP(MICROS, adjusted-to-UTC)
-    // encoding that the batch reader (Tables.events) handles fine.
-    // Cached per (session, dir, glob): the probe is a file listing +
-    // parquet footer read, and a bench run declares ~33 drains over the
-    // same landing directory — schema metadata, not data (round 10; the
-    // same footer-cache economics as Tables.frameCache)
-    val tsType = tsTypeCache.getOrElseUpdate((spark, dir, globFilter),
-      spark.read.option("pathGlobFilter", globFilter)
-        .parquet(dir).schema.find(_.name == "ts").map(_.dataType)
-        .getOrElse(TimestampNTZType))
-    val src = spark.readStream
-      .schema(eventFileSchema(tsType))
-      .option("maxFilesPerTrigger", "8")
-      // lets a stream share a mixed landing directory (e.g. the testdata
-      // root, where events.parquet sits next to the other tables)
-      .option("pathGlobFilter", globFilter)
-      .parquet(dir)
-    if (tsType == LongType)
-      src
-        .withColumn("ts_ns", col("ts"))
-        // integer `div` (see Tables.events): double division loses precision
-        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-    else
-      src
-        .withColumn("ts", col("ts").cast(TimestampType))
-        .withColumn("ts_ns", unix_micros(col("ts")) * lit(1000L))
-  }
-
   /** Tumbling 1-hour windowed counts with a 2-hour watermark. The value sum
     * goes through an exact DECIMAL accumulator (same rule as the batch
     * twin's Transforms.dsum) so microbatch arrival order cannot shift ulps —
@@ -113,10 +62,6 @@ object Streams {
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("sum_value"))
 
-  private val tsTypeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, String), org.apache.spark.sql.types.DataType]
-
   private val drainSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** State-partition width for drains. State partitioning is sized to
@@ -130,8 +75,8 @@ object Streams {
     */
   private val StateWidth = "4"
 
-  /** Drain-mode execution of [[tumblingCounts]]: start the file-source
-    * stream over `dir`, process the whole backlog with
+  /** Drain-mode execution of [[tumblingCounts]]: start the events table's
+    * file-source stream ([[graft.Tables.stream]]), process the whole backlog with
     * `Trigger.AvailableNow`, and return the final windowed aggregate as a
     * batch frame read from the in-memory sink — an actual streaming
     * execution (microbatches, state store, sink commit) whose result is
@@ -145,16 +90,14 @@ object Streams {
     * 24/7 pipeline would run the same plan in append mode to a durable sink
     * instead.
     */
-  def drainTumblingCounts(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    drain(spark, tumblingCounts(eventsStream(spark, dir, globFilter)))
+  def drainTumblingCounts(t: Tables): DataFrame =
+    drain(t.spark, tumblingCounts(t.stream("events")))
 
   /** Sliding-window drain twin (1-hour windows every 15 minutes: each
     * event lands in exactly four windows).
     */
-  def drainSlidingCounts(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    drain(spark, slidingCounts(eventsStream(spark, dir, globFilter)))
+  def drainSlidingCounts(t: Tables): DataFrame =
+    drain(t.spark, slidingCounts(t.stream("events")))
 
   /** A `foreachBatch` sink for [[drain]]: `write` applies each microbatch,
     * `read` returns what landed. */
@@ -256,22 +199,21 @@ object Streams {
     * memory sink's are in [[drain]]) so the temporary warehouse is
     * deleted before this returns, on every path.
     */
-  def drainTumblingToWarehouse(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    graft.Engine.withTempDir(spark, "graft_stream_wh") { root =>
-      val wh = graft.load.Warehouse(spark, root)
-      val streamed = tumblingCounts(eventsStream(spark, dir, globFilter))
+  def drainTumblingToWarehouse(t: Tables): DataFrame = {
+    graft.Engine.withTempDir(t.spark, "graft_stream_wh") { root =>
+      val wh = graft.load.Warehouse(t.spark, root)
+      val streamed = tumblingCounts(t.stream("events"))
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
-      drain(spark, streamed, sink = Some(BatchSink(
+      drain(t.spark, streamed, sink = Some(BatchSink(
         (batch, _) =>
           wh.upsert(batch, "hourly_counts", Seq("window_start", "event_type")),
         () => {
           val landed = wh.table("hourly_counts")
           import scala.jdk.CollectionConverters.SeqHasAsJava
-          spark.createDataFrame(landed.collect().toSeq.asJava, landed.schema)
+          t.spark.createDataFrame(landed.collect().toSeq.asJava, landed.schema)
         })))
     }
   }
@@ -279,9 +221,8 @@ object Streams {
   /** Drain-mode execution of [[distinctUsersHourly]] (see
     * [[drainTumblingCounts]] for the drain semantics).
     */
-  def drainDistinctUsers(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    drain(spark, distinctUsersHourly(eventsStream(spark, dir, globFilter)))
+  def drainDistinctUsers(t: Tables): DataFrame =
+    drain(t.spark, distinctUsersHourly(t.stream("events")))
 
   /** Sliding windows (1-hour window, 15-minute slide): each event lands in
     * four overlapping windows.
@@ -350,11 +291,10 @@ object Streams {
     * job gradeable against SQL. A 24/7 pipeline would add an event-time
     * timeout to flush idle sessions instead.
     */
-  def drainSessionize(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainSessionize(t: Tables): DataFrame =
     drain(
-      spark,
-      sessionize(spark, eventsStream(spark, dir, globFilter)),
+      t.spark,
+      sessionize(t.spark, t.stream("events")),
       OutputMode.Append())
       .select(col("user_id"), col("session_id"), col("n_events"))
 
@@ -366,13 +306,12 @@ object Streams {
     * an AvailableNow drain yields exactly the batch join result, which is
     * what makes a stream-stream join gradeable against a SQL oracle.
     */
-  def drainClickViewJoin(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val clicks = eventsStream(spark, dir, globFilter)
+  def drainClickViewJoin(t: Tables): DataFrame = {
+    val clicks = t.stream("events")
       .filter(col("event_type") === "click")
-    val views = eventsStream(spark, dir, globFilter)
+    val views = t.stream("events")
       .filter(col("event_type") === "view")
-    drain(spark, clickViewJoin(clicks, views), OutputMode.Append())
+    drain(t.spark, clickViewJoin(clicks, views), OutputMode.Append())
   }
 
   /** Stream-static enrichment: the event stream joins a STATIC dimension
@@ -397,12 +336,8 @@ object Streams {
   /** Drain-mode execution of [[enrichedSegmentCounts]] over the events
     * landing path with the batch customer table as the static side.
     */
-  def drainEnrich(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val customer = spark.read.parquet(s"$dir/customer.parquet")
-    drain(spark,
-      enrichedSegmentCounts(eventsStream(spark, dir, globFilter), customer))
-  }
+  def drainEnrich(t: Tables): DataFrame =
+    drain(t.spark, enrichedSegmentCounts(t.stream("events"), t.customer))
 
   /** Streaming rate limiter: admit at most `maxPerMin` events per
     * (user, minute), the stateful-streaming twin of
@@ -450,11 +385,10 @@ object Streams {
     * for a drain; a production pipeline would aggregate per microbatch
     * into the warehouse instead).
     */
-  def drainRateLimit(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainRateLimit(t: Tables): DataFrame =
     drain(
-      spark,
-      rateLimit(spark, eventsStream(spark, dir, globFilter)),
+      t.spark,
+      rateLimit(t.spark, t.stream("events")),
       OutputMode.Append())
       .groupBy("event_type")
       .agg(
@@ -530,12 +464,11 @@ object Streams {
     * transition matrix with per-from probabilities is a batch aggregate
     * over the drained pairs, sharing `q_event_transitions`' oracle.
     */
-  def drainTransitions(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val src = eventsStream(spark, dir, globFilter)
+  def drainTransitions(t: Tables): DataFrame = {
+    val src = t.stream("events")
     val fromTotals = org.apache.spark.sql.expressions.Window
       .partitionBy("from_type")
-    drain(spark, transitions(spark, src), OutputMode.Append())
+    drain(t.spark, transitions(t.spark, src), OutputMode.Append())
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
       .withColumn("p",
@@ -560,35 +493,15 @@ object Streams {
     * ranked per language in a batch epilogue, sharing `q_top_terms`'
     * oracle — the batch twin is [[graft.ext.Sampling.qTopTerms]].
     */
-  def drainTopTerms(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
+  def drainTopTerms(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("df").desc, col("word"))
-    drain(spark, vocabCounts(docsStream(spark, dir, globFilter)))
+    drain(t.spark, vocabCounts(t.stream("documents")))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 5)
       .select("lang", "word", "df", "rnk")
       .orderBy("lang", "rnk")
   }
-
-  /** Raw on-disk schema of the driver's documents parquet. */
-  val docFileSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** File-based streaming source over the documents parquet — the
-    * landing zone an ingest collector appends new document files to.
-    */
-  def docsStream(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    spark.readStream
-      .schema(docFileSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", globFilter)
-      .parquet(dir)
 
   /** Streaming drain of the document quality funnel — the ingest-time
     * twin of [[graft.ext.TextAnalysis.qQualityFunnel]], sharing its
@@ -596,12 +509,9 @@ object Streams {
     * state is the per-source counter row (bounded by the source
     * dimension, not the backlog).
     */
-  def drainQualityFunnel(
-      spark: SparkSession, dir: String,
-      globFilter: String = "*"): DataFrame =
-    drain(spark,
-      graft.ext.TextAnalysis.qualityFunnelFrame(
-        docsStream(spark, dir, globFilter)))
+  def drainQualityFunnel(t: Tables): DataFrame =
+    drain(t.spark,
+      graft.ext.TextAnalysis.qualityFunnelFrame(t.stream("documents")))
 
   /** Streaming drain of the DoReMi mixture reweighting — the ingest-time
     * twin of [[graft.ext.Sampling.qMixDoremi]], sharing its oracle: the
@@ -614,12 +524,10 @@ object Streams {
     * bit-identical to the nightly batch recompute — the property that
     * lets a sampler consume them mid-ingest.
     */
-  def drainMixDoremi(
-      spark: SparkSession, dir: String,
-      globFilter: String = "*"): DataFrame =
+  def drainMixDoremi(t: Tables): DataFrame =
     graft.ext.Sampling.doremiEpilogue(
-      drain(spark,
-        docsStream(spark, dir, globFilter)
+      drain(t.spark,
+        t.stream("documents")
           .select(col("source"),
             explode(graft.ext.Dedup.words(col("text"))).as("word"))
           .groupBy("source", "word").agg(count(lit(1)).as("c"))))
@@ -634,12 +542,9 @@ object Streams {
     * which is exactly why the drained census can hash-match the batch
     * oracle.
     */
-  def drainHashSplit(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainHashSplit(t: Tables): DataFrame =
     graft.ext.Sampling.hashSplitEpilogue(
-      drain(spark,
-        graft.ext.Sampling.hashSplitCounts(
-          docsStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ext.Sampling.hashSplitCounts(t.stream("documents"))))
 
   /** Streaming near-duplicate detection at ingest: every arriving doc is
     * fingerprinted with the PORTABLE simhash
@@ -662,29 +567,10 @@ object Streams {
     * (n >= 2) with their keep-one representative, ordered in a batch
     * epilogue. `q_stream_neardedup`.
     */
-  def drainSimhashGroups(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    drain(spark, simhashGroups(docsStream(spark, dir, globFilter)))
+  def drainSimhashGroups(t: Tables): DataFrame =
+    drain(t.spark, simhashGroups(t.stream("documents")))
       .filter(col("n") >= 2)
       .orderBy("f")
-
-  /** Raw on-disk schema of the driver's orders parquet. */
-  val orderFileSchema: StructType = StructType(Seq(
-    StructField("o_orderkey", LongType),
-    StructField("o_custkey", LongType),
-    StructField("o_orderstatus", StringType),
-    StructField("o_totalprice", DoubleType),
-    StructField("o_orderdate", TimestampNTZType),
-    StructField("o_orderpriority", StringType)))
-
-  /** File-based streaming source over the orders parquet. */
-  def ordersStream(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    spark.readStream
-      .schema(orderFileSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", globFilter)
-      .parquet(dir)
 
   /** Streaming drain of the higher-moment profile — the ingest-time twin
     * of [[graft.ops.Stats.qMoments]], sharing its oracle: the four
@@ -694,11 +580,9 @@ object Streams {
     * epilogue over the drained k-row frame. The tail-shape monitor a
     * warehouse keeps current as orders land.
     */
-  def drainMoments(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainMoments(t: Tables): DataFrame =
     graft.ops.Stats.momentsEpilogue(
-      drain(spark,
-        graft.ops.Stats.momentSums(ordersStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ops.Stats.momentSums(t.stream("orders"))))
 
   /** Streaming drain of the per-dimension whitening stats — the
     * ingest-time twin of [[graft.ext.Similarity.qDimStats]], sharing its
@@ -708,12 +592,9 @@ object Streams {
     * a stateless epilogue. A feature store keeps normalization stats
     * current this way as embedding shards land.
     */
-  def drainDimStats(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainDimStats(t: Tables): DataFrame =
     graft.ext.Similarity.dimStatsEpilogue(
-      drain(spark,
-        graft.ext.Similarity.dimSums(
-          embeddingsStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ext.Similarity.dimSums(t.stream("embeddings"))))
 
   /** Streaming drain of the tail-risk summary — the ingest-time twin of
     * [[graft.ops.Stats.qVarCvar]], sharing its oracle: state is the
@@ -721,11 +602,9 @@ object Streams {
     * domain is the calendar), and the order-statistic pick + exact tail
     * mean run as a batch epilogue. VaR/CVaR kept current as orders land.
     */
-  def drainVarCvar(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainVarCvar(t: Tables): DataFrame =
     graft.ops.Stats.varCvarEpilogue(
-      drain(spark,
-        graft.ops.Stats.varCvarDaily(ordersStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ops.Stats.varCvarDaily(t.stream("orders"))))
 
   /** Streaming drain of the Holt–Winters forecaster — the ingest-time
     * twin of [[graft.ops.Events.qHoltWinters]], sharing its oracle: state
@@ -735,11 +614,9 @@ object Streams {
     * epilogue over the drained frame. The seasonal forecast an ops
     * dashboard keeps current as events land.
     */
-  def drainHoltWinters(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainHoltWinters(t: Tables): DataFrame =
     graft.ops.Events.hwEpilogue(
-      drain(spark,
-        graft.ops.Events.hwDaily(eventsStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ops.Events.hwDaily(t.stream("events"))))
 
   /** Streaming drain of the Brier/Murphy forecast audit — the ingest-time
     * twin of [[graft.ext.Classifier.qBrierDecomp]], sharing its oracle:
@@ -749,11 +626,9 @@ object Streams {
     * batch epilogue. The calibration monitor a labeling pipeline keeps
     * current as scored documents land.
     */
-  def drainBrier(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainBrier(t: Tables): DataFrame =
     graft.ext.Classifier.brierEpilogue(
-      drain(spark,
-        graft.ext.Classifier.brierBins(docsStream(spark, dir, globFilter))))
+      drain(t.spark, graft.ext.Classifier.brierBins(t.stream("documents"))))
 
   /** Streaming drain of the kernel-MMD drift monitor — the ingest-time
     * twin of [[graft.ext.TextAnalysis.qMmdDrift]], sharing its oracle:
@@ -762,28 +637,9 @@ object Streams {
     * epilogue over the drained frame. Distribution drift per source,
     * kept current at ingest.
     */
-  def drainMmdDrift(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainMmdDrift(t: Tables): DataFrame =
     graft.ext.TextAnalysis.mmdEpilogue(
-      drain(spark,
-        graft.ext.TextAnalysis.mmdHist(docsStream(spark, dir, globFilter))))
-
-  /** Raw on-disk schema of the driver's customer parquet. */
-  val customerFileSchema: StructType = StructType(Seq(
-    StructField("c_custkey", LongType),
-    StructField("c_name", StringType),
-    StructField("c_nationkey", IntegerType),
-    StructField("c_acctbal", DoubleType),
-    StructField("c_mktsegment", StringType)))
-
-  /** File-based streaming source over the customer parquet. */
-  def customersStream(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    spark.readStream
-      .schema(customerFileSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", globFilter)
-      .parquet(dir)
+      drain(t.spark, graft.ext.TextAnalysis.mmdHist(t.stream("documents"))))
 
   /** Continuous privacy monitoring at ingest: the k-anonymity /
     * l-diversity audit ([[graft.ext.Sampling.qKAnonymity]]) kept current
@@ -804,10 +660,8 @@ object Streams {
   /** Drain-mode execution of [[qiClasses]] + the batch per-k epilogue;
     * shares `q_k_anonymity`'s oracle. `q_stream_kanonymity`.
     */
-  def drainKAnonymity(
-      spark: SparkSession, dir: String, globFilter: String = "*",
-      ks: Seq[Int] = Seq(2, 5, 10, 25)): DataFrame =
-    drain(spark, qiClasses(customersStream(spark, dir, globFilter)))
+  def drainKAnonymity(t: Tables, ks: Seq[Int] = Seq(2, 5, 10, 25)): DataFrame =
+    drain(t.spark, qiClasses(t.stream("customer")))
       .select(col("csize"), size(col("lset")).cast("long").as("ldiv"),
         explode(typedLit(ks.map(_.toLong))).as("k"))
       .groupBy("k")
@@ -843,11 +697,9 @@ object Streams {
   /** Drain-mode execution of [[lengthHistogram]] + the batch CDF-area
     * epilogue; shares `q_emd_drift`'s oracle. `q_stream_emd`.
     */
-  def drainEmdDrift(
-      spark: SparkSession, dir: String, globFilter: String = "*",
-      binWidth: Int = 25): DataFrame = {
-    val counts = drain(spark,
-      lengthHistogram(docsStream(spark, dir, globFilter), binWidth))
+  def drainEmdDrift(t: Tables, binWidth: Int = 25): DataFrame = {
+    val counts =
+      drain(t.spark, lengthHistogram(t.stream("documents"), binWidth))
     graft.ext.TextAnalysis.emdFromHistogram(counts, binWidth)
   }
 
@@ -871,10 +723,8 @@ object Streams {
     * 7-day RANGE window runs on ~30 rows regardless of input scale).
     * Shares `q_slo_burn`'s oracle. `q_stream_slo`.
     */
-  def drainSloBurn(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val daily = drain(spark,
-      dailyErrorCounts(eventsStream(spark, dir, globFilter)))
+  def drainSloBurn(t: Tables): DataFrame = {
+    val daily = drain(t.spark, dailyErrorCounts(t.stream("events")))
     val w7 = Window.orderBy("day_idx").rangeBetween(-6, 0)
     daily
       .withColumn("day_idx",
@@ -890,23 +740,6 @@ object Streams {
           col("tot7").cast("double"), 6).as("burn_7d"))
       .orderBy("day")
   }
-
-  /** Raw on-disk schema of the driver's embeddings parquet. */
-  val embFileSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
-  /** File-based streaming source over the embeddings parquet — the
-    * landing zone an embedding service appends vector files to.
-    */
-  def embeddingsStream(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
-    spark.readStream
-      .schema(embFileSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", globFilter)
-      .parquet(dir)
 
   /** Streaming vector-search ingest: as vectors arrive, maintain the
     * exact-cosine top-k per registered query — the continuously-updated
@@ -947,10 +780,9 @@ object Streams {
   /** Drain-mode execution of [[streamingKnn]] with the query registry =
     * every 200th vector (the batch twin's query set). `q_stream_knn`.
     */
-  def drainKnn(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
+  def drainKnn(t: Tables): DataFrame = {
     import graft.ext.Similarity
-    val queries = spark.read.parquet(s"$dir/embeddings.parquet")
+    val queries = t.embeddings
       .filter(pmod(col("vec_id"), lit(200)) === 0)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("qvec"))
@@ -958,7 +790,7 @@ object Streams {
         Similarity.portableBandStructs(
           Similarity.microUnits(col("qvec")), bands = 10, bitsPerBand = 3,
           dim = 64))
-    drain(spark, streamingKnn(embeddingsStream(spark, dir, globFilter), queries))
+    drain(t.spark, streamingKnn(t.stream("embeddings"), queries))
       .select(col("qid"), posexplode(col("top")).as(Seq("i", "item")))
       .select(
         col("qid"),
@@ -980,20 +812,18 @@ object Streams {
     * bit-identical to the batch formulation and shares one oracle.
     * `q_stream_semdedup`.
     */
-  def drainSemDedup(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
+  def drainSemDedup(t: Tables): DataFrame = {
     import graft.ext.Similarity
-    val t = graft.Tables(spark, dir)
     // already checkpointed by the builder (which frees its own decision
     // intermediates); freed below once the drain has consumed it
     val keepers = Similarity.semDedupKeeperIndex(t)
     val cents = Similarity.ivfCentroidsCached(t)
-    val arrivals = embeddingsStream(spark, dir, globFilter)
+    val arrivals = t.stream("embeddings")
       .filter(pmod(col("vec_id"), lit(2)) === 1)
       .select(col("vec_id"),
         Similarity.microUnits(col("embedding").cast("array<double>"))
           .cast("array<double>").as("mu"))
-    val out = drain(spark,
+    val out = drain(t.spark,
       Similarity.semDedupServe(arrivals, keepers, cents),
       OutputMode.Append())
       .orderBy("vec_id")
@@ -1010,16 +840,14 @@ object Streams {
     * arrival-order-free by construction (exact-decimal sums), so the
     * drain is bit-identical to the batch report.
     */
-  def drainIvfIngest(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
+  def drainIvfIngest(t: Tables): DataFrame = {
     import graft.ext.Similarity
-    val t = graft.Tables(spark, dir)
     val cents = Similarity.ivfCentroidsCached(t)
-    val arrivals = embeddingsStream(spark, dir, globFilter)
+    val arrivals = t.stream("embeddings")
       .select(col("vec_id"),
         Similarity.microUnits(col("embedding").cast("array<double>"))
           .cast("array<double>").as("mu"))
-    drain(spark, Similarity.ivfIngestReport(arrivals, cents))
+    drain(t.spark, Similarity.ivfIngestReport(arrivals, cents))
       .orderBy("cell")
   }
 
@@ -1116,32 +944,26 @@ object Streams {
     * landing zone. Shares `q_contamination`'s oracle.
     * `q_stream_contamination`.
     */
-  def drainContamination(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val benchGrams = graft.Engine.spread(
-        spark.read.parquet(s"$dir/documents.parquet"))
+  def drainContamination(t: Tables): DataFrame = {
+    val benchGrams = graft.Engine.spread(t.documents)
       .filter(pmod(col("doc_id"), lit(97)) === 0)
       .select(explode(
         array_distinct(graft.ext.Dedup.shingles(col("text"), 4))).as("gram"))
       .distinct()
-    drain(spark,
-      contaminationProbe(docsStream(spark, dir, globFilter), benchGrams))
+    drain(t.spark, contaminationProbe(t.stream("documents"), benchGrams))
       .orderBy("doc_id")
   }
 
   /** Drain-mode execution of [[incrementalDedup]] over the documents
     * landing zone (AvailableNow, memory sink, complete mode).
     */
-  def drainIncrementalDedup(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
-    val corpus = spark.read.parquet(s"$dir/documents.parquet")
+  def drainIncrementalDedup(t: Tables): DataFrame = {
     // persist the posting frame for the drain's lifetime: every microbatch
     // re-executes the static side, and without the cache that is a full
     // corpus re-scan + re-explode per batch (see [[corpusGramIndex]])
-    val index = corpusGramIndex(corpus)
+    val index = corpusGramIndex(t.documents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try drain(spark,
-      incrementalDedupWithIndex(docsStream(spark, dir, globFilter), index))
+    try drain(t.spark, incrementalDedupWithIndex(t.stream("documents"), index))
     finally index.unpersist(false)
   }
 
@@ -1182,10 +1004,9 @@ object Streams {
     * as a batch epilogue over the emitted intervals. Shares
     * `q_dwell_time`'s oracle. `q_stream_dwell`.
     */
-  def drainDwellTime(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainDwellTime(t: Tables): DataFrame =
     graft.ops.Events.dwellFromGaps(
-      drain(spark, gapEmitter(spark, eventsStream(spark, dir, globFilter)),
+      drain(t.spark, gapEmitter(t.spark, t.stream("events")),
         OutputMode.Append())
         .select(col("from_type").as("event_type"), col("gap_us").as("gap")))
 
@@ -1193,10 +1014,9 @@ object Streams {
     * moments as a batch epilogue (same exact-integer moment math as the
     * batch twin). Shares `q_burstiness`' oracle. `q_stream_burstiness`.
     */
-  def drainBurstiness(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainBurstiness(t: Tables): DataFrame =
     graft.ops.Events.burstinessFromGaps(
-      drain(spark, gapEmitter(spark, eventsStream(spark, dir, globFilter)),
+      drain(t.spark, gapEmitter(t.spark, t.stream("events")),
         OutputMode.Append())
         .select(col("user_id"), col("gap_us").as("gap")),
       minGaps = 20)
@@ -1213,10 +1033,9 @@ object Streams {
     graft.ops.Events.srmBucketCounts(
       events.select("user_id").dropDuplicates("user_id"))
 
-  def drainSrm(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame =
+  def drainSrm(t: Tables): DataFrame =
     graft.ops.Events.srmFromCounts(
-      drain(spark, srmBuckets(eventsStream(spark, dir, globFilter))), spark)
+      drain(t.spark, srmBuckets(t.stream("events"))), t.spark)
 
   /** Streaming Benford audit: running first-digit counts of the event
     * values (amounts >= 1 — a sub-unit amount has no leading digit in the
@@ -1234,10 +1053,9 @@ object Streams {
       .groupBy("digit")
       .agg(count(lit(1)).as("n"))
 
-  def drainBenford(
-      spark: SparkSession, dir: String, globFilter: String = "*"): DataFrame = {
+  def drainBenford(t: Tables): DataFrame = {
     val w = Window.partitionBy()
-    drain(spark, digitCounts(eventsStream(spark, dir, globFilter)))
+    drain(t.spark, digitCounts(t.stream("events")))
       .withColumn("freq",
         col("n").cast("double") / sum("n").over(w).cast("double"))
       .withColumn("expected",

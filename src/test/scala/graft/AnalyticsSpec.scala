@@ -360,7 +360,7 @@ class AnalyticsSpec extends SparkSuite {
 
   test("streaming distinct users per hour matches the batch COUNT(DISTINCT)") {
     val streamed = graft.streaming.Streams
-      .drainDistinctUsers(spark, sfDir, "events.parquet")
+      .drainDistinctUsers(Tables(spark, sfDir))
       .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("n_users"))
       .as[(String, Long)].collect().toSet

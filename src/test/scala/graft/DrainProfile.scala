@@ -4,13 +4,14 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Ad-hoc profiling harness for streaming-drain latency (not a test):
   * `Test/runMain graft.DrainProfile [sfDir]` prints where a drain's
-  * wall-clock goes — source probe, query start, per-batch durations —
+  * wall-clock goes — query start and per-batch durations —
   * so per-drain overhead work is measured, not guessed.
   */
 object DrainProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Engine.local(32)
+    val tables = Tables(spark, dir)
     spark.sparkContext.setLogLevel("ERROR")
     def t(n: String)(f: => Any): Unit = {
       val t0 = System.nanoTime(); f
@@ -18,22 +19,18 @@ object DrainProfile {
     }
     // warm one drain so JIT/codegen cost is excluded from the breakdown
     t("tumbling_cold") {
-      streaming.Streams.drainTumblingCounts(spark, dir, "events.parquet").count()
+      streaming.Streams.drainTumblingCounts(tables).count()
     }
     t("tumbling_warm") {
-      streaming.Streams.drainTumblingCounts(spark, dir, "events.parquet").count()
+      streaming.Streams.drainTumblingCounts(tables).count()
     }
     t("sliding") {
-      streaming.Streams.drainSlidingCounts(spark, dir, "events.parquet").count()
+      streaming.Streams.drainSlidingCounts(tables).count()
     }
     t("distinct_users") {
-      streaming.Streams.drainDistinctUsers(spark, dir, "events.parquet").count()
+      streaming.Streams.drainDistinctUsers(tables).count()
     }
-    t("probe_only") {
-      spark.read.option("pathGlobFilter", "events.parquet").parquet(dir).schema
-    }
-    val s = streaming.Streams.eventsStream(spark, dir, "events.parquet")
-    val agg = streaming.Streams.tumblingCounts(s)
+    val agg = streaming.Streams.tumblingCounts(tables.stream("events"))
     val q0 = System.nanoTime()
     val q = agg.writeStream.outputMode("complete")
       .trigger(Trigger.AvailableNow())
@@ -51,12 +48,7 @@ object DrainProfile {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       val t0 = System.nanoTime()
-      val src = spark.readStream
-        .schema(spark.read.option("pathGlobFilter", "events.parquet")
-          .parquet(dir).schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val mq = src.groupBy(col("event_type")).count()
+      val mq = tables.stream("events").groupBy(col("event_type")).count()
         .writeStream.outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .format("memory").queryName(s"min_$tag").start()

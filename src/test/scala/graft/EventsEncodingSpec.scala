@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** The driver has shipped `events.ts` in two on-disk encodings — INT64
   * epoch-nanos and TIMESTAMP(MICROS) — and regenerated the testdata
   * between rounds. These tests pin the adaptive readers
-  * ([[Tables.events]], [[graft.streaming.Streams.eventsStream]]) to the
+  * ([[Tables.events]], [[Tables.stream]]) to the
   * contract that BOTH encodings land on identical (ts, ts_ns) values, so
   * the next flip cannot silently break every events-touching query
   * again.
@@ -27,8 +27,8 @@ class EventsEncodingSpec extends SparkSuite {
     val base = rowsUs.toDF(
       "event_id", "ts_us", "user_id", "event_type", "value", "props")
     // the driver ships events.parquet as a single FILE (not a directory):
-    // write to a staging dir, then move the part file into place so the
-    // streaming source's pathGlobFilter probe sees the same layout
+    // write to a staging dir, then move the part file into place so
+    // Tables.stream reads the same one-file layout
     def writeFile(df: org.apache.spark.sql.DataFrame, dest: String): Unit = {
       val stage = s"$root/.stage_${dest.hashCode.toHexString}" +
         s"_${System.nanoTime()}"
@@ -73,7 +73,7 @@ class EventsEncodingSpec extends SparkSuite {
     val (usDir, nsDir) = writeDirs()
     def counts(dir: String): Seq[Row] =
       graft.streaming.Streams
-        .drainTumblingCounts(spark, dir, "events.parquet")
+        .drainTumblingCounts(Tables(spark, dir))
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
@@ -84,5 +84,34 @@ class EventsEncodingSpec extends SparkSuite {
     assert(us == ns, s"streamed windows diverge:\n$us\nvs\n$ns")
     // the 4 events span two hourly windows with three event types
     assert(us.map(_.getLong(2)).sum == 4L)
+  }
+
+  test("stream(events) lands every event on the batch reader's (ts, ts_ns)") {
+    val (usDir, nsDir) = writeDirs()
+    def norm(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+      df.select(col("event_id"),
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
+          col("ts_ns"))
+        .orderBy("event_id").collect().toSeq
+    Seq(usDir -> "graft_enc_us", nsDir -> "graft_enc_ns").foreach { case (dir, sink) =>
+      val t = Tables(spark, dir)
+      val stream = t.stream("events")
+      // withWatermark takes only TIMESTAMP; the batch reader keeps NTZ
+      assert(stream.schema("ts").dataType == TimestampType)
+      assert(t.events.schema("ts").dataType == TimestampNTZType)
+      val q = stream.writeStream.format("memory").queryName(sink)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try {
+        assert(q.awaitTermination(120000), s"$sink did not terminate")
+        q.exception.foreach(e => throw e)
+        val streamed = norm(spark.table(sink))
+        val batch = norm(t.events)
+        assert(streamed.size == rowsUs.size)
+        assert(streamed == batch, s"$sink diverges:\n$streamed\nvs\n$batch")
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView(sink)
+      }
+    }
   }
 }

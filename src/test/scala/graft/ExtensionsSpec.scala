@@ -131,6 +131,24 @@ class ExtensionsSpec extends SparkSuite {
     assert(flagged.isEmpty, flagged)
   }
 
+  test("Tables is the one reader of a table stream, and streaming/ reads no parquet") {
+    // one reader per table, batch or stream: a drain takes its stream and
+    // its static side from Tables, so no second schema, footer probe or
+    // file filter for a table can come back
+    val sources = mainSources()
+    def containing(s: String): Set[String] =
+      sources.collect { case (f, text) if text.contains(s) => f.toString }.toSet
+    assert(containing("readStream") == Set("src/main/scala/graft/Tables.scala"))
+    // the other glob is the xlsx source's binaryFile listing, not a table
+    assert(containing("pathGlobFilter") == Set(
+      "src/main/scala/graft/Tables.scala", "src/main/scala/graft/sources/Xlsx.scala"))
+    val streamingReads = sources.collect {
+      case (f, text) if f.toString.contains("/streaming/") && text.contains("read.parquet") =>
+        f.toString
+    }
+    assert(streamingReads.isEmpty, streamingReads)
+  }
+
   test("only plans/shim.scala touches experimental strategies and rules") {
     // GraftExtensions is the one install list; the shim is the one place
     // that applies it to a session built without it

@@ -70,13 +70,14 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("file-source streaming over the real events parquet matches the batch counts") {
-    // stage the single parquet file as a landing-zone directory
+    // stage the single parquet file as a directory-form events table
     val dir = tempDir("graft_stream_in")
+    java.nio.file.Files.createDirectory(dir.resolve("events.parquet"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("part-000.parquet"))
+      dir.resolve("events.parquet/part-000.parquet"))
 
-    val stream = Streams.eventsStream(spark, dir.toString)
+    val stream = Tables(spark, dir.toString).stream("events")
     assert(stream.isStreaming)
     val q = Streams.tumblingCounts(stream)
       .writeStream.outputMode("complete")
@@ -192,10 +193,11 @@ class StreamsSpec extends SparkSuite {
     // the scheduled-ingestion mode: process everything currently in the
     // landing zone, then stop — no long-running query to babysit
     val in = tempDir("graft_an_in")
+    java.nio.file.Files.createDirectory(in.resolve("events.parquet"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      in.resolve("part-000.parquet"))
-    val q = Streams.tumblingCounts(Streams.eventsStream(spark, in.toString))
+      in.resolve("events.parquet/part-000.parquet"))
+    val q = Streams.tumblingCounts(Tables(spark, in.toString).stream("events"))
       .writeStream.outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .format("memory").queryName("available_now_out").start()
@@ -357,7 +359,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("drained streaming rate limiter equals the batch admission stats") {
-    val streamed = Streams.drainRateLimit(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainRateLimit(Tables(spark, sfDir))
       .collect().toSeq
     val batch = graft.ops.Events.qRateLimit(Tables(spark, sfDir))
       .collect().toSeq
@@ -365,7 +367,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("drained streaming vocabulary tracker equals the batch top terms") {
-    val streamed = Streams.drainTopTerms(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainTopTerms(Tables(spark, sfDir))
       .collect().toSeq
     val batch = graft.ext.Sampling.qTopTerms(Tables(spark, sfDir))
       .collect().toSeq
@@ -373,7 +375,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("drained streaming transition counter equals the batch Markov matrix") {
-    val streamed = Streams.drainTransitions(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainTransitions(Tables(spark, sfDir))
       .collect().toSeq
     val batch = graft.ops.Events.qEventTransitions(Tables(spark, sfDir))
       .collect().toSeq
@@ -382,7 +384,7 @@ class StreamsSpec extends SparkSuite {
 
   test("drained stream-static enrichment equals the batch join") {
     import org.apache.spark.sql.functions._
-    val streamed = Streams.drainEnrich(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainEnrich(Tables(spark, sfDir))
       .orderBy("segment").collect().toSeq
     val t = Tables(spark, sfDir)
     val batch = t.events
@@ -410,7 +412,7 @@ class StreamsSpec extends SparkSuite {
 
   test("streaming contamination drain equals the batch twin row-for-row") {
     val streamed = Streams
-      .drainContamination(spark, sfDir, "documents.parquet")
+      .drainContamination(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Dedup.qContamination(tables).collect().toSeq
     assert(streamed == batch)
@@ -419,7 +421,7 @@ class StreamsSpec extends SparkSuite {
 
   test("streaming incremental dedup drain equals the batch twin row-for-row") {
     val streamed = Streams
-      .drainIncrementalDedup(spark, sfDir, "documents.parquet")
+      .drainIncrementalDedup(Tables(spark, sfDir))
       .orderBy("id_new", "id_old").collect().toSeq
     val batch = ext.Dedup.qDedupIncremental(tables).collect().toSeq
     assert(streamed == batch)
@@ -434,11 +436,11 @@ class StreamsSpec extends SparkSuite {
     // results are provider-independent for a windowed agg, a custom
     // flatMapGroupsWithState, and the gram-keyed incdedup drain.
     def all3(): (Seq[String], Seq[String], Seq[String]) = (
-      Streams.drainTumblingCounts(spark, sfDir, "events.parquet")
+      Streams.drainTumblingCounts(Tables(spark, sfDir))
         .collect().map(_.toString).sorted.toSeq,
-      Streams.drainSessionize(spark, sfDir, "events.parquet")
+      Streams.drainSessionize(Tables(spark, sfDir))
         .collect().map(_.toString).sorted.toSeq,
-      Streams.drainIncrementalDedup(spark, sfDir, "documents.parquet")
+      Streams.drainIncrementalDedup(Tables(spark, sfDir))
         .collect().map(_.toString).sorted.toSeq)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     // getOption surfaces the registered DEFAULT for this conf, so restore
@@ -476,7 +478,7 @@ class StreamsSpec extends SparkSuite {
     spark.conf.set(key, "7")
     spark.streams.addListener(listener)
     try {
-      assert(Streams.drainTumblingCounts(spark, sfDir, "events.parquet")
+      assert(Streams.drainTumblingCounts(Tables(spark, sfDir))
         .collect().nonEmpty)
       assert(spark.conf.get(key) == "7")
       // listener events are delivered asynchronously; progress events
@@ -495,7 +497,7 @@ class StreamsSpec extends SparkSuite {
     spark.conf.set("spark.graft.drain.timeoutMs", "1")
     val e =
       try intercept[IllegalArgumentException] {
-        Streams.drainTumblingToWarehouse(spark, sfDir, "events.parquet")
+        Streams.drainTumblingToWarehouse(Tables(spark, sfDir))
       }
       finally spark.conf.unset("spark.graft.drain.timeoutMs")
     assert(e.getMessage.contains("did not terminate"), e.getMessage)
@@ -505,7 +507,7 @@ class StreamsSpec extends SparkSuite {
 
   test("streaming near-dedup drain equals a batch recompute of the same groups") {
     val streamed = Streams
-      .drainSimhashGroups(spark, sfDir, "documents.parquet")
+      .drainSimhashGroups(Tables(spark, sfDir))
       .collect().toSeq
     val batch = Streams.simhashGroups(tables.documents)
       .filter(org.apache.spark.sql.functions.col("n") >= 2)
@@ -517,7 +519,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming vector-search drain equals the batch portable-LSH knn") {
-    val streamed = Streams.drainKnn(spark, sfDir, "embeddings.parquet")
+    val streamed = Streams.drainKnn(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Similarity.qKnnLshPortable(tables).collect().toSeq
     assert(streamed == batch)
@@ -525,7 +527,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming IVF ingest drain equals the batch maintenance report") {
-    val streamed = Streams.drainIvfIngest(spark, sfDir, "embeddings.parquet")
+    val streamed = Streams.drainIvfIngest(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Similarity.qIvfIngest(tables).collect().toSeq
     assert(streamed == batch)
@@ -534,7 +536,7 @@ class StreamsSpec extends SparkSuite {
 
   test("streaming semantic-dedup drain equals the batch serving filter") {
     import org.apache.spark.sql.functions._
-    val streamed = Streams.drainSemDedup(spark, sfDir, "embeddings.parquet")
+    val streamed = Streams.drainSemDedup(Tables(spark, sfDir))
       .collect().toSeq
     // batch formulation: same keeper index, same serve function, the odd
     // half as a plain batch frame — verdicts must match row-for-row
@@ -558,7 +560,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming EMD drift drain equals the batch Wasserstein audit") {
-    val streamed = Streams.drainEmdDrift(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainEmdDrift(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.TextAnalysis.qEmdDrift(tables).collect().toSeq
     assert(streamed == batch)
@@ -566,7 +568,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming SLO burn drain equals the batch monitor row-for-row") {
-    val streamed = Streams.drainSloBurn(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainSloBurn(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Events.qSloBurn(tables).collect().toSeq
     assert(streamed == batch)
@@ -574,7 +576,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming k-anonymity drain equals the batch privacy audit") {
-    val streamed = Streams.drainKAnonymity(spark, sfDir, "customer.parquet")
+    val streamed = Streams.drainKAnonymity(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Sampling.qKAnonymity(tables).collect().toSeq
     assert(streamed == batch)
@@ -582,7 +584,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming dwell drain equals the batch per-type dwell rollup") {
-    val streamed = Streams.drainDwellTime(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainDwellTime(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Events.qDwellTime(tables).collect().toSeq
     assert(streamed == batch)
@@ -590,7 +592,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming burstiness drain equals the batch gauge row-for-row") {
-    val streamed = Streams.drainBurstiness(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainBurstiness(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Events.qBurstiness(tables).collect().toSeq
     assert(streamed == batch)
@@ -598,7 +600,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming srm drain equals the batch assignment gate row-for-row") {
-    val streamed = Streams.drainSrm(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainSrm(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Events.qAbSrm(tables).collect().toSeq
     assert(streamed == batch)
@@ -606,7 +608,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming hash-split drain equals the batch split census") {
-    val streamed = Streams.drainHashSplit(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainHashSplit(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Sampling.qHashSplit(tables).collect().toSeq
     assert(streamed == batch)
@@ -614,7 +616,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming doremi drain equals the batch mixture weights") {
-    val streamed = Streams.drainMixDoremi(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainMixDoremi(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Sampling.qMixDoremi(tables).collect().toSeq
     assert(streamed == batch)
@@ -625,7 +627,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming moments drain equals the batch tail-shape profile") {
-    val streamed = Streams.drainMoments(spark, sfDir, "orders.parquet")
+    val streamed = Streams.drainMoments(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Stats.qMoments(tables).collect().toSeq
     assert(streamed == batch)
@@ -633,7 +635,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming dim-stats drain equals the batch whitening frame") {
-    val streamed = Streams.drainDimStats(spark, sfDir, "embeddings.parquet")
+    val streamed = Streams.drainDimStats(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Similarity.qDimStats(tables).collect().toSeq
     assert(streamed == batch)
@@ -641,7 +643,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming brier drain equals the batch Murphy decomposition") {
-    val streamed = Streams.drainBrier(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainBrier(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.Classifier.qBrierDecomp(tables).collect().toSeq
     assert(streamed == batch)
@@ -649,7 +651,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming mmd drain equals the batch kernel-drift frame") {
-    val streamed = Streams.drainMmdDrift(spark, sfDir, "documents.parquet")
+    val streamed = Streams.drainMmdDrift(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ext.TextAnalysis.qMmdDrift(tables).collect().toSeq
     assert(streamed == batch)
@@ -657,7 +659,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming var/cvar drain equals the batch tail-risk summary") {
-    val streamed = Streams.drainVarCvar(spark, sfDir, "orders.parquet")
+    val streamed = Streams.drainVarCvar(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Stats.qVarCvar(tables).collect().toSeq
     assert(streamed == batch)
@@ -665,7 +667,7 @@ class StreamsSpec extends SparkSuite {
   }
 
   test("streaming holt-winters drain equals the batch seasonal forecast") {
-    val streamed = Streams.drainHoltWinters(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainHoltWinters(Tables(spark, sfDir))
       .collect().toSeq
     val batch = ops.Events.qHoltWinters(tables).collect().toSeq
     assert(streamed == batch)
@@ -674,7 +676,7 @@ class StreamsSpec extends SparkSuite {
 
   test("streaming benford drain: digit counts match a batch recompute") {
     import org.apache.spark.sql.functions._
-    val streamed = Streams.drainBenford(spark, sfDir, "events.parquet")
+    val streamed = Streams.drainBenford(Tables(spark, sfDir))
       .collect().toSeq
     val batch = tables.events.filter(col("value") >= 1)
       .select(substring(col("value")
@@ -690,6 +692,22 @@ class StreamsSpec extends SparkSuite {
       // Benford expectation for digit d is log10(1 + 1/d)
       val d = r.getString(0).toInt
       assert(math.abs(r.getDouble(3) - math.log10(1.0 + 1.0 / d)) < 1e-6)
+    }
+  }
+
+  test("every registry drain returns a batch frame and leaves no stream or sink view") {
+    val drains = SparkEntry.queries.keys.filter(_.startsWith("q_stream_")).toSeq.sorted
+    assert(drains.size == 33, drains)
+    def sinkViews(): Seq[String] =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_drain_")).toSeq
+    drains.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      assert(!df.isStreaming, s"$name returned a streaming frame")
+      df.collect()
+      assert(spark.streams.active.isEmpty,
+        s"$name left streams running: ${spark.streams.active.map(_.name).toSeq}")
+      assert(sinkViews().isEmpty, s"$name left sink views: ${sinkViews()}")
     }
   }
 
@@ -731,9 +749,9 @@ class StreamsSpec extends SparkSuite {
     ctx.getConfiguration.getRootLogger.addAppender(app, Level.ALL, null)
     ctx.updateLoggers()
     try {
-      Streams.drainTumblingCounts(spark, sfDir, "events.parquet").count()
-      Streams.drainDistinctUsers(spark, sfDir, "events.parquet").count()
-      Streams.drainTumblingToWarehouse(spark, sfDir, "events.parquet").count()
+      Streams.drainTumblingCounts(Tables(spark, sfDir)).count()
+      Streams.drainDistinctUsers(Tables(spark, sfDir)).count()
+      Streams.drainTumblingToWarehouse(Tables(spark, sfDir)).count()
       // give any lagging stream-thread cleanup a moment to surface
       Thread.sleep(500)
     } finally {
